@@ -1,8 +1,4 @@
-"""Persisted BM25 postings index — the FIFTH index lifecycle beside
-the MinHash text index (operators/incremental.py), the IVF embedding
-index (operators/ivf_lifecycle.py), the Hamming media index
-(operators/hamming_index.py), and the winnowing fingerprint index
-(operators/winnow_index.py): the corpus's (term, doc, tf, dl)
+"""Persisted BM25 postings index: the corpus's (term, doc, tf, dl)
 postings land in a parquet layout partitioned by
 ``pb = pmod(xxhash64(term), parts)``, and a query batch's BM25 top-k
 becomes a partition-filtered posting-list intersection instead of the
@@ -24,21 +20,29 @@ Exactness under appends — the property the lifecycle tests pin:
   as `bm25_topk` — agreement is test-pinned, and `bm25_topk`'s own
   DuckDB oracle transitively covers the scoring math).
 
-Layout/lifecycle protocol shared with the other four indexes:
-label-sliced appends (delete-then-append idempotency) and the stored
-one-row geometry meta so index and queries can never tokenize with
-different parameters.
+Layout, label replace and compaction of ``postings`` (partitioned by
+(bl, pb)) are the shared labeled-index lifecycle
+(operators/labeled_index.py). ``stats`` is this family's own: one
+(bl, n_docs, s_dl) row per label in a flat table, rewritten whole on
+every append through the crash-safe swap, whose recovery preamble
+runs before every stats read (append and probe).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
+from firefox_public_data_report_etl_spark.operators.labeled_index import (
+    LabeledIndex,
+    read_meta,
+    recover_table,
+    swap_table,
 )
 
 BM25_BUCKET_PARTS = 32  # same fan rationale as the other indexes
+BM25_INDEX = LabeledIndex({"postings": ("pb",)})
+META_SCHEMA = "id_col string, text_col string, bucket_parts int"
+STATS_SCHEMA = "bl long, n_docs long, s_dl long"
 
 
 def _postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -56,7 +60,17 @@ def _postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _corpus_stats(docs: DataFrame, text_col: str):
+def _postings_rows(docs: DataFrame, m) -> dict[str, DataFrame]:
+    post = _postings(docs, m["id_col"], m["text_col"])
+    return {
+        "postings": post.withColumn(
+            "pb", F.pmod(F.xxhash64("term"), F.lit(m["bucket_parts"]))
+        )
+    }
+
+
+def _stats_row(docs: DataFrame, text_col: str, label: int) -> DataFrame:
+    """The label's one (bl, N, S) row: doc count and Σ doc lengths."""
     t = F.split(F.col(text_col), " ")
     row = (
         docs.filter(F.size(t) >= 2)
@@ -67,35 +81,9 @@ def _corpus_stats(docs: DataFrame, text_col: str):
         )
         .head()
     )
-    return int(row["n"]), int(row["s"] or 0)
-
-
-def _write_slice(
-    docs: DataFrame,
-    path: str,
-    batch_label: int,
-    id_col: str,
-    text_col: str,
-    bucket_parts: int,
-    mode: str,
-) -> None:
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
+    return docs.sparkSession.createDataFrame(
+        [(label, int(row["n"]), int(row["s"] or 0))], STATS_SCHEMA
     )
-
-    post = _postings(docs, id_col, text_col).withColumn(
-        "pb", F.pmod(F.xxhash64("term"), F.lit(bucket_parts))
-    )
-    with partition_overwrite_mode(docs.sparkSession, "static"):
-        post.withColumn("bl", F.lit(batch_label)).repartition(
-            "pb"
-        ).write.partitionBy("bl", "pb").mode(mode).parquet(
-            f"{path}/postings"
-        )
-    n, s = _corpus_stats(docs, text_col)
-    docs.sparkSession.createDataFrame(
-        [(batch_label, n, s)], "bl long, n_docs long, s_dl long"
-    ).write.mode(mode).parquet(f"{path}/stats")
 
 
 def build_bm25_index(
@@ -106,50 +94,36 @@ def build_bm25_index(
     text_col: str = "text",
     bucket_parts: int = BM25_BUCKET_PARTS,
 ) -> None:
-    """Persist the corpus postings under label 0 plus the one-row
-    geometry meta read back at probe/append time."""
-    _write_slice(docs, path, 0, id_col, text_col, bucket_parts,
-                 mode="overwrite")
-    docs.sparkSession.createDataFrame(
-        [(id_col, text_col, bucket_parts)],
-        "id_col string, text_col string, bucket_parts int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    """Persist the corpus postings and stats under label 0 plus the
+    one-row geometry meta read back at probe/append time."""
+    m = dict(id_col=id_col, text_col=text_col, bucket_parts=bucket_parts)
+    BM25_INDEX.build(path, _postings_rows(docs, m), m, META_SCHEMA)
+    _stats_row(docs, text_col, 0).write.mode("overwrite").parquet(
+        f"{path}/stats"
+    )
 
 
 def append_to_bm25_index(
     spark: SparkSession, path: str, docs: DataFrame, batch_label: int
 ) -> None:
-    """Add a batch's postings + corpus-stats slice under their own
-    ``bl`` label with the STORED geometry; idempotent by
-    delete-then-append. Probes over the union score exactly as a
-    rebuild (df/N/S all recombine, see module docstring)."""
-    import os
-    import shutil
-
-    _require_local_dir(path)
-    if batch_label == 0:
-        raise ValueError("batch_label 0 is reserved for the initial build")
-    m = spark.read.parquet(f"{path}/meta").head()
-    slice_dir = f"{path}/postings/bl={batch_label}"
-    if os.path.exists(slice_dir):
-        shutil.rmtree(slice_dir)
-    _write_slice(
-        docs, path, batch_label, m["id_col"], m["text_col"],
-        m["bucket_parts"], mode="append",
-    )
-    # stats slices are tiny (one row per label): rewrite without the
-    # replayed label, then append it — same idempotency contract
+    """Add (or replace) a batch's postings and stats row under their
+    own label with the STORED geometry. Probes over the union score
+    exactly as a rebuild (df/N/S all recombine, see module
+    docstring)."""
+    m = read_meta(spark, path)
+    BM25_INDEX.append(spark, path, batch_label, _postings_rows(docs, m))
+    recover_table(spark, path, "stats")
     stats = spark.read.parquet(f"{path}/stats").filter(
         F.col("bl") != batch_label
     )
-    n, s = _corpus_stats(docs, m["text_col"])
-    stats.union(
-        spark.createDataFrame(
-            [(batch_label, n, s)], "bl long, n_docs long, s_dl long"
-        )
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats_next")
-    shutil.rmtree(f"{path}/stats")
-    os.rename(f"{path}/stats_next", f"{path}/stats")
+    new = stats.union(_stats_row(docs, m["text_col"], batch_label))
+    swap_table(spark, new.coalesce(1).write.mode("overwrite"), path, "stats")
+
+
+def compact_bm25_index(spark: SparkSession, path: str) -> None:
+    """Fold appended postings labels into bl=0, keeping the newest
+    label. Stats rows stay per label: probes sum them anyway."""
+    BM25_INDEX.compact(spark, path)
 
 
 def bm25_topk_against_index(
@@ -172,8 +146,9 @@ def bm25_topk_against_index(
         BM25_IDF_SCALE,
     )
 
-    m = spark.read.parquet(f"{path}/meta").head()
+    m = read_meta(spark, path)
     id_col = m["id_col"]
+    recover_table(spark, path, "stats")
     stats = (
         spark.read.parquet(f"{path}/stats")
         .agg(F.sum("n_docs").alias("n"), F.sum("s_dl").alias("s"))
@@ -181,70 +156,63 @@ def bm25_topk_against_index(
     )
     n_docs, s_dl = int(stats["n"]), int(stats["s"])
     q = (
-        _postings(query_docs, id_col, m["text_col"])
-        .select(F.col(id_col).alias("q_id"), "term")
-        .withColumn(
-            "pb", F.pmod(F.xxhash64("term"), F.lit(m["bucket_parts"]))
-        )
+        _postings_rows(query_docs, m)["postings"]
+        .select(F.col(id_col).alias("q_id"), "term", "pb")
         .persist()
     )
-    touched = sorted(r["pb"] for r in q.select("pb").distinct().collect())
-    id_type = dict(query_docs.dtypes)[id_col]
-    if not touched:
-        q.unpersist()
-        return spark.createDataFrame(
-            [], f"q_id {id_type}, {id_col} {id_type},"
-            " score_fp long, rank long"
-        )
-    post = spark.read.parquet(f"{path}/postings").filter(
-        F.col("pb").isin(touched)
-    )
-    # exact global df: pb = f(term), so the filtered scan holds every
-    # posting of every query term
-    idf = (
-        post.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"))
-        .filter(F.col("df") * df_cap_den <= F.lit(n_docs * df_cap_num))
-        .select(
-            "term",
-            F.round(
-                F.lit(BM25_IDF_SCALE)
-                * F.log(
-                    (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                    + 1.0
-                )
-            )
-            .cast("long")
-            .alias("idf_fp"),
-        )
-    )
-    qterms = q.join(idf, "term").select("q_id", "term", "idf_fp")
-    num = F.lit(22 * s_dl) * F.col("tf")
-    den = (
-        F.lit(10 * s_dl) * F.col("tf")
-        + F.lit(3 * s_dl)
-        + F.lit(9 * n_docs) * F.col("dl")
-    )
-    contrib = F.round(
-        F.col("idf_fp") * (num.cast("double") / den.cast("double"))
-    ).cast("long")
-    scored = (
-        post.join(F.broadcast(qterms), "term")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select("q_id", id_col, contrib.alias("c"))
-        .groupBy("q_id", id_col)
-        .agg(F.sum("c").alias("score_fp"))
-    )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score_fp"), F.asc(id_col)
+    def verify(post: DataFrame) -> DataFrame:
+        # exact global df: pb = f(term), so the filtered scan holds
+        # every posting of every query term
+        idf = (
+            post.groupBy("term")
+            .agg(F.count("*").cast("long").alias("df"))
+            .filter(F.col("df") * df_cap_den <= F.lit(n_docs * df_cap_num))
+            .select(
+                "term",
+                F.round(
+                    F.lit(BM25_IDF_SCALE)
+                    * F.log(
+                        (F.lit(float(n_docs)) - F.col("df") + 0.5)
+                        / (F.col("df") + 0.5)
+                        + 1.0
+                    )
+                )
+                .cast("long")
+                .alias("idf_fp"),
+            )
+        )
+        qterms = q.join(idf, "term").select("q_id", "term", "idf_fp")
+        num = F.lit(22 * s_dl) * F.col("tf")
+        den = (
+            F.lit(10 * s_dl) * F.col("tf")
+            + F.lit(3 * s_dl)
+            + F.lit(9 * n_docs) * F.col("dl")
+        )
+        contrib = F.round(
+            F.col("idf_fp") * (num.cast("double") / den.cast("double"))
+        ).cast("long")
+        scored = (
+            post.join(F.broadcast(qterms), "term")
+            .filter(F.col(id_col) != F.col("q_id"))
+            .select("q_id", id_col, contrib.alias("c"))
+            .groupBy("q_id", id_col)
+            .agg(F.sum("c").alias("score_fp"))
+        )
+        w = Window.partitionBy("q_id").orderBy(
+            F.desc("score_fp"), F.asc(id_col)
+        )
+        return (
+            scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k)
+            .select("q_id", id_col, "score_fp", "rank")
+        )
+
+    id_type = dict(query_docs.dtypes)[id_col]
+    probe = BM25_INDEX.probe(
+        spark, path, q, verify,
+        f"q_id {id_type}, {id_col} {id_type}, score_fp long, rank long",
     )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", id_col, "score_fp", "rank")
-    )
-    out._probe_persisted = [q]
+    out = probe.pairs
+    out._probe_persisted = probe.persisted
     return out

@@ -1,86 +1,53 @@
 """Persisted Hamming signature index — incremental cross-corpus
-MEDIA near-dup dedup (round 9), completing the third index lifecycle
-beside the MinHash text index (operators/incremental.py) and the IVF
-embedding index (operators/ivf_lifecycle.py): perceptual signatures
-(image dHash, audio fingerprints — one BIGINT per item) land in a
-partition-pruned parquet layout, and a new batch's lookup becomes a
-partition-filtered equi-join on the Manku banding keys.
+MEDIA near-dup dedup: perceptual signatures (image dHash, audio
+fingerprints — one BIGINT per item) in the labeled-index lifecycle
+(operators/labeled_index.py: layout, label replace, replay mask,
+compaction).
 
-  build (once per corpus refresh)
-      signature table → hamming_band_rows → parquet PARTITIONED BY
-      (bl, b, pb = pmod(v, BUCKET_PARTS)); band rows carry the
-      signature itself (8 bytes — unlike the MinHash index, no
-      separate verify side-table is needed: bit_count(xor) verifies
-      from the key row).
-
-  probe (every batch)
-      batch band rows come from the SAME ``hamming_band_rows``
-      geometry stored in meta (one code path — index and batch can
-      never band differently), their distinct (b, pb) combos become
-      a literal partition filter, the (b, v) equi-join yields
-      candidates, and the exact Hamming verify runs on the carried
-      signatures. EXACT recall by the pigeonhole theorem — the
-      banding is lossless, so probe results equal the in-memory
-      cross-pair twin bit-for-bit (pinned by test).
+  rows    ``hamming_band_rows`` with the geometry stored in meta →
+          ``bands`` partitioned by (bl, b, pb = pmod(v,
+          BUCKET_PARTS)). Band rows carry the signature itself
+          (8 bytes), so unlike the MinHash index no verify side-table
+          is needed.
+  verify  the (b, v) equi-join over the touched buckets, then exact
+          bit_count(xor) on the carried signatures. EXACT recall by
+          the pigeonhole theorem — the banding is lossless, so probe
+          results equal the in-memory cross-pair twin bit-for-bit
+          (pinned by test).
 
 Scale: the index is one BIGINT signature × C(n_blocks, keep) band
 rows per item — orders below media payloads (pixels/samples never
 land in the index at all); probe IO is the buckets the batch
-occupies. Append/compaction/URI semantics mirror the established
-lifecycle (label replace, newest-label preservation, crash-safe
-swap). Reference has no media surface (engine extension from the
+occupies. Reference has no media surface (engine extension from the
 public Manku/Jain/Sarma technique).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firefox_public_data_report_etl_spark.operators.dedup import (
     hamming_band_rows,
 )
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
+from firefox_public_data_report_etl_spark.operators.labeled_index import (
+    LabeledIndex,
+    Probe,
+    read_meta,
 )
 
 HAMMING_BUCKET_PARTS = 32  # same fan rationale as the MinHash index
+HAMMING_INDEX = LabeledIndex({"bands": ("b", "pb")})
+META_SCHEMA = (
+    "id_col string, sig_col string, bits int, max_hamming int,"
+    " n_blocks int, bucket_parts int"
+)
 
 
-@dataclass
-class HammingProbe:
-    """Explicit probe result (round-9 advice: cache handles were
-    ad-hoc DataFrame attributes that vanished through any further
-    transformation — a caller that forgot to re-propagate them leaked
-    one persisted relation per streaming trigger).
-
-    ``pairs`` is the verified (base_id, batch_id, hamming) plan.
-    ``band_rows`` is the CACHED batch band-row relation the pairs
-    plan joins through — a gate that also needs within-batch pairs
-    pairs these rows (dedup.hamming_pairs_from_band_rows) instead of
-    re-banding; None when the batch was empty. ``close()`` (or using
-    the probe as a context manager) releases every persisted handle
-    AFTER the caller has materialized everything built on ``pairs`` /
-    ``band_rows`` — unpersisting earlier would silently recompute the
-    banding inside the verify join."""
-
-    pairs: DataFrame
-    band_rows: DataFrame | None = None
-    persisted: list[DataFrame] = field(default_factory=list)
-
-    def close(self) -> None:
-        for h in self.persisted:
-            h.unpersist()
-        self.persisted = []
-        self.band_rows = None
-
-    def __enter__(self) -> "HammingProbe":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+def _rows(sigs: DataFrame, m) -> DataFrame:
+    return hamming_band_rows(
+        sigs, id_col=m["id_col"], sig_col=m["sig_col"], bits=m["bits"],
+        max_hamming=m["max_hamming"], n_blocks=m["n_blocks"],
+    ).withColumn("pb", F.pmod(F.col("v"), F.lit(m["bucket_parts"])))
 
 
 def build_hamming_index(
@@ -95,76 +62,22 @@ def build_hamming_index(
     bucket_parts: int = HAMMING_BUCKET_PARTS,
 ) -> None:
     """Persist the base corpus's banded signature index under label
-    0, plus a one-row meta table of the banding geometry (read back
-    at probe/append time so a probe can never band against a
-    differently-built index)."""
-    if n_blocks is None:
-        n_blocks = max_hamming + 1
-    _write_slice(
-        sigs, path, 0, id_col, sig_col, bits, max_hamming, n_blocks,
-        bucket_parts, mode="overwrite",
+    0, plus the one-row banding geometry meta."""
+    m = dict(
+        id_col=id_col, sig_col=sig_col, bits=bits, max_hamming=max_hamming,
+        n_blocks=max_hamming + 1 if n_blocks is None else n_blocks,
+        bucket_parts=bucket_parts,
     )
-    sigs.sparkSession.createDataFrame(
-        [(id_col, sig_col, bits, max_hamming, n_blocks, bucket_parts)],
-        "id_col string, sig_col string, bits int, max_hamming int,"
-        " n_blocks int, bucket_parts int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    HAMMING_INDEX.build(path, {"bands": _rows(sigs, m)}, m, META_SCHEMA)
 
 
 def append_to_hamming_index(
     spark: SparkSession, path: str, sigs: DataFrame, batch_label: int
 ) -> None:
-    """Add a batch's signatures under their own ``bl`` label with the
-    STORED geometry. Idempotent by delete-then-append: the label
-    slice is fully replaced on retry (same review history as the
-    MinHash/IVF appends — dynamic overwrite would leave stale band
-    rows alive in leaves a shrunken retry no longer touches)."""
-    import os
-    import shutil
-
-    _require_local_dir(path)
-    if batch_label == 0:
-        raise ValueError("batch_label 0 is reserved for the initial build")
-    m = spark.read.parquet(f"{path}/meta").head()
-    slice_dir = f"{path}/bands/bl={batch_label}"
-    if os.path.exists(slice_dir):
-        shutil.rmtree(slice_dir)
-    _write_slice(
-        sigs, path, batch_label, m["id_col"], m["sig_col"], m["bits"],
-        m["max_hamming"], m["n_blocks"], m["bucket_parts"], mode="append",
-    )
-
-
-def _write_slice(
-    sigs: DataFrame,
-    path: str,
-    batch_label: int,
-    id_col: str,
-    sig_col: str,
-    bits: int,
-    max_hamming: int,
-    n_blocks: int,
-    bucket_parts: int,
-    mode: str,
-) -> None:
-    # repartition ON the partition columns before the partitioned
-    # write + scoped STATIC overwrite — both the measured lessons the
-    # MinHash/IVF writers already encode (sliver files; leaked
-    # dynamic mode keeping a previous index's appends alive)
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(sigs.sparkSession, "static"):
-        bands = hamming_band_rows(
-            sigs, id_col=id_col, sig_col=sig_col, bits=bits,
-            max_hamming=max_hamming, n_blocks=n_blocks,
-        )
-        bands.withColumn("bl", F.lit(batch_label)).withColumn(
-            "pb", F.pmod(F.col("v"), F.lit(bucket_parts))
-        ).repartition("b", "pb").write.partitionBy("bl", "b", "pb").mode(
-            mode
-        ).parquet(f"{path}/bands")
+    """Add (or replace) a batch's signatures under their own label
+    with the STORED geometry."""
+    m = read_meta(spark, path)
+    HAMMING_INDEX.append(spark, path, batch_label, {"bands": _rows(sigs, m)})
 
 
 def probe_hamming_index(
@@ -172,94 +85,53 @@ def probe_hamming_index(
     path: str,
     batch_sigs: DataFrame,
     exclude_label: int | None = None,
-) -> HammingProbe:
-    """``HammingProbe`` whose ``pairs`` is (base_id, batch_id,
-    hamming) for the batch against the index: batch band rows (stored
-    geometry), distinct (b, pb) combos as a literal partition filter
-    (the per-band disjunct form the MinHash probe measured 10x faster
-    than a flat OR), the (b, v) equi-join, then the exact bit_count
-    verify on the carried signatures — exact recall, no second table
-    read. ``exclude_label`` masks one label partition (the streaming
-    gate's replay guard). The caller owns the probe's cache lifecycle
-    via ``probe.close()`` once results are materialized."""
-    m = spark.read.parquet(f"{path}/meta").head()
+) -> Probe:
+    """``Probe`` whose ``pairs`` is (base_id, batch_id, hamming) for
+    the batch against the index and whose ``batch_rows`` are the
+    batch's cached band rows. ``exclude_label`` masks one label (the
+    streaming replay guard). The caller owns the probe's cache
+    lifecycle via ``probe.close()`` once results are materialized."""
+    m = read_meta(spark, path)
     id_col, sig_col = m["id_col"], m["sig_col"]
-    batch_bands = (
-        hamming_band_rows(
-            batch_sigs, id_col=id_col, sig_col=sig_col, bits=m["bits"],
-            max_hamming=m["max_hamming"], n_blocks=m["n_blocks"],
-        )
-        .withColumn("pb", F.pmod(F.col("v"), F.lit(m["bucket_parts"])))
-        .persist()
-    )
-    touched: dict[int, list[int]] = {}
-    for r in batch_bands.select("b", "pb").distinct().collect():
-        touched.setdefault(r["b"], []).append(r["pb"])
-    if not touched:
-        batch_bands.unpersist()
-        id_type = dict(batch_sigs.dtypes)[id_col]
-        return HammingProbe(
-            pairs=spark.createDataFrame(
-                [], f"base_id {id_type}, batch_id {id_type}, hamming long"
-            )
-        )
-    cond = reduce(
-        lambda x, y: x | y,
-        [
-            (F.col("b") == b) & F.col("pb").isin(sorted(pbs))
-            for b, pbs in sorted(touched.items())
-        ],
-    )
-    idx = spark.read.parquet(f"{path}/bands").filter(cond)
-    if exclude_label is not None:
-        idx = idx.filter(F.col("bl") != exclude_label)
-    cand = (
-        idx.select(
-            F.col(id_col).alias("base_id"),
-            F.col(sig_col).alias("sa"),
-            "b",
-            "v",
-        )
-        .join(
-            batch_bands.select(
-                F.col(id_col).alias("batch_id"),
-                F.col(sig_col).alias("sb"),
+    batch_bands = _rows(batch_sigs, m).persist()
+
+    def verify(idx: DataFrame) -> DataFrame:
+        cand = (
+            idx.select(
+                F.col(id_col).alias("base_id"),
+                F.col(sig_col).alias("sa"),
                 "b",
                 "v",
-            ),
-            ["b", "v"],
+            )
+            .join(
+                batch_bands.select(
+                    F.col(id_col).alias("batch_id"),
+                    F.col(sig_col).alias("sb"),
+                    "b",
+                    "v",
+                ),
+                ["b", "v"],
+            )
+            .select("base_id", "batch_id", "sa", "sb")
+            .distinct()
         )
-        .select("base_id", "batch_id", "sa", "sb")
-        .distinct()
-    )
-    out = (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("long"),
+        return (
+            cand.withColumn(
+                "hamming",
+                F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("long"),
+            )
+            .filter(F.col("hamming") <= m["max_hamming"])
+            .select("base_id", "batch_id", "hamming")
         )
-        .filter(F.col("hamming") <= m["max_hamming"])
-        .select("base_id", "batch_id", "hamming")
-    )
-    return HammingProbe(
-        pairs=out, band_rows=batch_bands, persisted=[batch_bands]
+
+    id_type = dict(batch_sigs.dtypes)[id_col]
+    return HAMMING_INDEX.probe(
+        spark, path, batch_bands, verify,
+        f"base_id {id_type}, batch_id {id_type}, hamming long",
+        exclude_label,
     )
 
 
 def compact_hamming_index(spark: SparkSession, path: str) -> None:
-    """Fold appended labels into bl=0, preserving the NEWEST label
-    for streaming replay safety — the shared swap protocol
-    (``operators/incremental.py:compact_labeled_table``, recovery
-    preamble first)."""
-    from firefox_public_data_report_etl_spark.operators.incremental import (
-        compact_labeled_table,
-        newest_label,
-        recover_table_swap,
-    )
-
-    _require_local_dir(path)
-    recover_table_swap(path, "bands")
-    keep_label = newest_label(spark, path, "bands")
-    compact_labeled_table(
-        spark, path, "bands", ["bl", "b", "pb"], keep_label,
-        repartition_cols=["b", "pb"],
-    )
+    """Fold appended labels into bl=0, keeping the newest label."""
+    HAMMING_INDEX.compact(spark, path)

@@ -2,26 +2,18 @@
 
 Production corpus curation is incremental: this week's crawl must be
 deduplicated against the already-curated corpus WITHOUT recomputing
-the curated side's signatures. This module persists the MinHash LSH
-band rows of the base corpus as a partition-pruned parquet index —
-the same storage-layout-IS-the-index trick as the IVF serving index
-(operators/vectorized.py:build_ivf_index) — and turns the new-batch
-lookup into a partition-filtered equi-join:
+the curated side's signatures. This module is the MinHash family of
+the labeled-index lifecycle (operators/labeled_index.py: layout,
+label replace, replay mask, compaction):
 
-  build (once per corpus refresh)
-      gram_hash_arrays(base) → minhash_band_rows → parquet
-      PARTITIONED BY (bi, pb = pmod(bv, BUCKET_PARTS)); each band row
-      carries the doc's gram-hash array, so candidate verification
-      (exact hashed-shingle Jaccard) never re-reads base corpus TEXT.
-
-  probe (every batch)
-      batch band rows are computed live with the SAME
-      ``minhash_band_rows`` function (one code path — the index and
-      the batch can never band differently), their distinct
-      (bi, pb) combos are collected (≤ n_bands·BUCKET_PARTS values)
-      and become a literal partition filter on the index scan, then
-      the (bi, bv) equi-join yields cross candidates. Base docs that
-      share no bucket prefix with the batch are never read.
+  rows    ``minhash_band_rows`` → ``bands`` (id, bi, bv) partitioned
+          by (bl, bi, pb = pmod(bv, BUCKET_PARTS)), plus ``grams``
+          (id, hs, n), one row per doc, the verify side-table — so
+          verification never re-reads base corpus TEXT. Index and
+          batch band with the SAME function and stored params.
+  verify  the (bi, bv) equi-join over the touched buckets yields
+          cross candidates; exact hashed-shingle Jaccard on the
+          gram arrays decides.
 
 Scale: the index is fingerprint-sized (ints + a gram-hash array per
 doc — orders below corpus text); the probe's join volume is the
@@ -34,14 +26,17 @@ each run); this is an engine extension from public LSH technique.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firefox_public_data_report_etl_spark.operators.dedup import (
     N_BANDS,
     ROWS_PER_BAND,
     minhash_band_rows,
+)
+from firefox_public_data_report_etl_spark.operators.labeled_index import (
+    LabeledIndex,
+    read_labeled,
+    read_meta,
 )
 
 # Partition fan per band: n_bands * BUCKET_PARTS leaf directories.
@@ -52,105 +47,29 @@ from firefox_public_data_report_etl_spark.operators.dedup import (
 # partition column is derived, so re-fanning is a rewrite of
 # fingerprint-sized data only.
 BUCKET_PARTS = 32
+MINHASH_INDEX = LabeledIndex({"bands": ("bi", "pb"), "grams": ()})
+META_SCHEMA = "n_bands int, rows_per_band int, bucket_parts int"
 
 
-def _require_local_dir(path: str) -> None:
-    """The append/compact lifecycle deletes and renames slices with
-    ``shutil``/``os`` — local-filesystem semantics. On any other
-    scheme (hdfs://, s3a://, even an explicit file:/ URI, which the
-    python os module would treat as a RELATIVE path named 'file:')
-    those calls silently no-op or mangle paths, leaving stale band
-    rows alive — exactly the silently-un-indexed-docs bug the
-    pre-delete exists to prevent (review fix). Refuse loudly; an
-    object-store deployment routes these through the Hadoop
-    FileSystem API instead."""
-    if "://" in path or path.startswith("file:"):
-        raise ValueError(
-            "minhash index lifecycle (append/compact) requires a plain "
-            f"local directory path, got URI {path!r}; use the Hadoop "
-            "FileSystem API for remote index storage"
-        )
-
-
-def _recover_swap(src: str, stage: str, old: str) -> None:
-    """Roll an interrupted compaction swap back on the next run —
-    MUST run before anything READS ``src`` (review fix: the first
-    cut listed labels from ``src`` before recovering, so the exact
-    crash window the protocol exists for — src moved aside, stage
-    not yet moved in — left every later read failing on a missing
-    path instead of self-healing)."""
-    import os
-    import shutil
-
-    if not os.path.exists(src) and os.path.exists(old):
-        shutil.move(old, src)
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def recover_table_swap(path: str, table: str) -> None:
-    """Public recovery preamble for one labeled table under
-    ``{path}/{table}`` (stage/old siblings per the shared swap
-    protocol)."""
-    _recover_swap(
-        f"{path}/{table}", f"{path}/{table}__compact", f"{path}/{table}__old"
-    )
-
-
-def newest_label(spark: SparkSession, path: str, table: str) -> int | None:
-    """The newest appended ``bl`` label of a labeled table (None when
-    only the base build exists) — the label every compactor must
-    preserve for streaming replay safety. Call AFTER
-    ``recover_table_swap``."""
-    labels = [
-        r["bl"]
-        for r in spark.read.parquet(f"{path}/{table}")
-        .select("bl").distinct().collect()
-    ]
-    return max((bl for bl in labels if bl != 0), default=None)
-
-
-def compact_labeled_table(
-    spark: SparkSession,
-    path: str,
-    table: str,
-    partition_cols: list[str],
-    keep_label: int | None,
-    repartition_cols: list[str] | None = None,
-    coalesce_n: int | None = None,
-) -> None:
-    """Fold labels 0..max-1 of one labeled table into bl=0 (keeping
-    ``keep_label`` untouched) with the crash-safe
-    stage/move-aside/move-in swap — the ONE compaction protocol
-    shared by the MinHash, IVF, and Hamming index lifecycles (review
-    fix: three near-verbatim copies collapsed here; callers run
-    ``recover_table_swap`` before reading labels)."""
-    import shutil
-
-    src = f"{path}/{table}"
-    stage = f"{path}/{table}__compact"
-    old = f"{path}/{table}__old"
-    _recover_swap(src, stage, old)
-    df = spark.read.parquet(src).withColumn(
-        "bl",
-        F.when(F.col("bl") == F.lit(keep_label), F.col("bl")).otherwise(
-            F.lit(0)
-        )
-        if keep_label is not None
-        else F.lit(0),
-    )
-    if repartition_cols:
-        w = df.repartition(*repartition_cols)
-    elif coalesce_n:
-        w = df.coalesce(coalesce_n)
-    else:
-        w = df
-    w.write.partitionBy(*partition_cols).mode("overwrite").parquet(stage)
-    shutil.move(src, old)
-    shutil.move(stage, src)
-    shutil.rmtree(old)
+def _rows(hs_df: DataFrame, m, id_col: str) -> dict[str, DataFrame]:
+    # TWO tables, measured necessity both times:
+    # - bands: (id, bi, bv, pb) INTS ONLY. The first cut stored the
+    #   gram array on every band row (so verify needed no second
+    #   table) — but that duplicates each doc's array n_bands times,
+    #   and the probe then READS 4x the fingerprint volume the
+    #   recompute would have hashed: measured slower than no index
+    #   at all. Candidate generation only needs the ints.
+    # - grams: (id, hs, n), one row per doc — the verify side-table,
+    #   read once per probe with column pruning.
+    bands = minhash_band_rows(
+        hs_df, id_col, m["n_bands"], m["rows_per_band"]
+    ).select(id_col, "bi", "bv")
+    return {
+        "bands": bands.withColumn(
+            "pb", F.pmod(F.col("bv"), F.lit(m["bucket_parts"]))
+        ),
+        "grams": hs_df.select(id_col, "hs", "n"),
+    }
 
 
 def build_minhash_index(
@@ -161,21 +80,13 @@ def build_minhash_index(
     rows_per_band: int = ROWS_PER_BAND,
     bucket_parts: int = BUCKET_PARTS,
 ) -> None:
-    """Persist the base corpus's LSH signature index. ``hs_df`` is
-    ``gram_hash_arrays`` output (id, hs, n). Layout:
-    ``{path}/bands`` partitioned by (bl, bi, pb) — ``bl`` is the
-    batch label (0 = the initial build; ``append_to_minhash_index``
-    adds later batches under their own label, making refreshes
-    idempotent); ``{path}/meta`` one row of banding params, read back
-    at probe time so a probe can never silently band against a
-    differently-built index."""
-    _write_index_slice(hs_df, path, 0, id_col, n_bands, rows_per_band,
-                       bucket_parts, mode="overwrite")
-    spark = hs_df.sparkSession
-    spark.createDataFrame(
-        [(n_bands, rows_per_band, bucket_parts)],
-        "n_bands int, rows_per_band int, bucket_parts int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    """Persist the base corpus's LSH signature index under label 0.
+    ``hs_df`` is ``gram_hash_arrays`` output (id, hs, n). Layout:
+    ``{path}/bands`` partitioned by (bl, bi, pb), ``{path}/grams`` by
+    bl, and the banding params in ``{path}/meta``."""
+    m = dict(n_bands=n_bands, rows_per_band=rows_per_band,
+             bucket_parts=bucket_parts)
+    MINHASH_INDEX.build(path, _rows(hs_df, m, id_col), m, META_SCHEMA)
 
 
 def append_to_minhash_index(
@@ -186,93 +97,13 @@ def append_to_minhash_index(
     id_col: str = "doc_id",
 ) -> None:
     """Weekly refresh: add a batch's (typically its KEPT docs')
-    signatures to an existing index so the NEXT batch dedups against
-    base ∪ everything accepted since. Banding params come from the
-    stored meta — the appended slice can never band differently.
-
-    IDEMPOTENT by layout: the label's entire ``bl={label}`` slice is
-    physically removed before the rewrite, then written with plain
-    append mode — so re-running a failed/duplicated refresh fully
-    REPLACES the label (review fix: the first cut used dynamic
-    partition overwrite, which only replaces the (bl, bi, pb) leaves
-    the NEW batch touches — reusing a label for a different batch
-    would have left stale band rows alive in untouched leaves, with
-    their gram rows gone: silently un-indexed docs). A crash between
-    delete and write leaves the label empty until the retry rewrites
-    it — the same convergence story, one window earlier. File growth
-    is one file per (batch, band, bucket) leaf; compact old batches
-    together periodically (``compact_minhash_index``) when probe
-    listing cost shows up."""
-    import os
-    import shutil
-
-    _require_local_dir(path)
-    meta = spark.read.parquet(f"{path}/meta").head()
-    if batch_label == 0:
-        raise ValueError("batch_label 0 is reserved for the initial build")
-    # NO ignore_errors (review fix): a pre-delete that fails (perms,
-    # stale NFS handle) must fail the append — swallowing it would
-    # leave the stale slice alive alongside the new write, silently
-    # corrupting the idempotency the delete exists to provide
-    for t in ("bands", "grams"):
-        slice_dir = f"{path}/{t}/bl={batch_label}"
-        if os.path.exists(slice_dir):
-            shutil.rmtree(slice_dir)
-    _write_index_slice(
-        hs_df, path, batch_label, id_col, meta["n_bands"],
-        meta["rows_per_band"], meta["bucket_parts"], mode="append",
-    )
-
-
-def _write_index_slice(
-    hs_df: DataFrame,
-    path: str,
-    batch_label: int,
-    id_col: str,
-    n_bands: int,
-    rows_per_band: int,
-    bucket_parts: int,
-    mode: str,
-) -> None:
-    # TWO tables, measured necessity both times:
-    # - bands: (id, bi, bv, pb) INTS ONLY. The first cut stored the
-    #   gram array on every band row (so verify needed no second
-    #   table) — but that duplicates each doc's array n_bands times,
-    #   and the probe then READS 4x the fingerprint volume the
-    #   recompute would have hashed: measured slower than no index
-    #   at all. Candidate generation only needs the ints.
-    # - grams: (id, hs, n), one row per doc — the verify side-table,
-    #   read once per probe with column pruning.
-    # repartition ON the partition columns before the partitioned
-    # write: without it every upstream task writes a sliver into
-    # every (bi, pb) directory — n_bands·bucket_parts·n_tasks files
-    # of a few KB, and build and probe both pay per-file open cost
-    # instead of IO (measured 22 s build / 13 s probe at sf0.1).
-    # overwrite mode must be EXPLICITLY static: other writers in this
-    # package set partitionOverwriteMode=dynamic session-wide, and an
-    # initial build running under a leaked dynamic mode would only
-    # replace bl=0 — silently keeping a previous index's appended
-    # batches alive at the same path. (Appends pre-delete their label
-    # dir and use append mode, so the conf is irrelevant to them.)
-    # Saved and restored (review fix): flipping it session-wide would
-    # be the same leaked-global-state hazard in the other direction
-    # for whatever partitioned overwrite runs next in the session.
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(hs_df.sparkSession, "static"):
-        bands = minhash_band_rows(hs_df, id_col, n_bands, rows_per_band)
-        bands.select(id_col, "bi", "bv").withColumn(
-            "bl", F.lit(batch_label)
-        ).withColumn(
-            "pb", F.pmod(F.col("bv"), F.lit(bucket_parts))
-        ).repartition("bi", "pb").write.partitionBy("bl", "bi", "pb").mode(
-            mode
-        ).parquet(f"{path}/bands")
-        hs_df.select(id_col, "hs", "n").withColumn(
-            "bl", F.lit(batch_label)
-        ).write.partitionBy("bl").mode(mode).parquet(f"{path}/grams")
+    signatures under their own label, banded with the STORED params,
+    so the NEXT batch dedups against base ∪ everything accepted since.
+    Idempotent: a replayed label is replaced (operators/labeled_index.py).
+    Compact old labels together periodically
+    (``compact_minhash_index``) when probe listing cost shows up."""
+    m = read_meta(spark, path)
+    MINHASH_INDEX.append(spark, path, batch_label, _rows(hs_df, m, id_col))
 
 
 def _verified_jaccard(cand: DataFrame) -> DataFrame:
@@ -341,112 +172,77 @@ def probe_minhash_index(
     exclude_label: int | None = None,
 ) -> DataFrame:
     """(base_id, batch_id, jaccard) for the batch against a
-    ``build_minhash_index`` layout, in two steps:
-
-    1. candidates — the batch's distinct (bi, pb) combos are
-       collected once (bounded by n_bands·bucket_parts, tiny by
-       construction) and applied as a literal filter on the bands
-       table's PARTITION columns — ``.explain`` shows the
-       PartitionFilters cut, asserted in tests — so band IO is
-       proportional to the buckets the batch occupies; the (bi, bv)
-       equi-join then yields distinct (base_id, batch_id) pairs.
-       The predicate is one (bi = i AND pb IN (...)) disjunct per
-       band: a flat OR over every (bi, pb) conjunction prunes the
-       same partitions but costs 10x in catalyst + row-filter time
-       (measured 4.1 s vs 0.4 s at sf0.1).
-    2. verify — exact hashed-shingle Jaccard: candidates (size-gated
-       broadcast, same policy as ``jaccard_for_pairs``) semi-join
-       the grams side-table for the base arrays, then join the live
-       batch arrays. The base corpus TEXT is never read.
-
-    ``exclude_label``: skip one ``bl`` batch-partition on both index
-    reads (another partition-pruned literal). The streaming ingest
-    gate passes its OWN label here — on checkpoint replay the
-    crashed attempt's append is already in the index, and without
-    the exclusion the batch would match its own signatures and drop
-    every row (see streaming/neardup.py)."""
+    ``build_minhash_index`` layout: the batch's band rows probe the
+    touched (bi, pb) buckets, the (bi, bv) equi-join yields distinct
+    candidate pairs, and exact hashed-shingle Jaccard verifies them —
+    candidates (size-gated broadcast, same policy as
+    ``jaccard_for_pairs``) join the grams side-table for the base
+    arrays, then the live batch arrays. ``exclude_label`` masks one
+    label on both index reads (the streaming replay guard, see
+    streaming/neardup.py)."""
     from firefox_public_data_report_etl_spark.operators.dedup import (
         MAX_BROADCAST_PAIRS,
         _decide_broadcast_pairs,
     )
 
-    meta = spark.read.parquet(f"{path}/meta").head()
+    m = read_meta(spark, path)
     # persisted: the signature compute (n_bands·rows_per_band
     # array_min expressions per doc) feeds BOTH the touched-combo
-    # collect below and the candidate join — without the persist it
-    # runs twice per probe (review fix); band rows are fingerprint-
-    # sized, so this is the same cache class as the callers' hs cache
-    batch_bands = (
-        minhash_band_rows(
-            batch_hs, id_col, meta["n_bands"], meta["rows_per_band"]
+    # collect and the candidate join — without the persist it runs
+    # twice per probe; band rows are fingerprint-sized, so this is
+    # the same cache class as the callers' hs cache
+    batch_bands = _rows(batch_hs, m, id_col)["bands"].persist()
+
+    def verify(idx: DataFrame) -> DataFrame:
+        cand = (
+            idx.select(F.col(id_col).alias("base_id"), "bi", "bv")
+            .join(
+                batch_bands.select(
+                    F.col(id_col).alias("batch_id"), "bi", "bv"
+                ),
+                ["bi", "bv"],
+            )
+            .select("base_id", "batch_id")
+            .distinct()
         )
-        .withColumn("pb", F.pmod(F.col("bv"), F.lit(meta["bucket_parts"])))
-        .persist()
-    )
-    touched: dict[int, list[int]] = {}
-    for r in batch_bands.select("bi", "pb").distinct().collect():
-        touched.setdefault(r["bi"], []).append(r["pb"])
-    if not touched:
+        cand, bcast = _decide_broadcast_pairs(cand, None, MAX_BROADCAST_PAIRS)
+        # the decide count just materialized cand through its cache, so
+        # the band-row relation is no longer on any live path — release
+        # it here instead of leaking one cached relation per probe
+        # (the streaming gate probes once per micro-batch)
         batch_bands.unpersist()
-        id_type = dict(batch_hs.dtypes)[id_col]
-        return spark.createDataFrame(
-            [], f"base_id {id_type}, batch_id {id_type}, jaccard double"
+        p = F.broadcast(cand) if bcast else cand
+        grams = read_labeled(
+            spark, path, "grams", exclude_label=exclude_label
+        ).select(
+            F.col(id_col).alias("base_id"),
+            F.col("hs").alias("ha"),
+            F.col("n").alias("na"),
         )
-    cond = reduce(
-        lambda x, y: x | y,
-        [
-            (F.col("bi") == bi) & F.col("pb").isin(sorted(pbs))
-            for bi, pbs in sorted(touched.items())
-        ],
-    )
-    idx = spark.read.parquet(f"{path}/bands").filter(cond)
-    if exclude_label is not None:
-        idx = idx.filter(F.col("bl") != exclude_label)
-    cand = (
-        idx.select(F.col(id_col).alias("base_id"), "bi", "bv")
-        .join(
-            batch_bands.select(
-                F.col(id_col).alias("batch_id"), "bi", "bv"
+        withb = p.join(grams, "base_id").join(
+            batch_hs.select(
+                F.col(id_col).alias("batch_id"),
+                F.col("hs").alias("hb"),
+                F.col("n").alias("nb"),
             ),
-            ["bi", "bv"],
+            "batch_id",
         )
-        .select("base_id", "batch_id")
-        .distinct()
-    )
-    cand, bcast = _decide_broadcast_pairs(cand, None, MAX_BROADCAST_PAIRS)
-    # the decide count just materialized cand through its cache, so
-    # the band-row relation is no longer on any live path — release
-    # it here instead of leaking one cached relation per probe
-    # (review fix; the streaming gate probes once per micro-batch)
-    batch_bands.unpersist()
-    p = F.broadcast(cand) if bcast else cand
-    grams = spark.read.parquet(f"{path}/grams")
-    if exclude_label is not None:
-        grams = grams.filter(F.col("bl") != exclude_label)
-    grams = grams.select(
-        F.col(id_col).alias("base_id"),
-        F.col("hs").alias("ha"),
-        F.col("n").alias("na"),
-    )
-    withb = p.join(grams, "base_id").join(
-        batch_hs.select(
-            F.col(id_col).alias("batch_id"),
-            F.col("hs").alias("hb"),
-            F.col("n").alias("nb"),
-        ),
-        "batch_id",
-    )
-    out = _verified_jaccard(withb)
-    # the cached candidate set is part of the RETURNED plan's lineage
-    # — unpersisting it here would drop the cache before the verify
-    # join ever runs, recomputing the band join and re-reading the
-    # (now-uncached) batch bands. The caller owns its lifecycle: the
-    # streaming gate unpersists after materializing its decisions
-    # (streaming/neardup.py), one-shot queries let session teardown
-    # collect it. Exposed as an attribute so callers need no
-    # knowledge of the internals (review fix).
-    out._probe_persisted = [cand]
-    return out
+        out = _verified_jaccard(withb)
+        # the cached candidate set is part of the RETURNED plan's
+        # lineage — unpersisting it here would drop the cache before
+        # the verify join ever runs. The caller owns its lifecycle: the
+        # streaming gate unpersists after materializing its decisions
+        # (streaming/neardup.py), one-shot queries let session teardown
+        # collect it.
+        out._probe_persisted = [cand]
+        return out
+
+    id_type = dict(batch_hs.dtypes)[id_col]
+    return MINHASH_INDEX.probe(
+        spark, path, batch_bands, verify,
+        f"base_id {id_type}, batch_id {id_type}, jaccard double",
+        exclude_label,
+    ).pairs
 
 
 def incremental_decisions(
@@ -523,49 +319,10 @@ def incremental_decisions(
 
 
 def compact_minhash_index(spark: SparkSession, path: str) -> None:
-    """Fold appended batch slices back into the base label — the
-    periodic maintenance a long-running ingestion gate needs: each
-    ``append_to_minhash_index`` adds one file per touched
-    (bl, bi, pb) leaf, so after many epochs probe listing cost grows
-    with history; compaction rewrites bands and grams so labels
-    0..max-1 collapse to a single bl=0 slice (one file per (bi, pb)
-    leaf again) with probe results unchanged (pinned by test).
-
-    The NEWEST appended label is preserved uncompacted (review fix):
-    the streaming gate's replay safety rests on
-    ``probe_minhash_index(exclude_label=own_label)`` being able to
-    mask a crashed attempt's already-landed append. Folding every
-    label into bl=0 would defeat that exclusion — if the gate crashed
-    after its append but before the checkpoint committed, and
-    compaction ran before restart, the replayed batch would match its
-    own signatures and every doc would be dropped as ``matched_base``
-    (silent data loss). Only the latest label can be a crashed
-    in-flight epoch (appends are sequential), so keeping it
-    uncompacted makes compaction safe to run at any time without
-    coordinating with the stream's checkpoint state.
-
-    Crash-safe without a transaction log via the shared swap protocol
-    (``compact_labeled_table``): the rewrite stages to a sibling
-    directory, the live table is moved ASIDE (never deleted while it
-    is the only copy), the staged table moves in, and only then is
-    the old copy removed; the recovery preamble runs BEFORE any read
-    of either table, so an interrupted swap self-heals instead of
-    failing every later probe (review fix — the first cut listed
-    labels before recovering). On an object store without atomic
-    rename, stage to a new versioned path and flip the pointer the
-    deployment already uses for index discovery."""
-    _require_local_dir(path)
-    for table in ("bands", "grams"):
-        recover_table_swap(path, table)
-    meta = spark.read.parquet(f"{path}/meta").head()
-    # newest appended label stays uncompacted (see docstring); found
-    # from the partition listing — fingerprint-sized metadata read
-    keep_label = newest_label(spark, path, "bands")
-    compact_labeled_table(
-        spark, path, "bands", ["bl", "bi", "pb"], keep_label,
-        repartition_cols=["bi", "pb"],
-    )
-    compact_labeled_table(
-        spark, path, "grams", ["bl"], keep_label,
-        coalesce_n=max(1, meta["bucket_parts"] // 8),
+    """Fold appended labels back into bl=0, keeping the newest label
+    (operators/labeled_index.py); the grams side-table is coalesced to
+    bucket_parts/8 files."""
+    m = read_meta(spark, path)
+    MINHASH_INDEX.compact(
+        spark, path, coalesce_n=max(1, m["bucket_parts"] // 8)
     )

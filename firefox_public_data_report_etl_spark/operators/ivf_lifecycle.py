@@ -1,17 +1,10 @@
-"""IVF serving-index lifecycle (round 9, r8 verdict #3): bring the
-persisted embedding index (operators/vectorized.py:build_ivf_index)
-to parity with the MinHash signature index's append / compaction /
-streaming-ingestion surface (operators/incremental.py,
-streaming/neardup.py). A continuously-growing corpus appends each
-accepted batch's vectors under its own ``bl`` label against the
-FROZEN codebook; periodic compaction folds old labels back into bl=0;
-the streaming gate in streaming/embedgate.py composes
+"""IVF serving-index lifecycle: the persisted embedding index
+(operators/vectorized.py:build_ivf_index) in the labeled-index
+lifecycle (operators/labeled_index.py: label replace, replay mask,
+compaction). A continuously-growing corpus appends each accepted
+batch's vectors under its own ``bl`` label against the FROZEN
+codebook; the streaming gate in streaming/embedgate.py composes
 probe → decide → land → append with the same replay contract.
-
-The layout is the index: vectors partition by (bl, cell), so a
-search prunes to nprobe cell directories per label and an
-``exclude_label`` probe prunes the in-flight label — both literal
-partition filters, both asserted in tests.
 
 Scale: appends write only the batch's vectors (one shuffle of
 fingerprint-sized rows onto the cell key); compaction rewrites
@@ -23,12 +16,10 @@ technique).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
-)
 from firefox_public_data_report_etl_spark.operators.vectorized import (
+    IVF_INDEX,
     ivf_assign,
 )
 
@@ -40,71 +31,19 @@ def append_to_ivf_index(
     batch_label: int,
     id_col: str = "vec_id",
 ) -> None:
-    """Add a batch's vectors to an existing index under their own
-    ``bl`` label, assigned against the STORED codebook (one code
-    path with the build — the appended slice can never cell
-    differently; an IVF codebook is frozen between rebuilds by
-    definition).
-
-    IDEMPOTENT by layout, exactly like ``append_to_minhash_index``:
-    the label's entire ``bl={label}`` slice is physically removed
-    before the rewrite, then written with plain append mode — so a
-    replayed/duplicated refresh fully REPLACES the label (dynamic
-    partition overwrite would only replace the (bl, cell) leaves the
-    NEW batch touches, leaving stale vectors alive in cells the
-    retry no longer occupies: silently over-matched probes). The
-    pre-delete is not error-swallowed: a failed delete must fail the
-    append."""
-    import os
-    import shutil
-
-    _require_local_dir(path)
-    if batch_label == 0:
-        raise ValueError("batch_label 0 is reserved for the initial build")
-    centroids = spark.read.parquet(f"{path}/centroids")
-    slice_dir = f"{path}/vectors/bl={batch_label}"
-    if os.path.exists(slice_dir):
-        shutil.rmtree(slice_dir)
-    cells = ivf_assign(quantized_batch, centroids, id_col)
-    quantized_batch.join(cells, id_col).withColumn(
-        "bl", F.lit(batch_label)
-    ).repartition("cell").write.partitionBy("bl", "cell").mode(
-        "append"
-    ).parquet(f"{path}/vectors")
+    """Add (or replace) a batch's vectors under their own label,
+    assigned against the STORED codebook (one code path with the
+    build — the appended slice can never cell differently)."""
+    cells = ivf_assign(
+        quantized_batch, spark.read.parquet(f"{path}/centroids"), id_col
+    )
+    IVF_INDEX.append(
+        spark, path, batch_label,
+        {"vectors": quantized_batch.join(cells, id_col)},
+    )
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> None:
-    """Fold appended batch labels back into bl=0 — the periodic
-    maintenance a long-running embedding gate needs: each append adds
-    one file per touched (bl, cell) leaf, so probe listing cost grows
-    with epoch history; compaction rewrites the vectors table so
-    labels 0..max-1 collapse into a single bl=0 slice (one well-sized
-    file per cell again) with search results unchanged (pinned by
-    test).
-
-    The NEWEST appended label is preserved uncompacted — the
-    streaming gate's replay safety rests on
-    ``search_ivf_index(exclude_label=own_label)`` being able to mask
-    a crashed attempt's already-landed append; folding every label
-    into bl=0 would defeat that exclusion (the replayed batch would
-    match its own vectors and drop every row). Only the latest label
-    can be a crashed in-flight epoch, so compaction is safe to run at
-    any time without coordinating with the stream's checkpoint.
-
-    Crash-safe via the shared swap protocol
-    (``operators/incremental.py:compact_labeled_table`` — recovery
-    preamble first, stage/move-aside/move-in, one implementation for
-    all three index lifecycles)."""
-    from firefox_public_data_report_etl_spark.operators.incremental import (
-        compact_labeled_table,
-        newest_label,
-        recover_table_swap,
-    )
-
-    _require_local_dir(path)
-    recover_table_swap(path, "vectors")
-    keep_label = newest_label(spark, path, "vectors")
-    compact_labeled_table(
-        spark, path, "vectors", ["bl", "cell"], keep_label,
-        repartition_cols=["cell"],
-    )
+    """Fold appended labels back into bl=0, keeping the newest label
+    (search results unchanged, pinned by test)."""
+    IVF_INDEX.compact(spark, path)

@@ -1375,7 +1375,7 @@ def video_neardup_against_index(
     batch_frame_hashes: DataFrame,
     exclude_label: int | None = None,
 ):
-    """``HammingProbe`` whose ``pairs`` is (base_video, batch_video,
+    """``Probe`` whose ``pairs`` is (base_video, batch_video,
     n_matched): incremental clip-level
     video near-dup — an incoming batch of clips (per-frame dHash
     rows, ``decode_frame_dhash`` output) voted against a PERSISTED

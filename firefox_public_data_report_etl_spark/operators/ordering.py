@@ -281,14 +281,10 @@ def write_loader_checkpoint(
     one-row meta marker lands LAST, so a crash between the two leaves
     a half-written slice that ``read_loader_checkpoint`` never sees.
     ``cursors``: (epoch, shard_id, cursor, prefix_checksum)."""
-    from firefox_public_data_report_etl_spark.operators.incremental import (
-        _require_local_dir,
-    )
     from firefox_public_data_report_etl_spark.sources.tables import (
         partition_overwrite_mode,
     )
 
-    _require_local_dir(store)
     rows = cursors.select(
         "epoch", "shard_id", "cursor", "prefix_checksum"
     ).withColumn("bl", F.lit(batch_label).cast("long"))
@@ -315,9 +311,9 @@ def read_loader_checkpoint(spark, store: str) -> DataFrame:
     present) — a half-written newer slice (crash window) is
     invisible and the previous checkpoint stays authoritative; an
     empty store reads as an empty typed frame (resume-from-zero)."""
-    from pathlib import Path
+    from firefox_public_data_report_etl_spark.sources.tables import fs_exists
 
-    if not (Path(store) / "meta").exists():
+    if not fs_exists(spark, f"{store}/meta"):
         return spark.createDataFrame([], LOADER_CP_SCHEMA)
     committed = spark.read.schema("bl long, committed boolean").parquet(
         f"{store}/meta"

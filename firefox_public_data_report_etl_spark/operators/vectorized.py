@@ -20,6 +20,12 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from firefox_public_data_report_etl_spark.operators.labeled_index import (
+    LabeledIndex,
+    bucket_filter,
+    read_labeled,
+)
+
 
 def _int_matmul_exact(a, b_t):
     """a @ b_t.T with exact int64 results, BLAS-fast where provably
@@ -772,44 +778,24 @@ def score_probed_cells(c, q, k: int, exclude_self: bool = True):
     )
 
 
+IVF_INDEX = LabeledIndex({"vectors": ("cell",)})
+
+
 def build_ivf_index(
     quantized_emb, centroids, path: str, id_col: str = "vec_id"
 ) -> None:
-    """Persist an IVF serving index: vectors land in parquet
-    PARTITIONED BY (bl, cell) — ``bl`` is the batch label (0 = the
-    initial build; ``operators/ivf_lifecycle.py:append_to_ivf_index``
-    adds later batches under their own label, the same labeled-slice
-    lifecycle as the MinHash signature index) — plus the centroid
-    codebook as a side table. The layout IS the index — at serving
-    time a query's probed cells become a partition filter, so the
-    scan plans only nprobe directories per label and the candidate
-    cut happens before any vector IO (same storage-layout trick as
-    the Z-order operator, applied to ANN). The codebook is FROZEN at
-    build time: appends assign against it (that is the IVF model);
+    """Persist an IVF serving index under label 0 of the labeled-index
+    lifecycle (operators/labeled_index.py): vectors partitioned by
+    (bl, cell), plus the centroid codebook as a side table. At serving
+    time a query's probed cells become a partition filter, so the scan
+    plans only nprobe directories per label and the candidate cut
+    happens before any vector IO (same storage-layout trick as the
+    Z-order operator, applied to ANN). The codebook is FROZEN at build
+    time: appends assign against it (that is the IVF model);
     refreshing the codebook is a rebuild."""
     cells = ivf_assign(quantized_emb, centroids, id_col)
-    # repartition ON the partition column first (round-7, same
-    # measured lesson as the minhash signature index): without it
-    # every upstream task writes a sliver into every cell directory —
-    # n_cells x n_tasks files — and probes pay per-file opens instead
-    # of IO (measured 600 files for 150 cells; 4x the opens per
-    # probed cell for zero benefit). One shuffle of fingerprint-sized
-    # rows buys one well-sized file per cell.
-    # overwrite must be explicitly STATIC (same review history as the
-    # minhash build): a leaked session-wide dynamic mode would only
-    # replace the bl=0 leaves, keeping a previous index's appended
-    # batches alive at the same path.
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(quantized_emb.sparkSession, "static"):
-        quantized_emb.join(cells, id_col).withColumn(
-            "bl", F.lit(0)
-        ).repartition("cell").write.partitionBy("bl", "cell").mode(
-            "overwrite"
-        ).parquet(f"{path}/vectors")
-        centroids.write.mode("overwrite").parquet(f"{path}/centroids")
+    IVF_INDEX.write(path, {"vectors": quantized_emb.join(cells, id_col)}, 0)
+    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def search_ivf_index(
@@ -849,16 +835,15 @@ def search_ivf_index(
     if centroids is None:
         centroids = spark.read.parquet(f"{path}/centroids")
     assign = ivf_assign(queries, centroids, id_col, nprobe=nprobe).collect()
-    probed = sorted({r["cell"] for r in assign})
+    probed = {r["cell"] for r in assign}
     qcells = spark.createDataFrame(
         [(r[id_col], r["cell"]) for r in assign],
         f"{id_col} long, cell long",
     )
-    vectors = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("cell").isin(probed)
+    vectors = read_labeled(
+        spark, path, "vectors", bucket_filter({None: probed}, "cell"),
+        exclude_label,
     )
-    if exclude_label is not None:
-        vectors = vectors.filter(F.col("bl") != exclude_label)
     q = queries.join(qcells, id_col).select(
         F.col(id_col).alias("q_id"),
         F.col("q").alias("qa"),

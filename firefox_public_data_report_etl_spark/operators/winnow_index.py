@@ -1,8 +1,5 @@
 """Persisted winnowing fingerprint index — incremental cross-corpus
-OVERLAP detection (round 10), the fourth index lifecycle beside the
-MinHash text index (operators/incremental.py), the IVF embedding
-index (operators/ivf_lifecycle.py), and the Hamming media index
-(operators/hamming_index.py): each document's SELECTED winnowing
+OVERLAP detection (round 10): each document's SELECTED winnowing
 fingerprints (operators/text.py:winnow_fingerprints — ~2/(w+1) of
 gram positions, 8-byte hashes) land in a parquet layout partitioned
 by ``pb = pmod(h, parts)``, and a new batch's plagiarism/containment
@@ -21,48 +18,44 @@ from the probe scan alone, and a probe over (index ∪ batch) df
 equals what a from-scratch rebuild over base ∪ batch would apply
 (pinned by test).
 
-Layout/lifecycle protocol shared with the other three indexes:
-label-sliced appends (delete-then-append idempotency), newest-label
-preservation on compaction via the one swap protocol, crash-recovery
-preamble, and an ``exclude_label`` probe mask for streaming replay.
+Layout, label replace, replay mask and compaction are the shared
+labeled-index lifecycle (operators/labeled_index.py); ``sel`` is
+partitioned by (bl, pb).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
+from firefox_public_data_report_etl_spark.operators.labeled_index import (
+    LabeledIndex,
+    Probe,
+    read_meta,
 )
 
 WINNOW_BUCKET_PARTS = 32  # same fan rationale as the other indexes
+WINNOW_INDEX = LabeledIndex({"sel": ("pb",)})
+META_SCHEMA = (
+    "id_col string, text_col string, k int, w int, max_df int,"
+    " shared_min int, bucket_parts int"
+)
 
 
-@dataclass
-class WinnowProbe:
-    """Explicit probe result (the HammingProbe convention): ``pairs``
-    is the (base_id, batch_id, shared) plan; ``sel_rows`` the CACHED
-    batch selected-fingerprint relation (a caller that also needs
-    within-batch pairs joins these rows instead of re-winnowing);
-    ``close()`` releases the persisted handles after materialization."""
+def _rows(docs: DataFrame, m) -> DataFrame:
+    """Distinct (id, h) selected fingerprints with their bucket."""
+    from firefox_public_data_report_etl_spark.operators.text import (
+        winnow_fingerprints,
+    )
 
-    pairs: DataFrame
-    sel_rows: DataFrame | None = None
-    persisted: list[DataFrame] = field(default_factory=list)
-
-    def close(self) -> None:
-        for h in self.persisted:
-            h.unpersist()
-        self.persisted = []
-        self.sel_rows = None
-
-    def __enter__(self) -> "WinnowProbe":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    return (
+        winnow_fingerprints(
+            docs, id_col=m["id_col"], text_col=m["text_col"], k=m["k"],
+            w=m["w"],
+        )
+        .select(m["id_col"], "h")
+        .distinct()
+        .withColumn("pb", F.pmod(F.col("h"), F.lit(m["bucket_parts"])))
+    )
 
 
 def cross_winnow_pairs(
@@ -121,67 +114,25 @@ def build_winnow_index(
         WINNOW_SHARED_MIN,
     )
 
-    k = FINGERPRINT_GRAM if k is None else k
-    w = WINNOW_W if w is None else w
-    max_df = WINNOW_MAX_DF if max_df is None else max_df
-    shared_min = WINNOW_SHARED_MIN if shared_min is None else shared_min
-    _write_slice(docs, path, 0, id_col, text_col, k, w, bucket_parts,
-                 mode="overwrite")
-    docs.sparkSession.createDataFrame(
-        [(id_col, text_col, k, w, max_df, shared_min, bucket_parts)],
-        "id_col string, text_col string, k int, w int, max_df int,"
-        " shared_min int, bucket_parts int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    m = dict(
+        id_col=id_col,
+        text_col=text_col,
+        k=FINGERPRINT_GRAM if k is None else k,
+        w=WINNOW_W if w is None else w,
+        max_df=WINNOW_MAX_DF if max_df is None else max_df,
+        shared_min=WINNOW_SHARED_MIN if shared_min is None else shared_min,
+        bucket_parts=bucket_parts,
+    )
+    WINNOW_INDEX.build(path, {"sel": _rows(docs, m)}, m, META_SCHEMA)
 
 
 def append_to_winnow_index(
     spark: SparkSession, path: str, docs: DataFrame, batch_label: int
 ) -> None:
-    """Add a batch's fingerprints under their own ``bl`` label with
-    the STORED geometry; idempotent by delete-then-append."""
-    import os
-    import shutil
-
-    _require_local_dir(path)
-    if batch_label == 0:
-        raise ValueError("batch_label 0 is reserved for the initial build")
-    m = spark.read.parquet(f"{path}/meta").head()
-    slice_dir = f"{path}/sel/bl={batch_label}"
-    if os.path.exists(slice_dir):
-        shutil.rmtree(slice_dir)
-    _write_slice(
-        docs, path, batch_label, m["id_col"], m["text_col"], m["k"],
-        m["w"], m["bucket_parts"], mode="append",
-    )
-
-
-def _write_slice(
-    docs: DataFrame,
-    path: str,
-    batch_label: int,
-    id_col: str,
-    text_col: str,
-    k: int,
-    w: int,
-    bucket_parts: int,
-    mode: str,
-) -> None:
-    from firefox_public_data_report_etl_spark.operators.text import (
-        winnow_fingerprints,
-    )
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    sel = winnow_fingerprints(
-        docs, id_col=id_col, text_col=text_col, k=k, w=w
-    ).select(id_col, "h").distinct()
-    with partition_overwrite_mode(docs.sparkSession, "static"):
-        sel.withColumn("bl", F.lit(batch_label)).withColumn(
-            "pb", F.pmod(F.col("h"), F.lit(bucket_parts))
-        ).repartition("pb").write.partitionBy("bl", "pb").mode(
-            mode
-        ).parquet(f"{path}/sel")
+    """Add (or replace) a batch's fingerprints under their own label
+    with the STORED geometry."""
+    m = read_meta(spark, path)
+    WINNOW_INDEX.append(spark, path, batch_label, {"sel": _rows(docs, m)})
 
 
 def probe_winnow_index(
@@ -189,72 +140,36 @@ def probe_winnow_index(
     path: str,
     batch_docs: DataFrame,
     exclude_label: int | None = None,
-) -> WinnowProbe:
-    """``WinnowProbe`` whose ``pairs`` is (base_id, batch_id, shared)
-    for the batch against the index: batch fingerprints from the
-    stored geometry, their distinct ``pb`` buckets as a partition
-    filter, then `cross_winnow_pairs` with the df computed over
-    (touched index rows ∪ batch rows) — EXACT global df because
-    ``pb`` is a function of ``h`` (every indexed row of a touched
-    fingerprint is inside the filtered scan). ``exclude_label`` masks
-    one label partition (streaming replay guard)."""
-    from firefox_public_data_report_etl_spark.operators.text import (
-        winnow_fingerprints,
-    )
-
-    m = spark.read.parquet(f"{path}/meta").head()
+) -> Probe:
+    """``Probe`` whose ``pairs`` is (base_id, batch_id, shared) for the
+    batch against the index: batch fingerprints from the stored
+    geometry probe their touched ``pb`` buckets, then
+    `cross_winnow_pairs` runs with the df computed over (touched index
+    rows ∪ batch rows) — EXACT global df because ``pb`` is a function
+    of ``h`` (every indexed row of a touched fingerprint is inside the
+    filtered scan). ``exclude_label`` masks one label (streaming replay
+    guard)."""
+    m = read_meta(spark, path)
     id_col = m["id_col"]
-    batch_sel = (
-        winnow_fingerprints(
-            batch_docs, id_col=id_col, text_col=m["text_col"],
-            k=m["k"], w=m["w"],
+    batch_sel = _rows(batch_docs, m).persist()
+
+    def verify(idx: DataFrame) -> DataFrame:
+        return cross_winnow_pairs(
+            idx.select(id_col, "h"),
+            batch_sel.select(id_col, "h"),
+            m["max_df"],
+            m["shared_min"],
+            id_col=id_col,
         )
-        .select(id_col, "h")
-        .distinct()
-        .withColumn("pb", F.pmod(F.col("h"), F.lit(m["bucket_parts"])))
-        .persist()
-    )
-    touched = sorted(
-        r["pb"] for r in batch_sel.select("pb").distinct().collect()
-    )
-    if not touched:
-        batch_sel.unpersist()
-        id_type = dict(batch_docs.dtypes)[id_col]
-        return WinnowProbe(
-            pairs=spark.createDataFrame(
-                [], f"base_id {id_type}, batch_id {id_type}, shared long"
-            )
-        )
-    idx = spark.read.parquet(f"{path}/sel").filter(
-        F.col("pb").isin(touched)
-    )
-    if exclude_label is not None:
-        idx = idx.filter(F.col("bl") != exclude_label)
-    pairs = cross_winnow_pairs(
-        idx.select(id_col, "h"),
-        batch_sel.select(id_col, "h"),
-        m["max_df"],
-        m["shared_min"],
-        id_col=id_col,
-    )
-    return WinnowProbe(
-        pairs=pairs, sel_rows=batch_sel, persisted=[batch_sel]
+
+    id_type = dict(batch_docs.dtypes)[id_col]
+    return WINNOW_INDEX.probe(
+        spark, path, batch_sel, verify,
+        f"base_id {id_type}, batch_id {id_type}, shared long",
+        exclude_label,
     )
 
 
 def compact_winnow_index(spark: SparkSession, path: str) -> None:
-    """Fold appended labels into bl=0, preserving the NEWEST label for
-    streaming replay safety — the shared swap protocol."""
-    from firefox_public_data_report_etl_spark.operators.incremental import (
-        compact_labeled_table,
-        newest_label,
-        recover_table_swap,
-    )
-
-    _require_local_dir(path)
-    recover_table_swap(path, "sel")
-    keep_label = newest_label(spark, path, "sel")
-    compact_labeled_table(
-        spark, path, "sel", ["bl", "pb"], keep_label,
-        repartition_cols=["pb"],
-    )
+    """Fold appended labels into bl=0, keeping the newest label."""
+    WINNOW_INDEX.compact(spark, path)

@@ -167,6 +167,88 @@ def partition_overwrite_mode(spark: SparkSession, mode: str):
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` on the JVM Hadoop FileSystem API
+    — the same resolution Spark's own readers and writers use, so a
+    plain path, a ``file:`` URI and an ``hdfs://`` URI all mean what
+    they mean to ``spark.read``. A scheme with no FileSystem on the
+    classpath raises here, before anything is written."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def fs_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _hadoop_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def fs_delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` if it exists. Hadoop reports a
+    failed delete as ``false``, not as an exception; a swallowed
+    failure would leave a stale slice alive, so it raises. (``false``
+    for a path that is already gone is not a failure.)"""
+    fs, p = _hadoop_path(spark, path)
+    if not fs.delete(p, True) and fs.exists(p):
+        raise OSError(f"could not delete {path}")
+
+
+def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to a ``dst`` that must not exist: Hadoop moves a
+    source INTO an existing destination directory, which would nest
+    one table inside another. A ``false`` return raises."""
+    fs, s = _hadoop_path(spark, src)
+    d = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    if fs.exists(d) or not fs.rename(s, d):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, p = _hadoop_path(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(text.encode("utf-8"))
+    finally:
+        out.close()
+
+
+def fs_read_text(spark: SparkSession, path: str) -> str:
+    fs, p = _hadoop_path(spark, path)
+    inp = fs.open(p)
+    try:
+        data = spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(inp)
+    finally:
+        inp.close()
+    return bytes(data).decode("utf-8")
+
+
+def recover_swap(spark: SparkSession, path: str, stage: str, old: str) -> None:
+    """Recovery preamble of ``swap_write``; run it before anything
+    reads ``path``. The live table is missing only between the two
+    renames, while ``old`` holds the complete previous copy: move it
+    back. Then drop leftover siblings (a stage is never trusted — the
+    crash may have cut its write short)."""
+    if not fs_exists(spark, path) and fs_exists(spark, old):
+        fs_rename(spark, old, path)
+    fs_delete(spark, stage)
+    fs_delete(spark, old)
+
+
+def swap_write(spark: SparkSession, writer, path: str, stage: str, old: str) -> None:
+    """Crash-safe table rewrite without a transaction log:
+    ``writer`` (a DataFrameWriter, whose plan may read ``path``)
+    writes the complete new table to ``stage``; the live table moves
+    ASIDE to ``old`` (never deleted while it is the only copy); the
+    stage moves in; only then is ``old`` deleted. ``recover_swap``
+    heals a crash at any point. Rename atomicity is the
+    FileSystem's: atomic on HDFS and POSIX, a copy on most object
+    stores."""
+    writer.parquet(stage)
+    if fs_exists(spark, path):
+        fs_rename(spark, path, old)
+    fs_rename(spark, stage, path)
+    fs_delete(spark, old)
+
+
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
 ) -> None:

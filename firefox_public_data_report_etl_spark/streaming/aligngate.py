@@ -31,15 +31,14 @@ Nothing batch-external is ever read.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
-)
 from firefox_public_data_report_etl_spark.sources.tables import (
+    fs_exists,
+    fs_read_text,
+    fs_write_text,
     partition_overwrite_mode,
 )
 
@@ -49,14 +48,16 @@ VERDICT_SCHEMA = (
 )
 
 
-def _accepted_schema_path(store: str) -> Path:
-    return Path(store) / "accepted_schema.json"
+def _accepted_schema_path(store: str) -> str:
+    return f"{store}/accepted_schema.json"
 
 
-def _persist_accepted_schema(store: str, schema: StructType) -> None:
-    p = _accepted_schema_path(store)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(json.dumps(schema.jsonValue()))
+def _persist_accepted_schema(
+    spark: SparkSession, store: str, schema: StructType
+) -> None:
+    fs_write_text(
+        spark, _accepted_schema_path(store), json.dumps(schema.jsonValue())
+    )
 
 
 def align_scores(batch: DataFrame) -> DataFrame:
@@ -102,7 +103,6 @@ def align_gate_batch(
 ) -> None:
     """One micro-batch: score every pair, land aligned rows under the
     batch label, commit the per-pair verdicts last."""
-    _require_local_dir(store)
     label = batch_id + 1
     verdicts = align_scores(batch).withColumn(
         "bl", F.lit(label).cast("long")
@@ -110,7 +110,7 @@ def align_gate_batch(
     accepted = batch.join(
         verdicts.filter(F.col("aligned")).select("media_id"), "media_id"
     ).withColumn("bl", F.lit(label).cast("long"))
-    _persist_accepted_schema(store, accepted.schema)
+    _persist_accepted_schema(spark, store, accepted.schema)
     with partition_overwrite_mode(spark, "dynamic"):
         accepted.write.partitionBy("bl").mode("overwrite").parquet(
             f"{store}/accepted"
@@ -126,15 +126,17 @@ def read_accepted(spark: SparkSession, store: str) -> DataFrame:
     """Accepted pairs of COMMITTED batches (verdict slice present);
     an all-rejected store reads as empty via the pinned schema."""
     schema_path = _accepted_schema_path(store)
-    if schema_path.exists():
-        schema = StructType.fromJson(json.loads(schema_path.read_text()))
+    if fs_exists(spark, schema_path):
+        schema = StructType.fromJson(
+            json.loads(fs_read_text(spark, schema_path))
+        )
         # a crash inside the very first batch's commit window can leave
         # the accepted slice + schema written with verdicts/ not yet
         # created — the half-written slice must read as empty, not
         # raise (the same contract the accepted/ guard above enforces)
-        if not (Path(store) / "accepted").exists() or not (
-            Path(store) / "verdicts"
-        ).exists():
+        if not fs_exists(spark, f"{store}/accepted") or not fs_exists(
+            spark, f"{store}/verdicts"
+        ):
             return spark.createDataFrame([], schema).drop("bl")
         acc = spark.read.schema(schema).parquet(f"{store}/accepted")
     else:
@@ -150,7 +152,7 @@ def read_accepted(spark: SparkSession, store: str) -> DataFrame:
 
 def read_verdicts(spark: SparkSession, store: str) -> DataFrame:
     """The durable audit trail: one verdict row per scored pair."""
-    if not (Path(store) / "verdicts").exists():
+    if not fs_exists(spark, f"{store}/verdicts"):
         return spark.createDataFrame([], VERDICT_SCHEMA)
     return spark.read.schema(VERDICT_SCHEMA).parquet(f"{store}/verdicts")
 

@@ -29,17 +29,13 @@ budget is exhausted costs a filter, not a shuffle.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from firefox_public_data_report_etl_spark.functions import (
     md5_int_spark_sql,
 )
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
-)
 from firefox_public_data_report_etl_spark.sources.tables import (
+    fs_exists,
     partition_overwrite_mode,
 )
 
@@ -47,12 +43,12 @@ META_SCHEMA = "bl long, stratum string, tokens_taken long"
 
 
 def _consumed(spark: SparkSession, store: str, label: int) -> dict[str, int]:
-    meta = Path(store) / "meta"
-    if not meta.exists():
+    meta = f"{store}/meta"
+    if not fs_exists(spark, meta):
         return {}
     rows = (
         spark.read.schema(META_SCHEMA)
-        .parquet(str(meta))
+        .parquet(meta)
         .filter(F.col("bl") < label)
         .groupBy("stratum")
         .agg(F.sum("tokens_taken").alias("t"))
@@ -73,7 +69,6 @@ def budget_gate_batch(
 ) -> None:
     """One micro-batch of the greedy budget filler. ``batch`` carries
     (id, stratum, tokens); strata without a budget are dropped."""
-    _require_local_dir(store)
     label = batch_id + 1
     used = _consumed(spark, store, label)
     remaining = F.lit(None).cast("long")

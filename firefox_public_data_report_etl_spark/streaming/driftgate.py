@@ -31,14 +31,10 @@ reference histogram is a constant; history is never rescanned.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
-)
 from firefox_public_data_report_etl_spark.sources.tables import (
+    fs_exists,
     partition_overwrite_mode,
 )
 
@@ -108,7 +104,6 @@ def drift_gate_batch(
     batch whole or trip and commit only the audit row."""
     if threshold_ppm is None:
         threshold_ppm = _drift_constants()[1]
-    _require_local_dir(store)
     label = batch_id + 1
     counts = {
         int(r["bin"]): int(r["cnt"])
@@ -150,7 +145,7 @@ def read_accepted(
     batch's stray rows are both invisible. A store where every batch
     tripped has no accepted/ directory at all; that reads as empty,
     not as an error (the breaker doing its job is not a fault)."""
-    if not (Path(store) / "accepted").exists():
+    if not fs_exists(spark, f"{store}/accepted"):
         return spark.createDataFrame(
             [], f"{id_col} long, {text_col} string"
         )

@@ -38,17 +38,13 @@ stage), and writes one label slice. Nothing reprocesses history.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
-)
 from firefox_public_data_report_etl_spark.operators.ordering import (
     assign_contiguous_ids,
 )
 from firefox_public_data_report_etl_spark.sources.tables import (
+    fs_exists,
     partition_overwrite_mode,
 )
 
@@ -56,12 +52,12 @@ META_SCHEMA = "bl long, base long, n_rows long"
 
 
 def _committed_base(spark: SparkSession, store: str, label: int) -> int:
-    meta = Path(store) / "meta"
-    if not meta.exists():
+    meta = f"{store}/meta"
+    if not fs_exists(spark, meta):
         return 0
     rows = (
         spark.read.schema(META_SCHEMA)
-        .parquet(str(meta))
+        .parquet(meta)
         .filter(F.col("bl") < label)
         .agg(F.sum("n_rows").alias("n"))
         .collect()
@@ -81,7 +77,6 @@ def alloc_ids_batch(
     key-ordered, replay-identical. ``batch_id`` is the streaming epoch
     id; the label is ``batch_id + 1`` (0 reserved, matching the index
     gates' convention)."""
-    _require_local_dir(store)
     label = batch_id + 1
     base = _committed_base(spark, store, label)
     keyed = batch.select(key_col).dropDuplicates([key_col])

@@ -31,38 +31,39 @@ one label write. Eval history is never rescanned.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    _require_local_dir,
-)
 from firefox_public_data_report_etl_spark.operators.winnow_index import (
     probe_winnow_index,
 )
 from firefox_public_data_report_etl_spark.sources.tables import (
+    fs_exists,
+    fs_read_text,
+    fs_write_text,
     partition_overwrite_mode,
 )
 
 DECISION_SCHEMA = "doc_id long, leaked boolean, n_partners long, bl long"
 
 
-def _accepted_schema_path(store: str) -> Path:
-    return Path(store) / "accepted_schema.json"
+def _accepted_schema_path(store: str) -> str:
+    return f"{store}/accepted_schema.json"
 
 
-def _persist_accepted_schema(store: str, schema: StructType) -> None:
+def _persist_accepted_schema(
+    spark: SparkSession, store: str, schema: StructType
+) -> None:
     """Pin the accepted slice's schema as a tiny side file (the same
     move as the winnow index's meta row): an all-rejected run leaves
     accepted/ holding only _SUCCESS, and schema inference over that is
     an AnalysisException — with the pinned schema it reads as EMPTY,
     honoring the gate family's all-tripped-reads-as-empty contract.
     Idempotent: replay rewrites the identical JSON."""
-    p = _accepted_schema_path(store)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(json.dumps(schema.jsonValue()))
+    fs_write_text(
+        spark, _accepted_schema_path(store), json.dumps(schema.jsonValue())
+    )
 
 
 def leak_gate_batch(
@@ -74,7 +75,6 @@ def leak_gate_batch(
 ) -> None:
     """One micro-batch: probe the eval index, land clean rows under
     the batch label, commit the per-doc verdicts last."""
-    _require_local_dir(store)
     label = batch_id + 1
     probe = probe_winnow_index(spark, index_path, batch_docs)
     partners = (
@@ -97,7 +97,7 @@ def leak_gate_batch(
     clean = batch_docs.join(
         decisions.filter(~F.col("leaked")).select("doc_id"), "doc_id"
     ).withColumn("bl", F.lit(label).cast("long"))
-    _persist_accepted_schema(store, clean.schema)
+    _persist_accepted_schema(spark, store, clean.schema)
     with partition_overwrite_mode(spark, "dynamic"):
         clean.write.partitionBy("bl").mode("overwrite").parquet(
             f"{store}/accepted"
@@ -117,14 +117,16 @@ def read_accepted(spark: SparkSession, store: str) -> DataFrame:
     holds no data files) reads as EMPTY via the pinned schema, not as
     an inference error — same contract as driftgate.read_accepted."""
     schema_path = _accepted_schema_path(store)
-    if schema_path.exists():
-        schema = StructType.fromJson(json.loads(schema_path.read_text()))
+    if fs_exists(spark, schema_path):
+        schema = StructType.fromJson(
+            json.loads(fs_read_text(spark, schema_path))
+        )
         # accepted slice + schema written but decisions/ not yet
         # created (crash inside the first batch's commit window):
         # the half-written slice is invisible, not an AnalysisException
-        if not (Path(store) / "accepted").exists() or not (
-            Path(store) / "decisions"
-        ).exists():
+        if not fs_exists(spark, f"{store}/accepted") or not fs_exists(
+            spark, f"{store}/decisions"
+        ):
             return spark.createDataFrame([], schema).drop("bl")
         acc = spark.read.schema(schema).parquet(f"{store}/accepted")
     else:
@@ -140,7 +142,7 @@ def read_accepted(spark: SparkSession, store: str) -> DataFrame:
 
 def read_decisions(spark: SparkSession, store: str) -> DataFrame:
     """The durable audit trail: one verdict row per scored doc."""
-    if not (Path(store) / "decisions").exists():
+    if not fs_exists(spark, f"{store}/decisions"):
         return spark.createDataFrame([], DECISION_SCHEMA)
     return spark.read.schema(DECISION_SCHEMA).parquet(
         f"{store}/decisions"

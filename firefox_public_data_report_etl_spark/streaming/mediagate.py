@@ -57,7 +57,7 @@ def media_gate_batch(
     # within-batch pairs reuse the probe's CACHED band rows instead
     # of re-exploding the batch (review fix); the empty-batch probe
     # returns no handle — there is nothing to pair then either
-    bands = probe.band_rows
+    bands = probe.batch_rows
     if bands is not None:
         within = hamming_pairs_from_band_rows(
             bands,

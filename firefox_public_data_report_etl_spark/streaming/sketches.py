@@ -23,11 +23,10 @@ converges to the same table.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firefox_public_data_report_etl_spark.functions import week_start
+from firefox_public_data_report_etl_spark.sources.tables import fs_exists
 from firefox_public_data_report_etl_spark.streaming.upsert import (
     recover_swap,
     swap_write,
@@ -45,13 +44,13 @@ def sketch_batch(
     """Union one micro-batch's partial per-week sketches into the
     target sketch table. One shuffle over the BATCH only (never the
     history); the read-modify-write touches #weeks rows."""
-    recover_swap(target_path)
+    recover_swap(spark, target_path)
     partial = batch.select(
         week_start(F.col("ts")).alias("week"), "user_id"
     ).groupBy("week").agg(
         F.hll_sketch_agg("user_id", F.lit(lgk)).alias("sk")
     )
-    if Path(target_path).exists():
+    if fs_exists(spark, target_path):
         current = spark.read.parquet(target_path)
         merged = (
             current.unionByName(partial)

@@ -19,26 +19,19 @@ wiring are unchanged — only the sink write strategy swaps.
 
 from __future__ import annotations
 
-import os
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from firefox_public_data_report_etl_spark.operators.merge import merge_rows
+from firefox_public_data_report_etl_spark.sources import tables
 
 
-def recover_swap(target_path: str) -> None:
-    """Roll forward/back an interrupted swap so checkpoint replay never
-    merges against a half-written target. Invariant of the swap
-    protocol below: ``._old`` only exists between the two renames, and
-    the target dir is only ever a COMPLETE table (staging is written
-    aside, never in place)."""
-    old = f"{target_path}._old"
-    if Path(old).exists() and not Path(target_path).exists():
-        os.rename(old, target_path)  # crashed between the two renames
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(f"{target_path}._staging", ignore_errors=True)
+def recover_swap(spark: SparkSession, target_path: str) -> None:
+    """The shared swap's recovery preamble (sources/tables.py) on this
+    sink's ``._staging`` / ``._old`` siblings: checkpoint replay never
+    merges against a half-written target."""
+    tables.recover_swap(
+        spark, target_path, f"{target_path}._staging", f"{target_path}._old"
+    )
 
 
 def upsert_batch(
@@ -59,15 +52,13 @@ def upsert_batch(
     (within-batch duplicates collapse arbitrarily-but-deterministically
     first, since MERGE requires unique source keys).
 
-    The target rewrite is crash-safe on a POSIX filesystem: write to a
-    staging dir, rename the live target aside, rename staging into
-    place (both renames atomic), then delete the old copy — and
-    ``recover_swap`` rolls an interrupted swap forward on the next batch.
-    On an object store without atomic rename, swap the sink for a
-    manifest-pointer flip or a MERGE-native table format; the merge
-    logic is unchanged.
+    The target rewrite is the crash-safe staging swap
+    (``swap_write``), and ``recover_swap`` heals an interrupted swap
+    on the next batch. On an object store without atomic rename, swap
+    the sink for a manifest-pointer flip or a MERGE-native table
+    format; the merge logic is unchanged.
     """
-    recover_swap(target_path)
+    recover_swap(spark, target_path)
     if order_col is not None:
         w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
         batch = (
@@ -77,7 +68,7 @@ def upsert_batch(
         )
     else:
         batch = batch.dropDuplicates(keys)
-    if Path(target_path).exists():
+    if tables.fs_exists(spark, target_path):
         target = spark.read.parquet(target_path)
         if order_col is not None:
             # Latest-wins ACROSS batches: rank over union(target, batch)
@@ -102,18 +93,14 @@ def upsert_batch(
 
 
 def swap_write(df: DataFrame, target_path: str) -> None:
-    """Staging-then-swap parquet rewrite: fully materialize the new
-    table aside (the plan may read the files it replaces), then two
-    atomic renames — the crash window `recover_swap` rolls forward. Shared
-    by every foreachBatch sink in this package that rewrites a
-    read-modify-write target."""
-    staging = f"{target_path}._staging"
-    old = f"{target_path}._old"
-    df.write.mode("overwrite").parquet(staging)
-    if Path(target_path).exists():
-        os.rename(target_path, old)
-    os.rename(staging, target_path)
-    shutil.rmtree(old, ignore_errors=True)
+    """Staging-then-swap parquet rewrite of a read-modify-write target
+    (the plan may read the files it replaces) — the shared swap
+    (sources/tables.py) on this sink's sibling names. Shared by every
+    foreachBatch sink in this package that rewrites such a target."""
+    tables.swap_write(
+        df.sparkSession, df.write.mode("overwrite"), target_path,
+        f"{target_path}._staging", f"{target_path}._old",
+    )
 
 
 def stream_upsert(

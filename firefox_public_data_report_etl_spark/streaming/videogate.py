@@ -58,7 +58,7 @@ def video_gate_batch(
     # within-batch frame pairs reuse the probe's CACHED band rows
     # (review fix: re-banding re-paid the explode per trigger), then
     # the same alignment + vote the cross side applies
-    bands = votes.band_rows
+    bands = votes.batch_rows
     if bands is not None:
         m = spark.read.parquet(f"{index_path}/meta").head()
         fp = hamming_pairs_from_band_rows(

@@ -139,10 +139,6 @@ def test_append_replaces_label_and_guards(spark, sf_dir, tmp_path):
     }
     with pytest.raises(ValueError, match="reserved"):
         append_to_hamming_index(spark, path, narrow, 0)
-    with pytest.raises(ValueError, match="local"):
-        append_to_hamming_index(spark, "s3a://b/i", narrow, 1)
-    with pytest.raises(ValueError, match="local"):
-        compact_hamming_index(spark, f"file:{path}")
     sigs.unpersist()
 
 

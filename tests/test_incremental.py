@@ -297,26 +297,6 @@ def test_compaction_preserves_latest_label_for_replay(
     assert not any(b == a for a, b, _ in got)
 
 
-def test_index_lifecycle_rejects_remote_uris(spark, sf_dir, tmp_path):
-    """Review fix (r7 advisor): the append/compact lifecycle uses
-    local-FS delete/rename; a URI path would silently no-op the
-    pre-delete and leave stale band rows alive. It must refuse."""
-    import pytest
-
-    from firefox_public_data_report_etl_spark.operators.incremental import (
-        append_to_minhash_index,
-        compact_minhash_index,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    hs = gram_hash_arrays(docs.filter(F.col("doc_id") % 16 == 1)).cache()
-    for bad in ("s3a://bucket/index", "file:/tmp/index", "hdfs://nn/idx"):
-        with pytest.raises(ValueError, match="local directory"):
-            append_to_minhash_index(spark, bad, hs, 1)
-        with pytest.raises(ValueError, match="local directory"):
-            compact_minhash_index(spark, bad)
-
-
 def test_index_write_restores_overwrite_mode_conf(spark, sf_dir, tmp_path):
     """Review fix (r7 advisor): the index writer pins
     partitionOverwriteMode=static for its own writes but must not

@@ -3,9 +3,8 @@
 contracts pinned here mirror tests/test_incremental.py and the
 streaming neardup gate test: probe==twin equality after appends,
 label-replace idempotency, newest-label-preserving compaction with
-unchanged search results, URI refusal, partition-pruned label
-exclusion, and the streaming gate's sequential-equivalence + replay
-safety."""
+unchanged search results, partition-pruned label exclusion, and the
+streaming gate's sequential-equivalence + replay safety."""
 
 from __future__ import annotations
 
@@ -93,18 +92,13 @@ def test_append_replaces_label_idempotently(spark, sf_dir, tmp_path):
     emb.unpersist()
 
 
-def test_append_rejects_label_zero_and_uris(spark, sf_dir, tmp_path):
+def test_append_rejects_label_zero(spark, sf_dir, tmp_path):
     emb = _emb(spark, sf_dir)
     centroids = emb.filter(F.col("vec_id") % CMOD == 1)
     path = str(tmp_path / "idx")
     build_ivf_index(emb, centroids, path)
     with pytest.raises(ValueError, match="reserved"):
         append_to_ivf_index(spark, path, emb, 0)
-    for bad in (f"file:{path}", "s3a://bucket/idx"):
-        with pytest.raises(ValueError, match="local"):
-            append_to_ivf_index(spark, bad, emb, 1)
-        with pytest.raises(ValueError, match="local"):
-            compact_ivf_index(spark, bad)
 
 
 def test_exclude_label_prunes_and_masks(spark, sf_dir, tmp_path):
