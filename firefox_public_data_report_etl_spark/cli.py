@@ -86,28 +86,32 @@ def cmd_hardware_report(args: argparse.Namespace) -> int:
 
 
 def cmd_user_activity(args: argparse.Namespace) -> int:
-    """User-activity export: runs the 26-CTE weekly DAG, then writes
-    the fxhealth.json + webusage.json pair (user_activity.py:50-115)."""
+    """User-activity export: runs the 26-CTE weekly DAG, collects its
+    rows once (no cache) and shapes both fxhealth.json and
+    webusage.json from them (user_activity.py:50-115). Ratios are
+    scaled x100; a NULL ratio (``SAFE_DIVIDE`` over zero) is written
+    as ``null``."""
     from firefox_public_data_report_etl_spark.plans.user_activity_pipeline import (
         COUNTRY_ALLOWLIST,
         user_activity_weekly,
     )
     from firefox_public_data_report_etl_spark.sources.export import (
+        pct,
         validate_cohorts,
         webusage_records,
     )
 
     spark = _session("fpdr-user-activity")
-    weekly = user_activity_weekly(
+    rows = user_activity_weekly(
         spark.read.parquet(args.clients_path),
         spark.read.parquet(args.countries_path),
         spark.read.parquet(args.buildhub_path),
         date_from=args.date_from,
         date_to=args.date_to,
-    ).cache()
+    ).collect()
 
     fxhealth: dict[str, list[dict]] = {}
-    for row in weekly.collect():
+    for row in rows:
         d = row.asDict()
         day = d["submission_date"]
         fxhealth.setdefault(d["country_name"], []).append(
@@ -117,12 +121,12 @@ def cmd_user_activity(args: argparse.Namespace) -> int:
                     "avg_intensity": d["intensity"],
                     "MAU": d["mau"],
                     "avg_daily_usage(hours)": d["avg_hours_usage_daily"],
-                    "pct_new_user": d["new_profile_rate"] * 100,
-                    "pct_latest_version": d["latest_version_ratio"] * 100,
+                    "pct_new_user": pct(d["new_profile_rate"]),
+                    "pct_latest_version": pct(d["latest_version_ratio"]),
                 },
             }
         )
-    webusage = webusage_records(weekly)
+    webusage = webusage_records(rows)
 
     # Output contract (user_activity.py:85-101): countries must match
     # the allowlist exactly — but only those present in the data range.
@@ -137,7 +141,7 @@ def cmd_user_activity(args: argparse.Namespace) -> int:
     out = Path(args.output_dir)
     _write_json(out / "fxhealth.json", fxhealth, args.dry_run)
     _write_json(out / "webusage.json", webusage, args.dry_run)
-    print(f"user_activity: {weekly.count()} weekly rows, {len(webusage)} countries")
+    print(f"user_activity: {len(rows)} weekly rows, {len(webusage)} countries")
     return 0
 
 

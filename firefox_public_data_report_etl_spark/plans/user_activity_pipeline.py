@@ -10,28 +10,40 @@ CTE → Spark mapping (SURVEY.md §2 ids in parens):
   sample (:8-46)            fan-out to country+'Worldwide' (J2),
                             broadcast country-name join (J1), allowlist
                             + date/sample/outlier filters (F2-F5)
-  sample_addons (:47-70)    empty-preserving unnest (J3)
-  mau_wau (:71-84)          conditional COUNT DISTINCT (A3)
-  daily_usage (:85-112)     two-level AVG with HAVING (A4/F8)
-  intensity (:113-126)      bitcount_lowest_7 ratio-of-sums (A5/X8)
-  new_profile_rate(:127-140) trailing-set-bit conditional ratio (A6/X9)
+  mau_wau (:71-84), daily_usage (:85-112), intensity (:113-126),
+  new_profile_rate (:127-140), has_addon (:258-280)
+                            folded into one two-level aggregate: per
+                            (week, country, client) conditional flags,
+                            row counts and sums; then per (week,
+                            country) distinct counts as counts of flags
+                            (A3), AVG of per-user AVGs with HAVING
+                            (A4/F8), bitcount_lowest_7 and trailing-
+                            set-bit ratios of sums (A5/A6, X8/X9), and
+                            the blocklisted-addon flag as an EXISTS
+                            over active_addons (A12/F10)
   latest releases (:141-197) as-of range join + max (J5/A7/A8/X7)
-  addon/locale branches (:198-325) blocklisted distinct counts
-                            (A10-A12/F10), ratio joins (J6/J7),
-                            ARRAY_AGG top-K (A13)
-  final join (:326-361)     8-way composite-key join (J8) + NOT IN (F9)
+  sample_addons (:47-70)    empty-preserving unnest (J3)
+  addon/locale top-K (:198-257, :281-325) blocklisted distinct counts
+                            (A10/A11/F10), ARRAY_AGG top-K on user_count
+                            (A13); ratio = user_count / wau (J6/J7) by a
+                            transform after the final join
+  final join (:326-361)     4-way composite-key join (J8) + NOT IN (F9);
+                            the reference's inner-join key semantics
+                            are kept by count tests on the folded rows
 
-Scale notes: `sample` is cached before the 8-branch fan-out (Spark
-re-inlines CTEs); countries and latest_releases broadcast; every other
-shuffle keys on (week_start, country_name) so AQE can coalesce and the
-branches co-partition.
+Scale notes: nothing is cached; each branch re-reads `sample` from the
+source (column pruning gives each a narrow scan). countries and
+latest_releases broadcast. Every aggregate that feeds the final join
+groups on (week_start, country_name) in that order, so the four sides
+are hash-partitioned alike and a sort-merge join needs no further
+exchange; at report size AQE broadcasts them instead.
 """
 
 from __future__ import annotations
 
 from datetime import date
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from firefox_public_data_report_etl_spark.functions import (
     bitcount_lowest_7,
@@ -123,31 +135,38 @@ def sample_cte(
     )
 
 
+def _active() -> Column:
+    """A last-day-of-week row of a client seen in the trailing week."""
+    return F.col("is_last_day_of_week") & (F.col("days_since_seen") < 7)
+
+
 def sample_addons_cte(sample: DataFrame) -> DataFrame:
     """The empty-preserving lateral unnest (J3): clients with zero
-    addons keep one NULL-addon row so they stay in COUNT DISTINCT
-    denominators."""
-    weekly = sample.filter(
-        (F.col("days_since_seen") < 7) & F.col("is_last_day_of_week")
+    addons keep one NULL-addon row so they stay in the per-addon
+    groups (a NULL addon counts no user)."""
+    exploded = explode_preserving_empty(
+        sample.filter(_active()), F.col("active_addons"), "addon"
     )
-    exploded = explode_preserving_empty(weekly, F.col("active_addons"), "addons")
-    return exploded.select(
-        "week_start",
-        "country_name",
-        "client_id",
-        "locale",
-        F.col("addons.is_system").alias("is_system"),
-        F.col("addons.foreign_install").alias("foreign_install"),
-        F.col("addons.addon_id").alias("addon_id"),
-        F.col("addons.name").alias("addon_name"),
-    )
+    return exploded.select("week_start", "country_name", "client_id", "addon")
 
 
-def _blocklist_ok() -> F.Column:
-    ok = (F.col("is_system") == False) & (F.col("foreign_install") == False)  # noqa: E712
+def _addon_ok(addon: Column) -> Column:
+    """The addon counts: not a system or foreign install, and no
+    blocklist pattern matches its id (NULL for a NULL addon)."""
+    ok = (addon["is_system"] == False) & (addon["foreign_install"] == False)  # noqa: E712
     for p in ADDON_BLOCKLIST:
-        ok = ok & ~F.col("addon_id").like(p)
+        ok = ok & ~addon["addon_id"].like(p)
     return ok
+
+
+def _ratios(top: str, name: str) -> Column:
+    """``top``'s (name, user_count) structs as (name, user_count / wau)."""
+    return F.transform(
+        F.col(top),
+        lambda t: F.struct(
+            t[name].alias(name), (t["user_count"] / F.col("wau")).alias("ratio")
+        ),
+    )
 
 
 def user_activity_weekly(
@@ -160,56 +179,69 @@ def user_activity_weekly(
     """The full 26-CTE DAG → one weekly metrics row per (week,
     country): schema identical to the reference output table
     (FIXTURES.md §6)."""
-    sample = sample_cte(clients, countries, date_from, date_to).cache()
-    last_day = sample.filter(F.col("is_last_day_of_week"))
+    sample = sample_cte(clients, countries, date_from, date_to)
+    keys = ["week_start", "country_name"]
+    last_day = F.col("is_last_day_of_week")
+    active = _active()
 
-    mau_wau = last_day.groupBy("week_start", "country_name").agg(
-        F.countDistinct(
-            F.when(F.col("days_since_seen") < 28, F.col("client_id"))
-        ).alias("mau"),
-        F.countDistinct(
-            F.when(F.col("days_since_seen") < 7, F.col("client_id"))
-        ).alias("wau"),
+    # Client-week level, the grain of daily_usage's by_user (a NULL
+    # client_id is one group here, as there), grouped in by_user's key
+    # order: the shuffle then hashes alike, and the AVG of per-user
+    # averages sums its doubles in the same order. Row counts and sums
+    # stay integers, so the ratios below divide the same operands as
+    # the reference's per-branch aggregates.
+    per_client = sample.groupBy("client_id", "country_name", "week_start").agg(
+        F.max(last_day & (F.col("days_since_seen") < 28)).alias("monthly"),
+        F.max(active).alias("weekly"),
+        F.max(active & F.exists("active_addons", _addon_ok)).alias("has_addon"),
+        F.count(F.when(active, True)).alias("active_rows"),
+        F.sum(F.when(active, bitcount_lowest_7(F.col("days_seen_bits")))).alias(
+            "seen_days"
+        ),
+        F.count(
+            F.when(
+                last_day
+                & (pos_of_trailing_set_bit(F.col("days_created_profile_bits")) < 7),
+                True,
+            )
+        ).alias("new_rows"),
+        F.count(
+            F.when(
+                last_day & (pos_of_trailing_set_bit(F.col("days_seen_bits")) < 7),
+                True,
+            )
+        ).alias("recent_rows"),
+        F.avg(
+            F.when(F.col("days_since_seen") == 0, F.col("subsession_hours_sum"))
+        ).alias("avg_hours"),
     )
-
-    by_user = (
-        sample.filter(F.col("days_since_seen") == 0)
-        .groupBy("client_id", "country_name", "week_start")
-        .agg(F.avg("subsession_hours_sum").alias("avg_hours_usage_daily_per_user"))
-        .filter(F.col("avg_hours_usage_daily_per_user") < 24)
-    )
-    daily_usage = by_user.groupBy("country_name", "week_start").agg(
-        F.avg("avg_hours_usage_daily_per_user").alias("avg_hours_usage_daily")
-    )
-
-    intensity = (
-        last_day.filter(F.col("days_since_seen") < 7)
-        .groupBy("week_start", "country_name")
+    # Week-country level. Counting non-NULL client_ids over one row per
+    # client is the reference's COUNT(DISTINCT client_id). The reference
+    # inner-joins its branches, so a (week, country) is kept only if
+    # some last-day row was seen in the trailing week (intensity,
+    # has_addon, top-K) and some user has a daily average (daily_usage);
+    # existence is tested by counts because intensity may be NULL.
+    user_hours = F.when(F.col("avg_hours") < 24, F.col("avg_hours"))
+    folded = (
+        per_client.groupBy(*keys)
         .agg(
-            safe_div(
-                F.sum(bitcount_lowest_7(F.col("days_seen_bits"))),
-                F.count("*"),
-            ).alias("intensity")
+            F.count(F.when(F.col("monthly"), F.col("client_id"))).alias("mau"),
+            F.count(F.when(F.col("weekly"), F.col("client_id"))).alias("wau"),
+            F.avg(user_hours).alias("avg_hours_usage_daily"),
+            F.count(user_hours).alias("users"),
+            safe_div(F.sum("seen_days"), F.sum("active_rows")).alias("intensity"),
+            F.sum("active_rows").alias("active_rows"),
+            safe_div(F.sum("new_rows"), F.sum("recent_rows")).alias(
+                "new_profile_rate"
+            ),
+            F.count(F.when(F.col("has_addon"), F.col("client_id"))).alias(
+                "addon_users"
+            ),
         )
+        .filter((F.col("users") > 0) & (F.col("active_rows") > 0))
     )
 
-    new_profile_rate = last_day.groupBy("week_start", "country_name").agg(
-        safe_div(
-            F.count(
-                F.when(
-                    pos_of_trailing_set_bit(F.col("days_created_profile_bits")) < 7,
-                    True,
-                )
-            ),
-            F.count(
-                F.when(
-                    pos_of_trailing_set_bit(F.col("days_seen_bits")) < 7, True
-                )
-            ),
-        ).alias("new_profile_rate")
-    )
-
-    active_weekly = last_day.filter(F.col("days_since_seen") < 7).select(
+    active_weekly = sample.filter(active & F.col("client_id").isNotNull()).select(
         "country_name",
         "client_id",
         major_version(F.col("app_version")).alias("major_version"),
@@ -231,15 +263,14 @@ def user_activity_weekly(
         )
     )
     with_latest = (
-        active_weekly.filter(F.col("client_id").isNotNull())
-        .join(
+        active_weekly.join(
             F.broadcast(latest_releases),
             F.col("day") <= F.col("last_day_seen"),
         )
         .groupBy("client_id", "country_name", "major_version", "week_start")
         .agg(F.max("latest_major_version").alias("latest_major_version"))
     )
-    latest_version_ratio = with_latest.groupBy("country_name", "week_start").agg(
+    latest_version_ratio = with_latest.groupBy(*keys).agg(
         safe_div(
             F.count(
                 F.when(
@@ -250,69 +281,48 @@ def user_activity_weekly(
         ).alias("latest_version_ratio")
     )
 
-    sample_addons = sample_addons_cte(sample).cache()
-    addon_counts = sample_addons.groupBy(
-        "week_start", "country_name", "addon_id", "addon_name"
-    ).agg(
-        F.countDistinct(F.when(_blocklist_ok(), F.col("client_id"))).alias(
-            "user_count"
+    # Top-K ranks on user_count: within a group, the ratio user_count /
+    # wau orders the same way, and ties still break on the name.
+    addon_counts = (
+        sample_addons_cte(sample)
+        .groupBy(
+            *keys,
+            F.col("addon.addon_id").alias("addon_id"),
+            F.col("addon.name").alias("addon_name"),
+        )
+        .agg(
+            F.countDistinct(
+                F.when(_addon_ok(F.col("addon")), F.col("client_id"))
+            ).alias("user_count")
         )
     )
-    addon_ratios = addon_counts.join(
-        mau_wau, ["week_start", "country_name"]
-    ).select(
-        "week_start",
-        "country_name",
-        "addon_name",
-        (F.col("user_count") / F.col("wau")).alias("ratio"),
-    )
     top_addons = top_k_array(
-        addon_ratios,
-        ["week_start", "country_name"],
-        F.col("ratio"),
-        F.struct(F.col("addon_name"), F.col("ratio")),
+        addon_counts,
+        keys,
+        F.col("user_count"),
+        F.struct("addon_name", "user_count"),
         k=10,
         out_col="top_addons",
     )
 
-    has_addon = sample_addons.groupBy("week_start", "country_name").agg(
-        (
-            F.countDistinct(F.when(_blocklist_ok(), F.col("client_id")))
-            / F.countDistinct("client_id")
-        ).alias("has_addon_ratio")
-    )
-
     locale_counts = (
-        last_day.filter(F.col("days_since_seen") < 7)
-        .groupBy("week_start", "country_name", "locale")
+        sample.filter(active)
+        .groupBy(*keys, "locale")
         .agg(F.countDistinct("client_id").alias("user_count"))
     )
-    locale_ratios = locale_counts.join(
-        mau_wau, ["week_start", "country_name"]
-    ).select(
-        "week_start",
-        "country_name",
-        "locale",
-        (F.col("user_count") / F.col("wau")).alias("ratio"),
-    )
     top_locales = top_k_array(
-        locale_ratios,
-        ["week_start", "country_name"],
-        F.col("ratio"),
-        F.struct(F.col("locale"), F.col("ratio")),
+        locale_counts,
+        keys,
+        F.col("user_count"),
+        F.struct("locale", "user_count"),
         k=5,
         out_col="top_locales",
     )
 
-    keys = ["week_start", "country_name"]
     out = (
-        mau_wau.join(daily_usage, keys)
-        .join(intensity, keys)
-        .join(new_profile_rate, keys)
-        .join(latest_version_ratio, keys)
+        folded.join(latest_version_ratio, keys)
         .join(top_addons, keys)
         .join(top_locales, keys)
-        .join(has_addon, keys)
         .filter(~F.col("week_start").isin(list(ARMAGADDON_WEEKS)))
     )
     return out.select(
@@ -323,7 +333,7 @@ def user_activity_weekly(
         "intensity",
         "new_profile_rate",
         "latest_version_ratio",
-        "top_addons",
-        "has_addon_ratio",
-        "top_locales",
+        _ratios("top_addons", "addon_name").alias("top_addons"),
+        (F.col("addon_users") / F.col("wau")).alias("has_addon_ratio"),
+        _ratios("top_locales", "locale").alias("top_locales"),
     )

@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 
 def write_json_report(
@@ -74,15 +74,22 @@ def fxhealth_records(weekly: DataFrame) -> dict[str, list[dict]]:
     return out
 
 
-def webusage_records(weekly: DataFrame) -> dict[str, list[dict]]:
+def pct(ratio: float | None) -> float | None:
+    """X18 x100 scaling that passes a NULL ratio (a ``SAFE_DIVIDE``
+    over a zero denominator) through as JSON ``null``."""
+    return None if ratio is None else ratio * 100
+
+
+def webusage_records(rows: list[Row]) -> dict[str, list[dict]]:
     """P3, second shape (user_activity.py:70-83): the webusage.json
     twin of ``fxhealth_records`` — per-country rows with a locale
     ratio map, a top-10-addon ratio map, and pct_addon, all x100
-    (X18). ``weekly`` is the ``user_activity_weekly`` output (native
-    schema: submission_date, top_addons, top_locales,
-    has_addon_ratio)."""
+    (X18, NULL kept as ``null``). ``rows`` are the collected
+    ``user_activity_weekly`` rows (native schema: submission_date,
+    top_addons, top_locales, has_addon_ratio); the caller collects
+    once and shapes fxhealth.json from the same rows."""
     out: dict[str, list[dict]] = {}
-    for row in weekly.collect():
+    for row in rows:
         d = row.asDict(recursive=True)
         out.setdefault(d["country_name"], []).append(
             {
@@ -96,16 +103,16 @@ def webusage_records(weekly: DataFrame) -> dict[str, list[dict]]:
                     # placeholder rows (J3) — denominator-only, never
                     # report keys.
                     "locale": {
-                        loc["locale"]: loc["ratio"] * 100
+                        loc["locale"]: pct(loc["ratio"])
                         for loc in (d["top_locales"] or [])
                         if loc["locale"] is not None
                     },
                     "top10addons": {
-                        a["addon_name"]: a["ratio"] * 100
+                        a["addon_name"]: pct(a["ratio"])
                         for a in (d["top_addons"] or [])
                         if a["addon_name"] is not None
                     },
-                    "pct_addon": d["has_addon_ratio"] * 100,
+                    "pct_addon": pct(d["has_addon_ratio"]),
                 },
             }
         )

@@ -79,6 +79,61 @@ def test_cli_user_activity_dry_run(spark, ua_inputs, tmp_path):
     assert not out.exists()
 
 
+def test_cli_user_activity_null_ratio_exports_null(spark, ua_inputs, tmp_path):
+    """A SAFE_DIVIDE over a zero denominator is NULL and must be
+    exported as JSON null, not crash the x100 scaling: the only Brazil
+    client's lowest set seen-bit is 7, so no row counts as recently
+    seen and Brazil's new_profile_rate is NULL."""
+    from firefox_public_data_report_etl_spark.plans.user_activity_pipeline import (
+        COUNTRY_ALLOWLIST,
+    )
+    from tests.test_user_activity_pipeline import CLIENTS_SCHEMA, SUNDAY
+
+    root = tmp_path / "inputs"
+    brazil = spark.createDataFrame(
+        [(SUNDAY, "b1", 1, "BR", 0, 1.0, 1 << 7, 0, "100.0", "pt-BR", [])],
+        CLIENTS_SCHEMA,
+    )
+    _clients(spark).unionByName(brazil).write.parquet(str(root / "clients"))
+    _countries(spark).unionByName(
+        spark.createDataFrame([("BR", "Brazil")], ["code", "name"])
+    ).write.parquet(str(root / "countries"))
+    out = tmp_path / "reports"
+    rc = main(
+        [
+            "user_activity",
+            "--clients_path", str(root / "clients"),
+            "--countries_path", str(root / "countries"),
+            "--buildhub_path", str(ua_inputs / "buildhub"),
+            "--output_dir", str(out),
+            "--date_to", "2025-01-01",
+        ]
+    )
+    assert rc == 0
+    assert '"pct_new_user": null' in (out / "fxhealth.json").read_text()
+    fxhealth = json.loads((out / "fxhealth.json").read_text())
+    br = fxhealth["Brazil"][0]["metrics"]
+    assert br["pct_new_user"] is None
+    assert br["MAU"] == 1 and br["pct_latest_version"] == 100.0
+    assert set(fxhealth) <= set(COUNTRY_ALLOWLIST)
+
+
+def test_cli_user_activity_leaves_no_cache(spark, ua_inputs, tmp_path):
+    spark.catalog.clearCache()
+    rc = main(
+        [
+            "user_activity",
+            "--clients_path", str(ua_inputs / "clients"),
+            "--countries_path", str(ua_inputs / "countries"),
+            "--buildhub_path", str(ua_inputs / "buildhub"),
+            "--output_dir", str(tmp_path / "reports"),
+            "--date_to", "2025-01-01",
+        ]
+    )
+    assert rc == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_cli_hardware_report(spark, tmp_path):
     inp = tmp_path / "hardware_input"
     _input_df(spark).write.mode("overwrite").parquet(str(inp))

@@ -389,3 +389,30 @@ def test_tpch2_top10_uses_take_ordered(spark, sf_dir):
         plan = _executed_plan(spark, name, sf_dir)
         assert "TakeOrderedAndProject" in plan, name
         assert "GlobalSort" not in plan, name
+
+
+# Shuffle stages in the final AQE plan of user_activity_weekly over the
+# hand fixture: one two-level aggregate for the five (week, country)
+# branches, plus latest-version, top-addons and top-locales branches
+# and their 4-way join. The 8-branch DAG over a cached `sample` had 19.
+USER_ACTIVITY_MAX_SHUFFLE_STAGES = 11
+
+
+def test_user_activity_weekly_plan_shape(spark):
+    from firefox_public_data_report_etl_spark.plans.user_activity_pipeline import (
+        user_activity_weekly,
+    )
+    from tests.test_user_activity_pipeline import _buildhub, _clients, _countries
+
+    df = user_activity_weekly(
+        _clients(spark), _countries(spark), _buildhub(spark),
+        date_to="2025-01-01",
+    )
+    df.collect()  # finalize AQE re-planning
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    stages = sum(
+        1 for line in plan.splitlines()
+        if line.lstrip(" :+-").startswith("ShuffleQueryStage")
+    )
+    assert stages <= USER_ACTIVITY_MAX_SHUFFLE_STAGES, plan
