@@ -275,30 +275,27 @@ def resume_suffix(
 def write_loader_checkpoint(
     spark, store: str, batch_label: int, cursors: DataFrame
 ) -> None:
-    """Persist one epoch-checkpoint slice under its own ``bl`` label
-    with the gate family's two-phase commit: cursor rows land FIRST
-    (scoped dynamic overwrite — replay REPLACES the slice), the
-    one-row meta marker lands LAST, so a crash between the two leaves
-    a half-written slice that ``read_loader_checkpoint`` never sees.
+    """Persist one epoch-checkpoint slice under its own ``bl`` label,
+    commit-last (``streaming/gate.py``): cursor rows land FIRST, the
+    one-row meta marker LAST, so a crash between the two leaves a
+    half-written slice that ``read_loader_checkpoint`` never sees.
     ``cursors``: (epoch, shard_id, cursor, prefix_checksum)."""
-    from firefox_public_data_report_etl_spark.sources.tables import (
-        partition_overwrite_mode,
+    from firefox_public_data_report_etl_spark.streaming.gate import (
+        write_label_slice,
     )
 
-    rows = cursors.select(
-        "epoch", "shard_id", "cursor", "prefix_checksum"
-    ).withColumn("bl", F.lit(batch_label).cast("long"))
-    with partition_overwrite_mode(spark, "dynamic"):
-        rows.write.partitionBy("bl").mode("overwrite").parquet(
-            f"{store}/cursors"
-        )
-    meta = spark.createDataFrame(
-        [(int(batch_label), True)], "bl long, committed boolean"
+    write_label_slice(
+        cursors.select("epoch", "shard_id", "cursor", "prefix_checksum"),
+        f"{store}/cursors",
+        batch_label,
     )
-    with partition_overwrite_mode(spark, "dynamic"):
-        meta.write.partitionBy("bl").mode("overwrite").parquet(
-            f"{store}/meta"
-        )
+    write_label_slice(
+        spark.createDataFrame(
+            [(int(batch_label), True)], "bl long, committed boolean"
+        ),
+        f"{store}/meta",
+        batch_label,
+    )
 
 
 LOADER_CP_SCHEMA = (
@@ -311,15 +308,16 @@ def read_loader_checkpoint(spark, store: str) -> DataFrame:
     present) — a half-written newer slice (crash window) is
     invisible and the previous checkpoint stays authoritative; an
     empty store reads as an empty typed frame (resume-from-zero)."""
-    from firefox_public_data_report_etl_spark.sources.tables import fs_exists
+    from firefox_public_data_report_etl_spark.streaming.gate import (
+        read_committed,
+    )
 
-    if not fs_exists(spark, f"{store}/meta"):
-        return spark.createDataFrame([], LOADER_CP_SCHEMA)
-    committed = spark.read.schema("bl long, committed boolean").parquet(
-        f"{store}/meta"
+    return read_committed(
+        spark,
+        store,
+        "meta",
+        "bl long, committed boolean",
+        data_dir="cursors",
+        committed=lambda meta: meta.agg(F.max("bl").alias("bl")),
+        schema=LOADER_CP_SCHEMA + ", bl long",
     )
-    newest = committed.agg(F.max("bl").alias("bl"))
-    cur = spark.read.schema(LOADER_CP_SCHEMA + ", bl long").parquet(
-        f"{store}/cursors"
-    )
-    return cur.join(F.broadcast(newest), "bl").drop("bl")

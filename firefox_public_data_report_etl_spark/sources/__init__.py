@@ -5,7 +5,6 @@ from firefox_public_data_report_etl_spark.sources.tables import (
     load_table,
     load_tables,
     normalize_timestamps,
-    partition_overwrite_mode,
     write_partitioned,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "load_table",
     "load_tables",
     "normalize_timestamps",
-    "partition_overwrite_mode",
     "write_partitioned",
 ]

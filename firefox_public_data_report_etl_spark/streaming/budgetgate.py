@@ -1,30 +1,23 @@
-"""Streaming token-budget gate: ingestion-time mixture capping.
+"""Streaming token-budget gate: ingestion-time mixture capping, on the
+commit-last store protocol of ``streaming/gate.py``.
 
 The batch form (plans/loader.py:corpus_mixture_token_budget) fills
 each stratum's token budget over the WHOLE corpus in md5-rank order.
-At ingestion time the corpus arrives incrementally, so the greedy
-filler runs per micro-batch against the budget REMAINING after every
-committed earlier batch: within a batch, rows are taken in the same
-portable (md5, id) order; a document is accepted iff its stratum's
-running total STARTS inside the budget (the batch query's exact
-start-inside rule, applied at the stream's arrival grain).
+Here the greedy filler runs per micro-batch against the budget
+REMAINING after every committed earlier label: within a batch, rows
+are taken in the same portable (md5, id) order, and a document is
+accepted iff its stratum's running total STARTS inside the budget
+(the batch query's start-inside rule, at the stream's arrival
+grain). Strata without a budget are dropped.
 
-Exactly-once by the same label protocol as the other five gates
-(neardup / embed / media / video / idalloc):
-
-- accepted rows land under the batch's own ``bl`` label via scoped
-  dynamic overwrite — replay REPLACES the slice with identical rows;
-- the consumed-so-far state is the SUM of committed meta rows with
-  label < this label (per stratum) — a crashed attempt's own
-  half-written slice can never move its own baseline;
-- meta (label, stratum, tokens_taken) is written LAST and is a pure
-  function of (earlier meta, batch content) — replay rewrites it
-  bit-identically.
+The consumed-so-far state is the sum of committed meta rows
+(label, stratum, tokens_taken) with a smaller label, so a crashed
+attempt's own slice never moves its own baseline. A batch that takes
+nothing commits one zero row so its label still counts as committed.
 
 Scale: per trigger this reads one tiny meta table (labels × strata
 rows), ranks the batch with ONE stratum-partitioned window, and
-writes one label slice. History is never rescanned; a stratum whose
-budget is exhausted costs a filter, not a shuffle.
+writes one label slice. History is never rescanned.
 """
 
 from __future__ import annotations
@@ -34,21 +27,19 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from firefox_public_data_report_etl_spark.functions import (
     md5_int_spark_sql,
 )
-from firefox_public_data_report_etl_spark.sources.tables import (
-    fs_exists,
-    partition_overwrite_mode,
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    commit_batch,
+    read_committed,
+    read_marker,
+    start_stream,
 )
 
 META_SCHEMA = "bl long, stratum string, tokens_taken long"
 
 
 def _consumed(spark: SparkSession, store: str, label: int) -> dict[str, int]:
-    meta = f"{store}/meta"
-    if not fs_exists(spark, meta):
-        return {}
     rows = (
-        spark.read.schema(META_SCHEMA)
-        .parquet(meta)
+        read_marker(spark, store, "meta", META_SCHEMA)
         .filter(F.col("bl") < label)
         .groupBy("stratum")
         .agg(F.sum("tokens_taken").alias("t"))
@@ -93,13 +84,8 @@ def budget_gate_batch(
             id_col,
             stratum_col,
             F.col(tokens_col).cast("long").alias(tokens_col),
-            F.lit(label).cast("long").alias("bl"),
         )
     )
-    with partition_overwrite_mode(spark, "dynamic"):
-        taken.write.partitionBy("bl").mode("overwrite").parquet(
-            f"{store}/accepted"
-        )
     meta_rows = (
         taken.groupBy(stratum_col)
         .agg(F.sum(tokens_col).alias("tokens_taken"))
@@ -110,24 +96,15 @@ def budget_gate_batch(
         )
     )
     if not meta_rows.take(1):
-        # commit an explicit zero row so the label counts as committed
-        # (read contract: accepted slices without meta are invisible)
         meta_rows = spark.createDataFrame(
             [(label, "__none__", 0)], META_SCHEMA
         )
-    with partition_overwrite_mode(spark, "dynamic"):
-        meta_rows.write.partitionBy("bl").mode("overwrite").parquet(
-            f"{store}/meta"
-        )
+    commit_batch(store, label, taken, meta_rows)
 
 
 def read_accepted(spark: SparkSession, store: str) -> DataFrame:
-    """Committed accepted rows (label slices whose meta exists)."""
-    acc = spark.read.parquet(f"{store}/accepted")
-    meta = spark.read.schema(META_SCHEMA).parquet(f"{store}/meta")
-    return acc.join(
-        meta.select("bl").distinct(), "bl", "left_semi"
-    ).drop("bl")
+    """Accepted rows of committed labels."""
+    return read_committed(spark, store, "meta", META_SCHEMA)
 
 
 def stream_budget_gate(
@@ -139,21 +116,11 @@ def stream_budget_gate(
     stratum_col: str = "lang",
     tokens_col: str = "tokens",
 ):
-    """writeStream wiring; availableNow so backfills drain and stop."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: budget_gate_batch(
-                b.sparkSession,
-                b,
-                store,
-                budgets,
-                bid,
-                id_col,
-                stratum_col,
-                tokens_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``stream``."""
+    return start_stream(
+        stream,
+        checkpoint,
+        lambda spark, b, bid: budget_gate_batch(
+            spark, b, store, budgets, bid, id_col, stratum_col, tokens_col
+        ),
     )

@@ -1,41 +1,30 @@
-"""Streaming drift gate: the data-quality circuit breaker.
+"""Streaming drift gate: the data-quality circuit breaker, on the
+commit-last store protocol of ``streaming/gate.py``.
 
 The batch drift audit (plans/quality.py:corpus_drift_audit) scores a
-whole release against its parent. At ingestion time the equivalent
-control is per micro-batch: bin the arriving documents with the SAME
-literal edges, score the batch against a FIXED reference histogram
-with the same integer-exact TVD-in-ppm formula, and admit or reject
-the batch WHOLE — a drifted batch (upstream regression, schema creep,
-a scraper gone wrong) must not poison the corpus one accepted row at
-a time, which is why this gate's unit of acceptance is the batch, not
-the row (every other gate here filters rows; this one trips).
+whole release against its parent. Here each micro-batch is binned
+with the SAME literal edges and scored against a FIXED reference
+histogram with the same integer-exact TVD-in-ppm formula. The batch
+is admitted or rejected WHOLE: a drifted batch (upstream regression,
+schema creep, a scraper gone wrong) must not poison the corpus one
+accepted row at a time. A rejected batch lands no rows but still
+commits its verdict row (label, n_rows, tvd_ppm, accepted), so the
+trip is a durable, replayable audit record.
 
-Exactly-once by the same label protocol as the other six surfaces
-(neardup / embed / media / video / idalloc / budget):
-
-- accepted batches land under the batch's own ``bl`` label via scoped
-  dynamic overwrite — replay REPLACES the slice with identical rows;
-- the verdict meta row (label, n_rows, tvd_ppm, accepted) is written
-  LAST and is a pure function of (batch content, reference, edges,
-  threshold) — replay rewrites it bit-identically;
-- a rejected batch commits ONLY its meta row (audit trail: the trip
-  is durable and replayable, the rows never land);
-- read_accepted hides any half-written slice whose meta is missing
-  (crash window) and any slice whose verdict is a reject.
-
-Scale: per trigger, one map-side histogram of the batch (≤ bins
-rows collected — meta-sized, same class as the other gates' driver
-sums), one ppm comparison in exact integers, one label write. The
-reference histogram is a constant; history is never rescanned.
+Scale: per trigger, one map-side histogram of the batch (≤ bins rows
+collected), one ppm comparison in exact integers, one label write.
+The reference histogram is a constant; history is never rescanned.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from firefox_public_data_report_etl_spark.sources.tables import (
-    fs_exists,
-    partition_overwrite_mode,
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    commit_batch,
+    read_committed,
+    read_marker,
+    start_stream,
 )
 
 META_SCHEMA = "bl long, n_rows long, tvd_ppm long, accepted boolean"
@@ -115,23 +104,13 @@ def drift_gate_batch(
     n_rows = sum(counts.values())
     ppm = tvd_ppm(counts, reference)
     accepted = ppm < threshold_ppm and n_rows > 0
-    if accepted:
-        slice_rows = batch.select(
-            id_col,
-            text_col,
-            F.lit(label).cast("long").alias("bl"),
-        )
-        with partition_overwrite_mode(spark, "dynamic"):
-            slice_rows.write.partitionBy("bl").mode("overwrite").parquet(
-                f"{store}/accepted"
-            )
-    meta = spark.createDataFrame(
-        [(label, n_rows, ppm, accepted)], META_SCHEMA
+    commit_batch(
+        store,
+        label,
+        batch.select(id_col, text_col),
+        spark.createDataFrame([(label, n_rows, ppm, accepted)], META_SCHEMA),
+        land=accepted,
     )
-    with partition_overwrite_mode(spark, "dynamic"):
-        meta.write.partitionBy("bl").mode("overwrite").parquet(
-            f"{store}/meta"
-        )
 
 
 def read_accepted(
@@ -140,29 +119,21 @@ def read_accepted(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Rows of batches that were scored, admitted, AND committed —
-    a half-written slice without meta (crash window) and a tripped
-    batch's stray rows are both invisible. A store where every batch
-    tripped has no accepted/ directory at all; that reads as empty,
-    not as an error (the breaker doing its job is not a fault)."""
-    if not fs_exists(spark, f"{store}/accepted"):
-        return spark.createDataFrame(
-            [], f"{id_col} long, {text_col} string"
-        )
-    acc = spark.read.parquet(f"{store}/accepted")
-    ok = (
-        spark.read.schema(META_SCHEMA)
-        .parquet(f"{store}/meta")
-        .filter(F.col("accepted"))
-        .select("bl")
-        .distinct()
+    """Rows of batches that were admitted AND committed. A store with
+    no batch yet reads as empty (``id_col``, ``text_col``)."""
+    return read_committed(
+        spark,
+        store,
+        "meta",
+        META_SCHEMA,
+        committed=lambda meta: meta.filter("accepted"),
+        schema=f"{id_col} long, {text_col} string, bl long",
     )
-    return acc.join(ok, "bl", "left_semi").drop("bl")
 
 
 def read_verdicts(spark: SparkSession, store: str) -> DataFrame:
     """The durable audit trail: one row per scored batch."""
-    return spark.read.schema(META_SCHEMA).parquet(f"{store}/meta")
+    return read_marker(spark, store, "meta", META_SCHEMA)
 
 
 def stream_drift_gate(
@@ -174,21 +145,11 @@ def stream_drift_gate(
     text_col: str = "text",
     threshold_ppm: int | None = None,
 ):
-    """writeStream wiring; availableNow so backfills drain and stop."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: drift_gate_batch(
-                b.sparkSession,
-                b,
-                store,
-                reference,
-                bid,
-                id_col,
-                text_col,
-                threshold_ppm,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``stream``."""
+    return start_stream(
+        stream,
+        checkpoint,
+        lambda spark, b, bid: drift_gate_batch(
+            spark, b, store, reference, bid, id_col, text_col, threshold_ppm
+        ),
     )

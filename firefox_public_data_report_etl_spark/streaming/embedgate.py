@@ -1,22 +1,11 @@
-"""Streaming embedding ingestion gate: every micro-batch of incoming
-(quantized) embeddings is near-dup-checked against EVERYTHING
-accepted so far via the persisted IVF index, keep/remove verdicts
-are landed, and the kept vectors are appended to the index — the
-embedding-space twin of the MinHash text gate (streaming/neardup.py),
-completing the IVF index lifecycle (round 9, r8 verdict #3).
+"""Streaming embedding ingestion gate: one of the index gates of
+``streaming/gate.py``.
 
-Exactly-once without a transaction log, same contract as the text
-gate:
-
-- the append lands under the batch's own ``bl`` label by physically
-  deleting the label slice and rewriting it
-  (``append_to_ivf_index``) — replay fully REPLACES the label;
-- the probe excludes the batch's own label
-  (``search_ivf_index(exclude_label=...)``) — on replay the crashed
-  attempt's append is already present, and without the exclusion
-  every batch vector would match itself at cos 1.0 and be dropped;
-- decisions land partitioned by the label with scoped dynamic
-  overwrite — replay replaces them with identical rows.
+Every micro-batch of incoming (quantized) embeddings is
+near-dup-checked against EVERYTHING accepted so far via the persisted
+IVF index: index matches at quantized cosine >= the threshold plus
+within-batch pairs at the same cut go through the shared decision
+tail, and the kept vectors are appended to the index.
 
 Scale: per trigger, the probe reads nprobe/n_cells of each index
 label (partition-pruned), the within-batch check pairs only inside
@@ -28,15 +17,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    incremental_decisions,
-)
 from firefox_public_data_report_etl_spark.operators.ivf_lifecycle import (
     append_to_ivf_index,
 )
 from firefox_public_data_report_etl_spark.operators.vectorized import (
     ivf_assign,
     search_ivf_index,
+)
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    decide_and_append,
+    start_stream,
 )
 
 # embedding-space near-dup cut: quantized exact cosine at or above
@@ -117,10 +107,9 @@ def embed_gate_batch(
     nprobe: int = 2,
     id_col: str = "vec_id",
 ) -> None:
-    """Process one micro-batch of quantized embeddings (id, q, norm):
-    probe → decide → land decisions → append kept vectors.
-    ``batch_id`` is the streaming epoch id; the index label is
-    ``batch_id + 1`` (0 is the initial build)."""
+    """One micro-batch of quantized embeddings (id, q, norm): probe
+    the index with this label excluded, pair within the batch, then
+    the shared decision tail."""
     label = batch_id + 1
     batch = batch_vecs.select(id_col, "q", "norm").cache()
     # centroids read ONCE per trigger, shared by the index probe and
@@ -144,29 +133,18 @@ def embed_gate_batch(
     within = _within_batch_pairs(
         batch, centroids, threshold, id_col, nprobe=nprobe
     )
-    decisions = (
-        incremental_decisions(
-            batch.select(F.col(id_col).alias("doc_id")), cross, within
-        )
-        .withColumnRenamed("doc_id", id_col)
-        .withColumn("batch_label", F.lit(label))
-        .cache()
+    decide_and_append(
+        batch,
+        cross,
+        within,
+        id_col,
+        label,
+        decisions_path,
+        lambda kept: append_to_ivf_index(
+            spark, index_path, batch.join(kept, id_col), label, id_col=id_col
+        ),
+        [batch.unpersist, centroids.unpersist],
     )
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(spark, "dynamic"):
-        decisions.write.partitionBy("batch_label").mode(
-            "overwrite"
-        ).parquet(decisions_path)
-    kept = decisions.filter("keep").select(id_col)
-    append_to_ivf_index(
-        spark, index_path, batch.join(kept, id_col), label, id_col=id_col
-    )
-    decisions.unpersist()
-    batch.unpersist()
-    centroids.unpersist()
 
 
 def stream_embed_gate(
@@ -178,24 +156,13 @@ def stream_embed_gate(
     nprobe: int = 2,
     id_col: str = "vec_id",
 ):
-    """writeStream wiring: foreachBatch over a streaming quantized-
-    embedding source (columns id, q, norm). ``availableNow`` so
-    backfills drain and stop — a tailing deployment drops that
-    option."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            lambda b, bid: embed_gate_batch(
-                b.sparkSession,
-                b,
-                index_path,
-                decisions_path,
-                bid,
-                threshold,
-                nprobe,
-                id_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``vec_stream`` (columns
+    id, q, norm)."""
+    return start_stream(
+        vec_stream,
+        checkpoint,
+        lambda spark, b, bid: embed_gate_batch(
+            spark, b, index_path, decisions_path, bid, threshold, nprobe,
+            id_col,
+        ),
     )

@@ -1,19 +1,15 @@
-"""Streaming media ingestion gate: every micro-batch of perceptual
-signatures (image dHash / audio fingerprint rows, decoded upstream
-by the Arrow codec stages) is near-dup-checked against everything
-accepted so far via the persisted Hamming index
-(operators/hamming_index.py), verdicts land, and kept signatures
-append — the media twin of the text (neardup.py) and embedding
-(embedgate.py) gates, so all three modality lifecycles share one
-replay contract:
+"""Streaming media ingestion gate: one of the index gates of
+``streaming/gate.py``.
 
-- append lands under the batch's own ``bl`` label by delete-then-
-  rewrite — replay fully REPLACES the label;
-- the probe excludes the batch's own label — replay sees exactly the
-  pre-batch index (without it every signature would match itself at
-  Hamming 0 and drop);
-- decisions land partitioned by the label with scoped dynamic
-  overwrite — replay replaces identical rows.
+Every micro-batch of perceptual signatures (image dHash / audio
+fingerprint rows, decoded upstream by the Arrow codec stages) is
+near-dup-checked against everything accepted so far via the
+persisted Hamming index (operators/hamming_index.py): index matches
+within the index's max Hamming distance plus within-batch pairs
+banded the same way go through the shared decision tail, and kept
+signatures are appended. The banding geometry and the id/sig column
+names come from the index meta, so the stream cannot drift from the
+index build.
 
 Scale: per trigger, batch-sized banding, partition-pruned index
 reads, pair-sized CC — accepted history is never rescanned, and
@@ -22,7 +18,7 @@ media payloads never enter the gate at all (one BIGINT per item).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from firefox_public_data_report_etl_spark.operators.dedup import (
     hamming_band_pairs,
@@ -32,8 +28,9 @@ from firefox_public_data_report_etl_spark.operators.hamming_index import (
     append_to_hamming_index,
     probe_hamming_index,
 )
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    incremental_decisions,
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    decide_and_append,
+    start_stream,
 )
 
 
@@ -74,29 +71,18 @@ def media_gate_batch(
             max_hamming=m["max_hamming"],
             n_blocks=m["n_blocks"],
         ).select("da", "db")
-    decisions = (
-        incremental_decisions(
-            batch.select(F.col(id_col).alias("doc_id")), cross, within
-        )
-        .withColumnRenamed("doc_id", id_col)
-        .withColumn("batch_label", F.lit(label))
-        .cache()
+    decide_and_append(
+        batch,
+        cross,
+        within,
+        id_col,
+        label,
+        decisions_path,
+        lambda kept: append_to_hamming_index(
+            spark, index_path, batch.join(kept, id_col), label
+        ),
+        [batch.unpersist, probe.close],
     )
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(spark, "dynamic"):
-        decisions.write.partitionBy("batch_label").mode(
-            "overwrite"
-        ).parquet(decisions_path)
-    kept = decisions.filter("keep").select(id_col)
-    append_to_hamming_index(
-        spark, index_path, batch.join(kept, id_col), label
-    )
-    decisions.unpersist()
-    batch.unpersist()
-    probe.close()
 
 
 def stream_media_gate(
@@ -105,15 +91,11 @@ def stream_media_gate(
     decisions_path: str,
     checkpoint: str,
 ):
-    """writeStream wiring: foreachBatch over a streaming signature
-    source. ``availableNow`` so backfills drain and stop."""
-    return (
-        sig_stream.writeStream.foreachBatch(
-            lambda b, bid: media_gate_batch(
-                b.sparkSession, b, index_path, decisions_path, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``sig_stream``."""
+    return start_stream(
+        sig_stream,
+        checkpoint,
+        lambda spark, b, bid: media_gate_batch(
+            spark, b, index_path, decisions_path, bid
+        ),
     )

@@ -1,31 +1,13 @@
-"""Streaming near-dup ingestion gate: every micro-batch of incoming
-documents is deduplicated against EVERYTHING accepted so far via the
-persisted MinHash signature index (operators/incremental.py), its
-keep/remove verdicts are landed, and the kept docs' signatures are
-appended to the index — so the next batch dedups against base ∪ all
-previously kept content. The streaming composition of the round-7
-incremental-dedup operator family (reference has no streaming
-surface — engine extension per SURVEY.md §2.9; the method is the
-standard public LSH-index ingestion shape).
+"""Streaming near-dup ingestion gate (text): one of the index gates of
+``streaming/gate.py``.
 
-Exactly-once without a transaction log, by construction:
-
-- the index append lands under the batch's own ``bl`` label by
-  physically deleting the whole label slice and rewriting it in
-  append mode (``append_to_minhash_index``) — replay fully REPLACES
-  the label, never double-inserts. (Delete-then-append, NOT dynamic
-  partition overwrite: dynamic overwrite only replaces the leaves
-  the new write touches, so a replay whose kept-set shrank would
-  leave stale band rows alive in untouched leaves — see the append
-  docstring for the full review history.);
-- the probe excludes the batch's own label
-  (``probe_minhash_index(exclude_label=...)``) — on replay the
-  crashed attempt's append is already present, and without the
-  exclusion every batch doc would match its own signatures and be
-  dropped; with it, replay sees exactly the pre-batch index state;
-- decisions land partitioned by the same label with dynamic
-  overwrite — replay replaces them with identical rows (decisions
-  are a pure function of batch content + pre-batch index state).
+Every micro-batch of incoming documents is deduplicated against
+EVERYTHING accepted so far via the persisted MinHash signature index
+(operators/incremental.py): index matches at Jaccard >= the threshold
+plus within-batch LSH pairs at the same cut go through the shared
+decision tail, and the kept docs' signatures are appended to the
+index, so the next batch dedups against base ∪ all previously kept
+content.
 
 Scale: per trigger, cost is the measured probe shape — batch-sized
 signature compute, partition-pruned band/gram reads, pair-sized
@@ -44,8 +26,11 @@ from firefox_public_data_report_etl_spark.operators.dedup import (
 )
 from firefox_public_data_report_etl_spark.operators.incremental import (
     append_to_minhash_index,
-    incremental_decisions,
     probe_minhash_index,
+)
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    decide_and_append,
+    start_stream,
 )
 
 NEARDUP_THRESHOLD = 0.5
@@ -59,9 +44,8 @@ def neardup_gate_batch(
     batch_id: int,
     threshold: float = NEARDUP_THRESHOLD,
 ) -> None:
-    """Process one micro-batch: probe → decide → land decisions →
-    append kept signatures. ``batch_id`` is the streaming epoch id;
-    the index label is ``batch_id + 1`` (0 is the initial build)."""
+    """One micro-batch: probe the index with this label excluded,
+    pair within the batch, then the shared decision tail."""
     label = batch_id + 1
     batch_hs = gram_hash_arrays(batch_docs).cache()
     probe = probe_minhash_index(
@@ -71,35 +55,21 @@ def neardup_gate_batch(
     within = minhash_lsh_pairs_arr(batch_hs).filter(
         F.col("jaccard") >= threshold
     )
-    # cached: the decisions DAG (probe verify + within-batch LSH +
-    # CC) otherwise re-executes for each of the append's two writes —
-    # measured as ~3x the probe work per trigger (review fix); the
-    # relation is batch-grain ints
-    decisions = (
-        incremental_decisions(batch_docs.select("doc_id"), cross, within)
-        .withColumn("batch_label", F.lit(label))
-        .cache()
+    decide_and_append(
+        batch_docs,
+        cross,
+        within,
+        "doc_id",
+        label,
+        decisions_path,
+        lambda kept: append_to_minhash_index(
+            spark, index_path, batch_hs.join(kept, "doc_id"), label
+        ),
+        # the probe's cached candidate set is caller-owned (probe
+        # docstring)
+        [batch_hs.unpersist]
+        + [c.unpersist for c in getattr(probe, "_probe_persisted", [])],
     )
-    # dynamic mode scoped to the decisions write (shared context
-    # manager — review fix history on sources.partition_overwrite_mode)
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(spark, "dynamic"):
-        decisions.write.partitionBy("batch_label").mode(
-            "overwrite"
-        ).parquet(decisions_path)
-    kept = decisions.filter("keep").select("doc_id")
-    kept_hs = batch_hs.join(kept, "doc_id")
-    append_to_minhash_index(spark, index_path, kept_hs, label)
-    decisions.unpersist()
-    batch_hs.unpersist()
-    # decisions are materialized on disk now — release the probe's
-    # cached candidate set so a long-running gate doesn't leak one
-    # cached relation per micro-batch (probe docstring: caller-owned)
-    for cached in getattr(probe, "_probe_persisted", []):
-        cached.unpersist()
 
 
 def stream_neardup_gate(
@@ -109,16 +79,12 @@ def stream_neardup_gate(
     checkpoint: str,
     threshold: float = NEARDUP_THRESHOLD,
 ):
-    """writeStream wiring: foreachBatch over a streaming documents
-    source (columns doc_id, text). ``availableNow`` so backfills
-    drain and stop — a tailing deployment drops that option."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            lambda b, bid: neardup_gate_batch(
-                b.sparkSession, b, index_path, decisions_path, bid, threshold
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``docs_stream`` (columns
+    doc_id, text)."""
+    return start_stream(
+        docs_stream,
+        checkpoint,
+        lambda spark, b, bid: neardup_gate_batch(
+            spark, b, index_path, decisions_path, bid, threshold
+        ),
     )

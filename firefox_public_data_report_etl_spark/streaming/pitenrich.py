@@ -11,14 +11,13 @@ projection both the batch twin and every micro-batch run, built on
 the same `_scd2_runs` gaps-and-islands rebuild — the streaming and
 batch sides can never tile validity differently.
 
-Exactly-once by the established label protocol: enriched rows land
-partitioned by the trigger's ``batch_label`` with scoped dynamic
-overwrite — a replayed trigger REPLACES its label with identical
-rows (enrichment is a pure function of batch content + the dim
-state, and PIT semantics make in-time-order dim refreshes
-append-only for already-enriched purchases: a state event with a
-LATER timestamp than a landed purchase closes the open run AFTER
-that purchase, so its tile and state are unchanged).
+Enriched rows land under the trigger's ``batch_label``
+(``streaming/gate.py``). A replay rewrites identical rows: enrichment
+is a pure function of the batch and the dim state, and under PIT
+semantics an in-time-order dim refresh leaves already-enriched
+purchases alone (a state event LATER than a landed purchase closes
+the open run AFTER that purchase, so its tile and state are
+unchanged).
 
 Honest boundary, documented not hidden: a LATE dim event — one whose
 timestamp precedes purchases already enriched — changes what the
@@ -37,6 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firefox_public_data_report_etl_spark.functions import cents, week_start
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    start_stream,
+    write_label_slice,
+)
 
 
 def pit_enrich_rows(purchases: DataFrame, dim_events: DataFrame) -> DataFrame:
@@ -100,19 +103,8 @@ def pit_gate_batch(
     """Process one micro-batch of fact events: refresh the dimension
     (re-read ``dim_path``), PIT-enrich the batch's purchases, land
     under the trigger's label."""
-    label = batch_id + 1
-    dim_events = spark.read.parquet(dim_path)
-    enriched = pit_enrich_rows(batch_events, dim_events).withColumn(
-        "batch_label", F.lit(label)
-    )
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(spark, "dynamic"):
-        enriched.write.partitionBy("batch_label").mode("overwrite").parquet(
-            out_path
-        )
+    enriched = pit_enrich_rows(batch_events, spark.read.parquet(dim_path))
+    write_label_slice(enriched, out_path, batch_id + 1, "batch_label")
 
 
 def stream_pit_enrich(
@@ -121,16 +113,12 @@ def stream_pit_enrich(
     out_path: str,
     checkpoint: str,
 ):
-    """writeStream wiring: foreachBatch over a streaming fact-event
-    source; the dimension is re-read from ``dim_path`` every
-    trigger. ``availableNow`` so backfills drain and stop."""
-    return (
-        events_stream.writeStream.foreachBatch(
-            lambda b, bid: pit_gate_batch(
-                b.sparkSession, b, dim_path, out_path, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the enrichment on every micro-batch of ``events_stream``;
+    the dimension is re-read from ``dim_path`` every trigger."""
+    return start_stream(
+        events_stream,
+        checkpoint,
+        lambda spark, b, bid: pit_gate_batch(
+            spark, b, dim_path, out_path, bid
+        ),
     )

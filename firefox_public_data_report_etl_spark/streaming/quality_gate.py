@@ -2,13 +2,11 @@
 incoming documents gets the Gopher rule verdicts, the LM fluency
 floor, and (optionally) the frozen Naive-Bayes quality-classifier
 margin — the rule, fluency, and model-based filter stages of the
-curation recipe — and its keep/drop decisions land partitioned by
-batch: the filter a live crawl runs BEFORE paying storage for a
-document. Stateless by design
-(reference has no streaming surface — engine extension per SURVEY.md
-§2.9): unlike the near-dup gate there is no cross-batch index, so
-exactly-once is pure partition-overwrite replay (decisions are a pure
-function of batch content + the frozen model tables).
+curation recipe. Its keep/drop decisions land under the batch's
+``batch_label`` (``streaming/gate.py``): the filter a live crawl runs
+BEFORE paying storage for a document. There is no cross-batch index,
+so the decisions are a pure function of the batch and the frozen
+model tables, and a replay overwrites its label with identical rows.
 
 The LM vocabulary AND the NB classifier are trained ONCE on a
 reference corpus before the stream starts (operators/text.py:
@@ -30,6 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firefox_public_data_report_etl_spark.operators.text import (
     gopher_rules,
+)
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    start_stream,
+    write_label_slice,
 )
 
 # Same integer fluency floor as the curation capstones
@@ -76,8 +78,7 @@ def quality_gate_batch(
     nb_rows: list | None = None,
     nb_prior: int | None = None,
 ) -> None:
-    """Score one micro-batch and land its decisions under the batch's
-    own partition label (replay REPLACES the label — idempotent)."""
+    """Score one micro-batch and land its decisions under its label."""
     if gate_munats is None:
         from firefox_public_data_report_etl_spark.plans.text import (
             LM_GATE_MUNATS,
@@ -114,7 +115,6 @@ def quality_gate_batch(
             ).alias("lm_ok"),
         )
         .withColumn("keep", F.col("rules_ok") & F.col("lm_ok"))
-        .withColumn("batch_label", F.lit(label))
     )
     if nb_rows is not None:
         from firefox_public_data_report_etl_spark.operators.text import (
@@ -150,17 +150,7 @@ def quality_gate_batch(
             .withColumn("nb_ok", F.col("nb_margin") >= 0)
             .withColumn("keep", F.col("keep") & F.col("nb_ok"))
         )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        decisions.write.partitionBy("batch_label").mode(
-            "overwrite"
-        ).parquet(decisions_path)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_label_slice(decisions, decisions_path, label, "batch_label")
 
 
 def stream_quality_gate(
@@ -172,19 +162,14 @@ def stream_quality_gate(
     nb_rows: list | None = None,
     nb_prior: int | None = None,
 ):
-    """writeStream wiring: foreachBatch over a streaming documents
-    source (columns doc_id, text). ``availableNow`` so backfills drain
-    and stop — a tailing deployment drops that option. Pass the
-    frozen NB model (``freeze_nb_model``) to add the model-based
-    filter column to every decision."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            lambda b, bid: quality_gate_batch(
-                b.sparkSession, b, lm_rows, lm_oov, decisions_path, bid,
-                nb_rows=nb_rows, nb_prior=nb_prior,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``docs_stream`` (columns
+    doc_id, text). Pass the frozen NB model (``freeze_nb_model``) to
+    add the model-based filter column to every decision."""
+    return start_stream(
+        docs_stream,
+        checkpoint,
+        lambda spark, b, bid: quality_gate_batch(
+            spark, b, lm_rows, lm_oov, decisions_path, bid,
+            nb_rows=nb_rows, nb_prior=nb_prior,
+        ),
     )

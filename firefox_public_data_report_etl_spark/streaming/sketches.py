@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firefox_public_data_report_etl_spark.functions import week_start
 from firefox_public_data_report_etl_spark.sources.tables import fs_exists
+from firefox_public_data_report_etl_spark.streaming.gate import start_stream
 from firefox_public_data_report_etl_spark.streaming.upsert import (
     recover_swap,
     swap_write,
@@ -70,15 +71,10 @@ def stream_sketch_union(
 ):
     """Wires an events stream into the sketch-union sink; returns the
     started query (availableNow-compatible)."""
-
-    def _sink(batch: DataFrame, _batch_id: int) -> None:
-        sketch_batch(batch.sparkSession, batch, target_path, lgk)
-
-    return (
-        source.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_stream(
+        source,
+        checkpoint,
+        lambda spark, b, _bid: sketch_batch(spark, b, target_path, lgk),
     )
 
 

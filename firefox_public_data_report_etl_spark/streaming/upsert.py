@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from firefox_public_data_report_etl_spark.operators.merge import merge_rows
 from firefox_public_data_report_etl_spark.sources import tables
+from firefox_public_data_report_etl_spark.streaming.gate import start_stream
 
 
 def recover_swap(spark: SparkSession, target_path: str) -> None:
@@ -112,13 +113,10 @@ def stream_upsert(
 ):
     """Wires a streaming source into the upsert sink; returns the
     started query (availableNow-compatible; call awaitTermination)."""
-
-    def _sink(batch: DataFrame, _batch_id: int) -> None:
-        upsert_batch(batch.sparkSession, batch, target_path, keys, order_col)
-
-    return (
-        source.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_stream(
+        source,
+        checkpoint,
+        lambda spark, b, _bid: upsert_batch(
+            spark, b, target_path, keys, order_col
+        ),
     )

@@ -1,12 +1,15 @@
-"""Streaming video ingestion gate: every micro-batch of CLIPS
-(per-frame dHash rows, decoded upstream by the real-codec Arrow
-stage) is near-dup-checked against everything accepted so far via
-the persisted frame-hash Hamming index, with the clip verdict
-decided by the TIME-ALIGNED FRAME VOTE (operators/multimodal.py:
-video_neardup_against_index) — the fourth and last modality gate,
-sharing the one replay contract (label replace, own-label exclusion,
-scoped dynamic decision overwrite) with the text, embedding, and
-still-image gates.
+"""Streaming video ingestion gate: one of the index gates of
+``streaming/gate.py``.
+
+Every micro-batch of CLIPS (per-frame dHash rows, decoded upstream by
+the real-codec Arrow stage) is near-dup-checked against everything
+accepted so far via the persisted frame-hash Hamming index. Two clips
+match by the TIME-ALIGNED FRAME VOTE (operators/multimodal.py:
+video_neardup_against_index): at least NDVID_MIN_FRAMES frames at the
+same index within the max Hamming distance. Index and within-batch
+clip matches go through the shared decision tail, and the kept clips'
+frame hashes are appended. A clip's frames must arrive within one
+trigger.
 
 Scale: per trigger, probe IO is the partition-pruned bucket set the
 batch's frames occupy; the vote and CC are pair-sized; appended
@@ -24,14 +27,15 @@ from firefox_public_data_report_etl_spark.operators.dedup import (
 from firefox_public_data_report_etl_spark.operators.hamming_index import (
     append_to_hamming_index,
 )
-from firefox_public_data_report_etl_spark.operators.incremental import (
-    incremental_decisions,
-)
 from firefox_public_data_report_etl_spark.operators.multimodal import (
     NDVID_FRAMES,
     NDVID_MIN_FRAMES,
     video_neardup_against_index,
     video_neardup_pairs,
+)
+from firefox_public_data_report_etl_spark.streaming.gate import (
+    decide_and_append,
+    start_stream,
 )
 
 
@@ -85,35 +89,26 @@ def video_gate_batch(
         within = video_neardup_pairs(batch).select(
             F.col("va").alias("da"), F.col("vb").alias("db")
         )
-    decisions = (
-        incremental_decisions(
-            batch.select(F.col("video_id").alias("doc_id")).distinct(),
-            cross,
-            within,
-        )
-        .withColumnRenamed("doc_id", "video_id")
-        .withColumn("batch_label", F.lit(label))
-        .cache()
+    decide_and_append(
+        batch.select("video_id").distinct(),
+        cross,
+        within,
+        "video_id",
+        label,
+        decisions_path,
+        lambda kept: append_to_hamming_index(
+            spark,
+            index_path,
+            batch.join(kept, "video_id").select(
+                (
+                    F.col("video_id") * NDVID_FRAMES + F.col("frame_idx")
+                ).alias("fid"),
+                "fhash",
+            ),
+            label,
+        ),
+        [batch.unpersist, votes.close],
     )
-    from firefox_public_data_report_etl_spark.sources import (
-        partition_overwrite_mode,
-    )
-
-    with partition_overwrite_mode(spark, "dynamic"):
-        decisions.write.partitionBy("batch_label").mode(
-            "overwrite"
-        ).parquet(decisions_path)
-    kept = decisions.filter("keep").select("video_id")
-    kept_fids = batch.join(kept, "video_id").select(
-        (
-            F.col("video_id") * NDVID_FRAMES + F.col("frame_idx")
-        ).alias("fid"),
-        "fhash",
-    )
-    append_to_hamming_index(spark, index_path, kept_fids, label)
-    decisions.unpersist()
-    batch.unpersist()
-    votes.close()
 
 
 def stream_video_gate(
@@ -122,18 +117,11 @@ def stream_video_gate(
     decisions_path: str,
     checkpoint: str,
 ):
-    """writeStream wiring: foreachBatch over a streaming frame-hash
-    source. A clip's frames must arrive within one trigger (frame
-    rows are produced per clip by the decode stage, so a file source
-    keyed by clip satisfies this). ``availableNow`` so backfills
-    drain and stop."""
-    return (
-        frame_stream.writeStream.foreachBatch(
-            lambda b, bid: video_gate_batch(
-                b.sparkSession, b, index_path, decisions_path, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gate on every micro-batch of ``frame_stream``."""
+    return start_stream(
+        frame_stream,
+        checkpoint,
+        lambda spark, b, bid: video_gate_batch(
+            spark, b, index_path, decisions_path, bid
+        ),
     )
