@@ -269,7 +269,7 @@ def pair_dots_matmul(
 # brute-baseline closure bound: 200k vectors × 64 int64 ≈ 100 MB in
 # the task closure — past this the labeled quadratic baseline must
 # refuse loudly and point at its banded scale path (the same refusal
-# convention as _guard_fixed_param)
+# convention as part_entity_resolution's ER_MAX_BLOCK guard)
 _BRUTE_CLOSURE_MAX = 200_000
 
 

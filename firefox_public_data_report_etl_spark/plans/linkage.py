@@ -721,10 +721,10 @@ ORACLES = {
     "token_lift_pairs": TOKEN_LIFT_ORACLE,
 }
 
-# record-grain blocking over a FIXED key domain: block sizes grow
-# linearly with the catalog, candidate pairs quadratically — guarded
-# at ER_MAX_BLOCK; the cell-grain twin is the 100 TB path
-SCALE_CLASS = {"part_entity_resolution": "fixed_param"}
+# record-grain ground truth for the cell-grain twin: blocks over a
+# FIXED key domain grow linearly with the catalog, candidate pairs
+# quadratically — guarded at ER_MAX_BLOCK; the twin is the 100 TB path
+SCALE_CLASS = {"part_entity_resolution": "baseline"}
 SCALE_PATH_FOR = {
     "part_entity_resolution": "part_entity_resolution_scaled",
 }

@@ -62,12 +62,7 @@ ORACLES: dict[str, str] = {}
 #                       production sibling;
 #   "streaming_binding" correctness binding for a streaming operator;
 #                       its BATCH form is linear-at-best and the
-#                       registry's window-form twin is the batch path;
-#   "fixed_param"       correct at any SF but parameterized by a fixed
-#                       constant (e.g. a static centroid mod) that
-#                       makes the oracle SQL a static string yet stops
-#                       scaling past test SF; SCALE_PATH_FOR names the
-#                       runtime-parameterized sibling.
+#                       registry's window-form twin is the batch path.
 SCALE_CLASS: dict[str, str] = {}
 SCALE_PATH_FOR: dict[str, str] = {}
 

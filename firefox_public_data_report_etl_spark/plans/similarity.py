@@ -152,65 +152,31 @@ SELECT q_id, n_id, rank, cos FROM r WHERE rank <= {TOP_K}
 CENTROID_MOD = 100
 
 
-def _guard_fixed_param(n: int, mod: int, query: str, twin: str) -> None:
-    """Runtime complement of tests/test_shared_oracle_bounds.py (round
-    7, from the round-6 verdict): the fixed-mod registry forms are a
-    correctness device — the static mod makes the oracle SQL a fixed
-    string — but they grow the codebook as N/mod, so past n = mod^2
-    vectors (the exact bound where sqrt-N sizing would stop flooring
-    at the constant) the plan degenerates toward O(N^2/mod) assignment
-    or N^2/k within-cell pair volume (measured: 106 s ann_ivf / 44 s
-    kmeans at the 200k-vector stack, SCALING.md round 5). Refuse to
-    run the quadratic form silently; the error names the sqrt-N twin
-    that IS the scale path. Oracle rows are unaffected: every testdata
-    SF sits below the bound (pinned by test_shared_oracle_bounds)."""
-    if n > mod * mod:
-        raise ValueError(
-            f"{query}: corpus has {n} vectors, past the fixed-mod "
-            f"validity bound mod^2 = {mod * mod} — the fixed-param "
-            f"form is O(N^2/mod) here. Use the sqrt-N scale twin "
-            f"'{twin}' (see SCALE_PATH_FOR in plans/similarity.py)."
-        )
-
-
-def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (operators.vectorized.cosine_topk_ivf): deterministic
-    centroids (vec_id % 100 == 1), exact-cosine cell assignment,
-    nprobe=1 within-cell top-k. Guarded: refuses corpora past
-    CENTROID_MOD^2 vectors (see _guard_fixed_param)."""
-    from firefox_public_data_report_etl_spark.operators.vectorized import (
-        cosine_topk_ivf,
-    )
-
-    emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), CENTROID_MOD, "ann_ivf", "ann_ivf_multiprobe"
-    )
-    return cosine_topk_ivf(emb, TOP_K, QUERY_MOD, CENTROID_MOD)
+def codebook_mod(n: int, floor: int) -> int:
+    """The sqrt-N codebook-sizing law every IVF / k-means plan uses:
+    centroids are the ``id % mod == 1`` slice with mod = max(floor,
+    int(sqrt(n))), so #centroids ~= sqrt(N) (assignment O(N^1.5 d),
+    cell size ~= sqrt(N)) instead of N/floor (O(N^2/floor) assignment:
+    measured 106 s at the 200k-vector stack, SCALING.md round 5). While
+    int(sqrt(n)) <= floor the mod IS the registry constant, which is
+    why the oracles can be static SQL strings (the testdata bounds are
+    pinned by tests/test_shared_oracle_bounds.py)."""
+    return max(floor, int(n**0.5))
 
 
 def ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale twin of ``ann_ivf`` with sqrt-N codebook sizing (round-5
-    scaling finding): the registry query's FIXED centroid_mod=100 is a
-    correctness device — it makes the oracle SQL a static string — but
-    it grows the codebook as N/100, so cell assignment (every vector
-    against every centroid) degenerates to O(N^2/100): measured 106 s
-    at the 100x stack (200k vectors -> 2000 centroids). Standard IVF
-    sizing keeps #centroids ~= sqrt(N) (assignment O(N^1.5 * d), cell
-    size ~= sqrt(N)); this twin derives centroid_mod from a corpus
-    count so #centroids ~= sqrt(N), floored at the registry constant
-    so it is bit-identical to ``ann_ivf`` at oracle scales — which is
-    also why it can share ann_ivf's oracle SQL as a registry entry
-    (valid whenever N < mod^2 = 10,000; every testdata SF qualifies).
-    Measured at the stacks in tools/scaling_run.py.
+    """IVF ANN (operators.vectorized.cosine_topk_ivf): deterministic
+    centroids (vec_id % mod == 1, mod = codebook_mod(N, CENTROID_MOD)),
+    exact-cosine cell assignment, nprobe=1 within-cell top-k — the
+    nprobe cost floor next to ann_ivf_multiprobe. Measured at the
+    stacks in tools/scaling_run.py.
     """
     from firefox_public_data_report_etl_spark.operators.vectorized import (
         cosine_topk_ivf,
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    n = emb.count()
-    cmod = max(CENTROID_MOD, int(n**0.5))
+    cmod = codebook_mod(emb.count(), CENTROID_MOD)
     return cosine_topk_ivf(emb, TOP_K, QUERY_MOD, cmod)
 
 
@@ -219,7 +185,7 @@ NPROBE = 2
 
 def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE deployable ANN registry config (round-6): sqrt-N codebook
-    sizing (ann_ivf_scaled's law) + nprobe=2 multiprobe — queries
+    sizing (codebook_mod) + nprobe=2 multiprobe — queries
     score the candidates of their TWO nearest cells instead of one.
     Round-5 measurements said the nprobe=1 forms are not defaults
     anyone should deploy: recall@3 vs exact ground truth was 0.15 at
@@ -232,18 +198,16 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost: candidate volume doubles (2 cells/query) but stays
     nprobe*N/num_centroids per query — never all-pairs; candidates
     still partition by ONE cell each (index side unchanged), only the
-    probe side fans out. Shares the fixed-mod oracle via the same
-    floor argument as ann_ivf_scaled (sqrt(N) < CENTROID_MOD at every
-    testdata SF — pinned by test_shared_oracle_bounds), extended to
-    rank-<=2 cell assignment on the query side.
+    probe side fans out. Shares the static-mod oracle via the
+    codebook_mod floor, extended to rank-<=2 cell assignment on the
+    query side.
     """
     from firefox_public_data_report_etl_spark.operators.vectorized import (
         cosine_topk_ivf,
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    n = emb.count()
-    cmod = max(CENTROID_MOD, int(n**0.5))
+    cmod = codebook_mod(emb.count(), CENTROID_MOD)
     return cosine_topk_ivf(emb, TOP_K, QUERY_MOD, cmod, nprobe=NPROBE)
 
 
@@ -337,9 +301,10 @@ SELECT q_id, n_id, rank, cos FROM r WHERE rank <= {TOP_K}
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids over quantized components — the
-    computation that trains an IVF coarse quantizer (ann_ivf consumes
-    centroids like these). Exact integer component sums + ONE final
-    division keep the 64-dim centroid bit-identical across engines.
+    computation that trains an IVF coarse quantizer (the IVF plans
+    consume centroids like these). Exact integer component sums + ONE
+    final division keep the 64-dim centroid bit-identical across
+    engines.
 
     Scale: posexplode to (label, pos) grain then one aggregate with
     map-side combine — the shuffle moves 64 partial sums per (label,
@@ -451,26 +416,6 @@ KM_INIT_MOD = 50
 KM_ITERS = 2
 
 
-def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two Lloyd iterations refining a deterministic seed codebook
-    (operators.vectorized.kmeans_lloyd) — the training step that
-    produces the centroids ann_ivf consumes. Integer-exact end to end
-    (quantized components, int64 L2, sign-safe floor-div update), so
-    the iterative loop is oracle-checked bit-for-bit: the DuckDB twin
-    unrolls the same two rounds as chained CTEs. Guarded: refuses
-    corpora past KM_INIT_MOD^2 vectors (see _guard_fixed_param)."""
-    from firefox_public_data_report_etl_spark.operators.vectorized import (
-        kmeans_lloyd,
-    )
-
-    emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), KM_INIT_MOD, "kmeans_lloyd_refine",
-        "kmeans_refine_scaled",
-    )
-    return kmeans_lloyd(emb, KM_INIT_MOD, KM_ITERS)
-
-
 def _kmeans_oracle(train_pred: str = "TRUE") -> str:
     """``train_pred`` (SQL over ``vec_id``) restricts the TRAINING
     corpus: seeds, distance rounds, and centroid updates run over the
@@ -516,19 +461,20 @@ e0 AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos, v FROM
 
 
 def kmeans_refine_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale twin of ``kmeans_lloyd_refine`` with sqrt-N codebook
-    sizing (same law as ``ann_ivf_scaled``; the registry constant
-    KM_INIT_MOD=50 would grow k as N/50 and make each assignment round
-    O(N^2/50)). Shares the fixed-mod oracle: sqrt(N) < 50 at every
-    testdata SF, so the mod floors at the registry constant there.
-    Measured at the stacks in tools/scaling_run.py."""
+    """Two Lloyd iterations refining a deterministic seed codebook
+    (operators.vectorized.kmeans_lloyd, seeds vec_id % mod == 1 with
+    mod = codebook_mod(N, KM_INIT_MOD)) — the training step that
+    produces the centroids the IVF plans consume. Integer-exact end to
+    end (quantized components, int64 L2, sign-safe floor-div update),
+    so the iterative loop is oracle-checked bit-for-bit: the DuckDB
+    twin unrolls the same two rounds as chained CTEs. Measured at the
+    stacks in tools/scaling_run.py."""
     from firefox_public_data_report_etl_spark.operators.vectorized import (
         kmeans_lloyd,
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    n = emb.count()
-    return kmeans_lloyd(emb, max(KM_INIT_MOD, int(n**0.5)), KM_ITERS)
+    return kmeans_lloyd(emb, codebook_mod(emb.count(), KM_INIT_MOD), KM_ITERS)
 
 
 def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,12 +484,12 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``kmeans_lloyd`` refines the deterministic seed codebook for
     KM_ITERS rounds, its (cid, pos, c) rows are reshaped to centroid
     vectors, and ``cosine_topk_ivf`` runs the same nprobe=1 cell-join
-    search as ``ann_ivf`` against them. Oracle: the k-means CTE chain
-    extended with cosine cell assignment + within-cell ranking.
+    search as ``ann_ivf_scaled`` against them. Oracle: the k-means CTE
+    chain extended with cosine cell assignment + within-cell ranking.
 
     Scale: codebook reshape is k x d rows (tiny); everything else is
-    the measured ann_ivf/kmeans plan shapes — sqrt-N codebook sizing
-    applies to the seed mod exactly as for the components.
+    the measured ann_ivf_scaled/kmeans plan shapes, with the seed mod
+    sized by codebook_mod.
     """
     from firefox_public_data_report_etl_spark.operators.vectorized import (
         cosine_topk_ivf,
@@ -551,10 +497,7 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), KM_INIT_MOD, "ann_ivf_trained", "ann_ivf_multiprobe"
-    )
-    codebook = _trained_codebook(emb, KM_INIT_MOD)
+    codebook = _trained_codebook(emb, codebook_mod(emb.count(), KM_INIT_MOD))
     return cosine_topk_ivf(emb, TOP_K, QUERY_MOD, centroids=codebook)
 
 
@@ -644,36 +587,6 @@ SELECT q_id, n_id, rank, cos FROM r WHERE rank <= {TOP_K}"""
 SEM_DEDUP_THRESHOLD = 0.45  # same planted-near-dup cut as dedup_embedding_cosine
 
 
-def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-shape semantic dedup (Abbas et al. 2023, public): the
-    embedding-space complement of the text near-dup family — cluster
-    the corpus with the k-means codebook, threshold exact cosine
-    WITHIN each cell, connect the resulting pair graph, keep the
-    lowest vec_id per component. Composes three shipped operator
-    families end to end: kmeans_lloyd (train) → ivf_assign (one
-    matmul pass, vectors never shuffle to assign) → per-cell pair join
-    (never all-pairs: candidate volume is sum of cell_size^2, ~N·k
-    at balanced cells) → connected_components (pair-sized iteration).
-    Integer-exact throughout, so the full train→assign→dedup DAG is
-    oracle-checked bit-for-bit. ``keep`` falls out of the component
-    label itself (component IS the min reachable id).
-
-    Output: (vec_id, component, keep) at corpus grain — singleton
-    vectors are their own component and kept.
-
-    Scale: fixed KM_INIT_MOD makes this the oracle-static form
-    (fixed_param, same family as kmeans_lloyd_refine);
-    ``dedup_semantic_scaled`` is the sqrt-N twin and scale path.
-    Guarded: refuses corpora past KM_INIT_MOD^2 vectors (see
-    _guard_fixed_param).
-    """
-    emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), KM_INIT_MOD, "dedup_semantic", "dedup_semantic_scaled"
-    )
-    return _dedup_semantic_over(emb, _trained_codebook(emb, KM_INIT_MOD))
-
-
 def _dedup_semantic_over(emb: DataFrame, codebook: DataFrame) -> DataFrame:
     from firefox_public_data_report_etl_spark.operators.graph import (
         connected_components,
@@ -730,15 +643,27 @@ def _dedup_semantic_over(emb: DataFrame, codebook: DataFrame) -> DataFrame:
 
 
 def dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sqrt-N twin of ``dedup_semantic`` (same law and same shared-
-    oracle floor argument as kmeans_refine_scaled — pinned by
-    test_shared_oracle_bounds): the codebook grows as sqrt(N), so
-    assignment is O(N^1.5 d) and expected cell size sqrt(N), keeping
-    the within-cell pair volume ~N^1.5 instead of N^2/k_fixed."""
+    """SemDeDup-shape semantic dedup (Abbas et al. 2023, public): the
+    embedding-space complement of the text near-dup family — cluster
+    the corpus with the k-means codebook, threshold exact cosine
+    WITHIN each cell, connect the resulting pair graph, keep the
+    lowest vec_id per component. Composes three shipped operator
+    families end to end: kmeans_lloyd (train) → ivf_assign (one
+    matmul pass, vectors never shuffle to assign) → per-cell pair join
+    (never all-pairs) → connected_components (pair-sized iteration).
+    Integer-exact throughout, so the full train→assign→dedup DAG is
+    oracle-checked bit-for-bit. ``keep`` falls out of the component
+    label itself (component IS the min reachable id).
+
+    Output: (vec_id, component, keep) at corpus grain — singleton
+    vectors are their own component and kept.
+
+    Scale: the codebook is sized by codebook_mod, so assignment is
+    O(N^1.5 d) and expected cell size sqrt(N), keeping the within-cell
+    pair volume ~N^1.5 instead of N^2/k_fixed."""
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    n = emb.count()
     return _dedup_semantic_over(
-        emb, _trained_codebook(emb, max(KM_INIT_MOD, int(n**0.5)))
+        emb, _trained_codebook(emb, codebook_mod(emb.count(), KM_INIT_MOD))
     )
 
 
@@ -855,22 +780,20 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     together with the IVF serving index: at 100 TB the codes table
     is n_sub bytes per vector (vs sub_dim·n_sub ints), which is what
     lets the searchable index fit a cluster's RAM while the IVF cell
-    partition bounds per-query IO. Guarded fixed_param like its IVF
-    siblings (two fixed mods); sqrt-N sizing applies to both
-    codebooks as the scale path."""
+    partition bounds per-query IO. Both codebooks (PQ and coarse IVF)
+    are sized by codebook_mod."""
     from firefox_public_data_report_etl_spark.operators.vectorized import (
         pq_adc_topk,
         pq_encode,
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), min(CENTROID_MOD, PQ_CB_MOD), "ann_ivf_pq",
-        "ann_ivf_multiprobe",
+    n = emb.count()
+    codes, cents = pq_encode(
+        emb, codebook_mod(n, PQ_CB_MOD), PQ_SUBSPACES, PQ_SUB_DIM
     )
-    codes, cents = pq_encode(emb, PQ_CB_MOD, PQ_SUBSPACES, PQ_SUB_DIM)
     return pq_adc_topk(
-        emb, codes, cents, TOP_K, QUERY_MOD, CENTROID_MOD,
+        emb, codes, cents, TOP_K, QUERY_MOD, codebook_mod(n, CENTROID_MOD),
         PQ_SUBSPACES, PQ_SUB_DIM,
     )
 
@@ -960,9 +883,9 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook size because ADC only has to land the true neighbors
     anywhere in the top R, not in exact order.
 
-    Scale: identical plan class to ``ann_ivf_pq`` (guarded
-    fixed_param; sqrt-N sizing is the scale path) plus one
-    |Q|·R-row window — report-sized by construction."""
+    Scale: identical plan class to ``ann_ivf_pq`` (codebook_mod
+    sizing) plus one |Q|·R-row window — report-sized by
+    construction."""
     from pyspark.sql import Window
 
     from firefox_public_data_report_etl_spark.operators.vectorized import (
@@ -971,14 +894,13 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), min(CENTROID_MOD, PQ_CB_MOD), "ann_ivf_pq_rerank",
-        "ann_ivf_multiprobe",
+    n = emb.count()
+    codes, cents = pq_encode(
+        emb, codebook_mod(n, PQ_CB_MOD), PQ_SUBSPACES, PQ_SUB_DIM
     )
-    codes, cents = pq_encode(emb, PQ_CB_MOD, PQ_SUBSPACES, PQ_SUB_DIM)
     shortlist = pq_adc_topk(
-        emb, codes, cents, PQ_RERANK_SHORTLIST, QUERY_MOD, CENTROID_MOD,
-        PQ_SUBSPACES, PQ_SUB_DIM,
+        emb, codes, cents, PQ_RERANK_SHORTLIST, QUERY_MOD,
+        codebook_mod(n, CENTROID_MOD), PQ_SUBSPACES, PQ_SUB_DIM,
     )
     w = Window.partitionBy("q_id").orderBy(
         F.asc("exact_d2"), F.asc("n_id")
@@ -1001,7 +923,7 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_adc_topk), and candidates still come from the original-space
     coarse assignment. Integer-exact end to end, so codes, ADC
     ranks, and the exact-L2 binding all hash against the DuckDB
-    twin. Same guard + scale story as the PQ siblings.
+    twin. Same codebook_mod sizing as the PQ siblings.
 
     When to use it is MEASURED, not assumed (tools/pq_recall.py,
     SCALING.md): residuals hurt on the uniform testdata (unrelated
@@ -1016,15 +938,15 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), min(CENTROID_MOD, PQ_CB_MOD), "ann_ivf_pq_residual",
-        "ann_ivf_multiprobe",
-    )
-    res, cells = pq_residual_vectors(emb, CENTROID_MOD)
+    n = emb.count()
+    cmod = codebook_mod(n, CENTROID_MOD)
+    res, cells = pq_residual_vectors(emb, cmod)
     res = res.select("vec_id", "q").cache()
-    codes, cents = pq_encode(res, PQ_CB_MOD, PQ_SUBSPACES, PQ_SUB_DIM)
+    codes, cents = pq_encode(
+        res, codebook_mod(n, PQ_CB_MOD), PQ_SUBSPACES, PQ_SUB_DIM
+    )
     return pq_adc_topk(
-        emb, codes, cents, TOP_K, QUERY_MOD, CENTROID_MOD,
+        emb, codes, cents, TOP_K, QUERY_MOD, cmod,
         PQ_SUBSPACES, PQ_SUB_DIM, lut_vectors=res, cells=cells,
     )
 
@@ -1124,10 +1046,9 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching batch, recursive-CTE components, identical keep rule —
     bit-exact end to end.
 
-    Scale: fixed_param like dedup_semantic (guarded past the mod^2
-    bound on the BASE corpus); the sqrt-N sizing of
-    dedup_semantic_scaled applies unchanged as the scale path. The
-    persisted serving form of the same probe is the partition-pruned
+    Scale: the codebook is sized by codebook_mod over the BASE
+    corpus, as in dedup_semantic_scaled. The persisted serving form
+    of the same probe is the partition-pruned
     IVF index (operators/vectorized.py:search_ivf_index), pinned
     equal to the in-memory cells in test_vectorized."""
     from firefox_public_data_report_etl_spark.operators.incremental import (
@@ -1140,11 +1061,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
     base = emb.filter(F.col("vec_id") % SEM_BATCH_MOD != 0)
     batch = emb.filter(F.col("vec_id") % SEM_BATCH_MOD == 0)
-    _guard_fixed_param(
-        base.count(), KM_INIT_MOD, "dedup_semantic_incremental",
-        "dedup_semantic_scaled",
-    )
-    codebook = _trained_codebook(base, KM_INIT_MOD)
+    codebook = _trained_codebook(base, codebook_mod(base.count(), KM_INIT_MOD))
     cells = ivf_assign(emb, codebook)
     withc = emb.join(cells, "vec_id")
     is_batch = F.col("vec_id") % SEM_BATCH_MOD == 0
@@ -1274,7 +1191,9 @@ def _diversity_sample(emb, mod: int) -> DataFrame:
     )
 
 
-def embedding_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_diversity_sample_scaled(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
     """Cluster-balanced diversity sampling — the embedding-space
     counterpart of the mixture sampler: assign every vector to its
     nearest seed centroid (integer L2, the k-means assignment step via
@@ -1285,28 +1204,11 @@ def embedding_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits every vector with its cell, in-cell reservoir rank, and
     kept flag — a quota cut later is a prefix of this draw.
 
-    Guarded fixed-param form (codebook = vec_id % KM_INIT_MOD seeds;
-    the static mod keeps the oracle a fixed string) — past mod² the
-    guard names the sqrt-N twin."""
+    The seed codebook is sized by codebook_mod, so assignment stays
+    O(N^1.5·d) and the per-cell reservoir window partitions by cell:
+    the draw parallelizes at any corpus size."""
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), KM_INIT_MOD, "embedding_diversity_sample",
-        "embedding_diversity_sample_scaled",
-    )
-    return _diversity_sample(emb, KM_INIT_MOD)
-
-
-def embedding_diversity_sample_scaled(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """sqrt-N-codebook twin of ``embedding_diversity_sample`` (same
-    oracle: the mod floors at KM_INIT_MOD below mod² vectors, which
-    holds at every testdata SF) — assignment stays O(N^1.5·d) and the
-    per-cell reservoir window partitions by cell, so the draw
-    parallelizes at any corpus size."""
-    emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    n = emb.count()
-    return _diversity_sample(emb, max(KM_INIT_MOD, int(n**0.5)))
+    return _diversity_sample(emb, codebook_mod(emb.count(), KM_INIT_MOD))
 
 
 def _diversity_oracle() -> str:
@@ -1346,9 +1248,8 @@ def embedding_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     trusting cluster-grain decisions (diversity quotas, SemDeDup
     cells): purity near 1/k means the cells are noise, not topics.
 
-    Codebook sizing follows the kmeans_refine_scaled convention —
-    sqrt-N floored at KM_INIT_MOD — so the fixed-mod oracle is
-    bit-identical at every testdata SF while the plan stays
+    Codebook sizing is codebook_mod(N, KM_INIT_MOD), so the static-mod
+    oracle is bit-identical at every testdata SF while the plan stays
     O(N^1.5·d) at scale. Assignment is the shared l2_assign matmul
     (vectors never shuffle); the purity window partitions by CELL
     (label-cardinality rows per cell after the count rollup)."""
@@ -1359,8 +1260,7 @@ def embedding_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    n = emb.count()
-    mod = max(KM_INIT_MOD, int(n**0.5))
+    mod = codebook_mod(emb.count(), KM_INIT_MOD)
     cent_rows = (
         emb.select("vec_id", F.posexplode("q").alias("pos", "v"))
         .filter(F.col("vec_id") % mod == 1)
@@ -1758,7 +1658,7 @@ FROM agg
 def retrieval_eval_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality evaluation harness — the recall@k / MRR scorer
     every ANN deployment runs before trusting an index: the IVF path
-    (`ann_ivf`'s exact plan) scored per query against brute-force
+    (`ann_ivf_scaled`'s exact plan) scored per query against brute-force
     ground truth (`embedding_cosine_topk`'s plan). Emits per-query
     integer metrics: truth size, hits, recall in ppm, and the
     reciprocal rank (milli) of the TRUE nearest neighbor inside the
@@ -1768,8 +1668,8 @@ def retrieval_eval_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both input rankings are existing registry plans; the eval
     itself is a (q_id, n_id)-keyed left join of two k-row-per-query
     relations plus one query-grain aggregate — negligible next to the
-    rankings it scores. Inherits ann_ivf's fixed_param guard (same
-    codebook)."""
+    rankings it scores; the IVF side is sized by codebook_mod. Classed
+    baseline: the truth side is brute force by definition."""
     from firefox_public_data_report_etl_spark.operators.similarity import (
         cosine_topk,
     )
@@ -1778,15 +1678,12 @@ def retrieval_eval_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
-    _guard_fixed_param(
-        emb.count(), CENTROID_MOD, "retrieval_eval_ann",
-        "ann_ivf_multiprobe",
-    )
+    cmod = codebook_mod(emb.count(), CENTROID_MOD)
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
     truth = cosine_topk(queries, emb, TOP_K).select(
         "q_id", "n_id", F.col("rank").alias("t_rank")
     )
-    approx = cosine_topk_ivf(emb, TOP_K, QUERY_MOD, CENTROID_MOD).select(
+    approx = cosine_topk_ivf(emb, TOP_K, QUERY_MOD, cmod).select(
         "q_id", "n_id", F.col("rank").alias("a_rank")
     )
     j = truth.join(approx, ["q_id", "n_id"], "left")
@@ -1834,81 +1731,59 @@ QUERIES = {
     "embedding_pca_project": embedding_pca_project,
     "embedding_outlier_knn": embedding_outlier_knn,
     "label_centroids": label_centroids,
-    "kmeans_lloyd_refine": kmeans_lloyd_refine,
     "kmeans_refine_scaled": kmeans_refine_scaled,
     "ann_ivf_trained": ann_ivf_trained,
     "embedding_cosine_topk": embedding_cosine_topk,
     "ann_lsh": ann_lsh,
-    "ann_ivf": ann_ivf,
     "ann_ivf_pq": ann_ivf_pq,
     "ann_ivf_pq_rerank": ann_ivf_pq_rerank,
     "ann_ivf_pq_residual": ann_ivf_pq_residual,
     "contrastive_hard_negatives": contrastive_hard_negatives,
     "ann_ivf_scaled": ann_ivf_scaled,
     "ann_ivf_multiprobe": ann_ivf_multiprobe,
-    "dedup_semantic": dedup_semantic,
     "dedup_semantic_incremental": dedup_semantic_incremental,
     "dedup_semantic_scaled": dedup_semantic_scaled,
     "embedding_quantization_audit": embedding_quantization_audit,
-    "embedding_diversity_sample": embedding_diversity_sample,
     "embedding_diversity_sample_scaled": embedding_diversity_sample_scaled,
     "embedding_cluster_purity": embedding_cluster_purity,
     "retrieval_hybrid_rrf": retrieval_hybrid_rrf,
 }
 
-# The _scaled twins reuse the fixed-mod oracles: their sqrt-N mod
-# floors at the registry constant whenever N < registry_mod^2 (10,000
-# vectors), which holds at every testdata SF (500-2,000 vectors), so
-# at oracle scales they are bit-identical to the fixed forms — while
-# being the measured scale path at the 10x/100x stacks (SCALING.md).
+# The codebook_mod plans share static-mod oracles: their mod is the
+# registry constant while int(sqrt(N)) <= registry_mod (50 / 100),
+# which holds at every testdata SF (500-2,000 vectors).
 ORACLES = {
     "embedding_drift_audit": _embedding_drift_oracle(),
     "retrieval_eval_ann": _retrieval_eval_oracle(),
     "embedding_pca_project": _pca_oracle(),
     "embedding_outlier_knn": EMBEDDING_OUTLIER_ORACLE,
     "label_centroids": LABEL_CENTROIDS_ORACLE,
-    "kmeans_lloyd_refine": _kmeans_oracle(),
     "kmeans_refine_scaled": _kmeans_oracle(),
     "ann_ivf_trained": _ann_ivf_trained_oracle(),
     "embedding_cosine_topk": EMBEDDING_TOPK_ORACLE,
     "ann_lsh": _ann_lsh_combined_oracle(),
-    "ann_ivf": ANN_IVF_ORACLE,
     "ann_ivf_pq": ANN_IVF_PQ_ORACLE,
     "ann_ivf_pq_rerank": ANN_IVF_PQ_RERANK_ORACLE,
     "ann_ivf_pq_residual": ANN_IVF_PQ_RESIDUAL_ORACLE,
     "contrastive_hard_negatives": CONTRASTIVE_HARDNEG_ORACLE,
     "ann_ivf_scaled": ANN_IVF_ORACLE,
     "ann_ivf_multiprobe": ANN_IVF_MULTIPROBE_ORACLE,
-    "dedup_semantic": _dedup_semantic_oracle(),
     "dedup_semantic_incremental": _dedup_semantic_incremental_oracle(),
     "dedup_semantic_scaled": _dedup_semantic_oracle(),
     "embedding_quantization_audit": EMBEDDING_QUANT_ORACLE,
-    "embedding_diversity_sample": _diversity_oracle(),
     "embedding_diversity_sample_scaled": _diversity_oracle(),
     "embedding_cluster_purity": _purity_oracle(),
     "retrieval_hybrid_rrf": _hybrid_rrf_oracle(),
 }
 
 # Scale classification (registry.py contract): exact |Q| x |C| top-k
-# is the brute-force ground truth for the ANN paths; ann_ivf and
-# kmeans_lloyd_refine are fixed_param — their static centroid mod is
-# what makes the oracle SQL a fixed string, but it grows the codebook
-# as N/mod (quadratic assignment, measured in SCALING.md round 5).
-# The sqrt-N twins are the scale paths.
+# is the brute-force ground truth for the ANN paths, and the recall
+# harness's truth side is brute force by definition.
 SCALE_CLASS = {
     "embedding_cosine_topk": "baseline",
     "embedding_outlier_knn": "baseline",
     "contrastive_hard_negatives": "baseline",
-    "ann_ivf": "fixed_param",
-    "ann_ivf_pq": "fixed_param",
-    "ann_ivf_pq_rerank": "fixed_param",
-    "ann_ivf_pq_residual": "fixed_param",
-    "kmeans_lloyd_refine": "fixed_param",
-    "ann_ivf_trained": "fixed_param",
-    "dedup_semantic": "fixed_param",
-    "dedup_semantic_incremental": "fixed_param",
-    "embedding_diversity_sample": "fixed_param",
-    "retrieval_eval_ann": "fixed_param",
+    "retrieval_eval_ann": "baseline",
 }
 # scale paths point at ann_ivf_multiprobe (round 6): sqrt-N codebook
 # AND nprobe=2 — the measured recall tables (tools/ann_recall.py) say
@@ -1919,14 +1794,5 @@ SCALE_PATH_FOR = {
     "embedding_cosine_topk": "ann_ivf_multiprobe",
     "embedding_outlier_knn": "ann_ivf_multiprobe",
     "contrastive_hard_negatives": "ann_ivf_multiprobe",
-    "ann_ivf": "ann_ivf_multiprobe",
-    "ann_ivf_pq": "ann_ivf_multiprobe",
-    "ann_ivf_pq_rerank": "ann_ivf_multiprobe",
-    "ann_ivf_pq_residual": "ann_ivf_multiprobe",
-    "kmeans_lloyd_refine": "kmeans_refine_scaled",
-    "ann_ivf_trained": "ann_ivf_multiprobe",
-    "dedup_semantic": "dedup_semantic_scaled",
-    "dedup_semantic_incremental": "dedup_semantic_scaled",
-    "embedding_diversity_sample": "embedding_diversity_sample_scaled",
     "retrieval_eval_ann": "ann_ivf_multiprobe",
 }

@@ -1497,7 +1497,7 @@ def multimodal_caption_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE_CLASS baseline: deliberate brute |eval|×|images| sweep
     (eval captions ride the task closure; same waived shape as
     embedding_cosine_topk); the scale path for this family is the
-    joint-space IVF probe (`multimodal_caption_retrieval_scaled`).
+    joint-space IVF probe (`multimodal_caption_retrieval_ivf`).
 
     The scoring runs through the Arrow integer rank-eval kernel
     (`operators/vectorized.py:retrieval_rank_eval_matmul`, round-11
@@ -1622,10 +1622,9 @@ def _caption_ivf_probe(spark: SparkSession, sf_dir: str):
     (approx, caps, imgs) where ``approx`` is the per-caption top
     CAP_RET_K probed ranking (cap_id, img_media, a_rank), and
     ``caps``/``imgs`` are the persisted (id, q, norm) relations the
-    recall harness reuses for its brute-truth side. Codebook sizing
-    follows the ann_ivf_scaled convention: mod = max(CAP_CENT_MOD,
-    floor(sqrt(N_images))) — floored at the registry constant at
-    oracle SFs so the oracle is a static string."""
+    recall harness reuses for its brute-truth side. Codebook sizing is
+    codebook_mod(N_images, CAP_CENT_MOD) — floored at the registry
+    constant at oracle SFs so the oracle is a static string."""
     from firefox_public_data_report_etl_spark.operators.multimodal import (
         CAP_MIS_MOD,
         CAP_MIS_RES,
@@ -1635,6 +1634,9 @@ def _caption_ivf_probe(spark: SparkSession, sf_dir: str):
         cell_pair_dots_matmul,
         ivf_assign,
     )
+    from firefox_public_data_report_etl_spark.plans.similarity import (
+        codebook_mod,
+    )
     from pyspark.sql import Window
 
     vi, vc = _caption_vectors(
@@ -1643,8 +1645,9 @@ def _caption_ivf_probe(spark: SparkSession, sf_dir: str):
         cap_pred=(F.col("doc_id") % CAP_MIS_MOD == CAP_MIS_RES)
         | (F.col("doc_id") % CAP_EVAL_MOD == 0),
     )
-    n_imgs = load_table(spark, sf_dir, "documents").count()
-    cmod = max(CAP_CENT_MOD, int(n_imgs**0.5))
+    cmod = codebook_mod(
+        load_table(spark, sf_dir, "documents").count(), CAP_CENT_MOD
+    )
 
     def _norm(col: str):
         return F.aggregate(
@@ -1737,8 +1740,8 @@ def multimodal_caption_retrieval_scaled(
     list. The truth side is |eval|×|images| BY DEFINITION of a recall
     eval — it runs through the Arrow top-K-superset kernel
     (`fixedpoint_topk_superset`) so each batch emits ~K rows per
-    caption, and the harness is classed fixed_param with the
-    probe-only query as the production scale path."""
+    caption, and the harness is classed baseline with the probe-only
+    query as the production scale path."""
     from firefox_public_data_report_etl_spark.operators.multimodal import (
         CAP_SCORE_SCALE,
     )
@@ -5254,9 +5257,10 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     this was the last silent scale-killer): past
     ``CCNET_EXACT_MAX_DOCS`` documents the exact form refuses to run
     and names ``corpus_ccnet_buckets_scaled`` — the approx-cutoff
-    twin with no global sort — mirroring the fixed-param guards in
-    plans/similarity.py. The guard counts the raw documents scan
-    (parquet metadata count, never the LM DAG)."""
+    twin with no global sort — the same refusal as
+    ``part_entity_resolution``'s ER_MAX_BLOCK guard. The guard
+    counts the raw documents scan (parquet metadata count, never the
+    LM DAG)."""
     from pyspark.sql import Window
 
     n_docs = load_table(spark, sf_dir, "documents").count()
@@ -5944,7 +5948,7 @@ def retrieval_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashproj shape over the chunk stream; ranking is |Q|·C integer
     dots with candidates never shuffling. |Q| is the mod slice; the
     production swap for corpus-sized query sets is the IVF
-    composition, same as retrieval_hashproj_ivf."""
+    composition, same as retrieval_hashproj_ivf_scaled."""
     from firefox_public_data_report_etl_spark.operators.text import (
         hashproj_embeddings,
     )
@@ -6009,21 +6013,22 @@ SELECT q_id, n_id, rank, cos FROM hp_r WHERE rank <= {HASHPROJ_TOP_K}
 
 
 # IVF composition constants: centroids are the doc_id % mod == 1
-# slice (the similarity family's convention); mod^2 = 10,000 keeps
-# every testdata SF under the fixed-param validity bound.
+# slice (the similarity family's convention), mod sized by
+# codebook_mod; mod^2 = 10,000 keeps every testdata SF on the static-
+# mod oracle (pinned by tests/test_shared_oracle_bounds.py).
 HASHPROJ_CENTROID_MOD = 100
 
 
-def retrieval_hashproj_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def retrieval_hashproj_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE path for text retrieval: hashproj embeddings fed
     into the IVF ANN stack (operators/vectorized.py:cosine_topk_ivf)
     — coarse cells from deterministic centroids, one-matmul
     assignment (vectors never shuffle to assign), within-cell exact
     ranking. Proves the text→vector bridge composes with the
     bucketed family, not just the brute matmul: nprobe·N/cells work
-    per query instead of N. Fixed-mod guarded like the embeddings-
-    table form; sqrt-N sizing (ann_ivf_scaled) is the production
-    parameterization."""
+    per query instead of N. centroid_mod is codebook_mod(N,
+    HASHPROJ_CENTROID_MOD), so #centroids ~ sqrt(N) and assignment
+    stays O(N^1.5 d)."""
     from firefox_public_data_report_etl_spark.operators.text import (
         hashproj_embeddings,
     )
@@ -6031,47 +6036,13 @@ def retrieval_hashproj_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk_ivf,
     )
     from firefox_public_data_report_etl_spark.plans.similarity import (
-        _guard_fixed_param,
+        codebook_mod,
     )
 
     emb = hashproj_embeddings(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ).cache()
-    _guard_fixed_param(
-        emb.count(),
-        HASHPROJ_CENTROID_MOD,
-        "retrieval_hashproj_ivf",
-        "retrieval_hashproj_ivf with sqrt-N centroid_mod "
-        "(ann_ivf_scaled sizing)",
-    )
-    return cosine_topk_ivf(
-        emb,
-        HASHPROJ_TOP_K,
-        HASHPROJ_QUERY_MOD,
-        HASHPROJ_CENTROID_MOD,
-        id_col="doc_id",
-    )
-
-
-def retrieval_hashproj_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sqrt-N sized twin of ``retrieval_hashproj_ivf`` (the
-    ann_ivf_scaled convention): centroid_mod derived from the corpus
-    count so #centroids ~ sqrt(N), floored at the registry constant —
-    bit-identical to the fixed form below mod^2 docs (every testdata
-    SF), which is why it shares the same oracle SQL; past the bound
-    it keeps assignment O(N^1.5 d) instead of O(N^2/mod)."""
-    from firefox_public_data_report_etl_spark.operators.text import (
-        hashproj_embeddings,
-    )
-    from firefox_public_data_report_etl_spark.operators.vectorized import (
-        cosine_topk_ivf,
-    )
-
-    emb = hashproj_embeddings(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).cache()
-    n = emb.count()
-    cmod = max(HASHPROJ_CENTROID_MOD, int(n**0.5))
+    cmod = codebook_mod(emb.count(), HASHPROJ_CENTROID_MOD)
     return cosine_topk_ivf(
         emb, HASHPROJ_TOP_K, HASHPROJ_QUERY_MOD, cmod, id_col="doc_id"
     )
@@ -6588,7 +6559,6 @@ QUERIES = {
     "quality_classifier_eval": quality_classifier_eval,
     "doc_embedding_hashproj": doc_embedding_hashproj,
     "retrieval_hashproj_topk": retrieval_hashproj_topk,
-    "retrieval_hashproj_ivf": retrieval_hashproj_ivf,
     "retrieval_hashproj_ivf_scaled": retrieval_hashproj_ivf_scaled,
     "retrieval_rag_chunks": retrieval_rag_chunks,
     "curriculum_shards": curriculum_shards,
@@ -6670,7 +6640,6 @@ ORACLES = {
     "quality_classifier_eval": _quality_classifier_eval_oracle(),
     "doc_embedding_hashproj": _hashproj_oracle(),
     "retrieval_hashproj_topk": _retrieval_hashproj_oracle(),
-    "retrieval_hashproj_ivf": _retrieval_hashproj_ivf_oracle(),
     "retrieval_hashproj_ivf_scaled": _retrieval_hashproj_ivf_oracle(),
     "retrieval_rag_chunks": _retrieval_rag_oracle(),
     "curriculum_shards": _curriculum_oracle(),
@@ -6688,7 +6657,8 @@ SCALE_CLASS = {
     # (waived in test_plan_quality); joint-space IVF bucketing is the
     # scale path for the family
     "multimodal_caption_retrieval": "baseline",
-    "multimodal_caption_retrieval_scaled": "fixed_param",
+    # recall harness: its truth side is brute force by definition
+    "multimodal_caption_retrieval_scaled": "baseline",
     "corpus_ccnet_buckets": "baseline",
     # |Q| = N/mod grows with the corpus, so the brute matmul is
     # O(N^2/mod) — a correctness baseline exactly like
@@ -6696,9 +6666,6 @@ SCALE_CLASS = {
     "retrieval_hashproj_topk": "baseline",
     # same |Q|-grows-with-corpus brute ranking over the chunk stream
     "retrieval_rag_chunks": "baseline",
-    # fixed centroid_mod stops scaling past mod^2 docs (guarded at
-    # runtime by _guard_fixed_param, same as ann_ivf).
-    "retrieval_hashproj_ivf": "fixed_param",
 }
 SCALE_PATH_FOR = {
     # the ad-hoc one-shot form stays 'scale' (one batch, full-corpus
@@ -6710,5 +6677,4 @@ SCALE_PATH_FOR = {
     "corpus_ccnet_buckets": "corpus_ccnet_buckets_scaled",
     "retrieval_hashproj_topk": "retrieval_hashproj_ivf_scaled",
     "retrieval_rag_chunks": "retrieval_hashproj_ivf_scaled",
-    "retrieval_hashproj_ivf": "retrieval_hashproj_ivf_scaled",
 }

@@ -5,6 +5,7 @@ order-insensitive values) at sf0.001."""
 from __future__ import annotations
 
 import pytest
+from conftest import every_nth_sample
 
 from firefox_public_data_report_etl_spark.testing import check_query
 
@@ -46,10 +47,10 @@ _FAST_EVERY_NTH = 5
 def _params():
     from firefox_public_data_report_etl_spark.plans import QUERIES
 
-    names = sorted(QUERIES)
+    sample = every_nth_sample(QUERIES, _FAST_EVERY_NTH)
     out = []
-    for i, name in enumerate(names):
-        fast = name in _FAST_ALWAYS or i % _FAST_EVERY_NTH == 0
+    for name in sorted(QUERIES):
+        fast = name in _FAST_ALWAYS or name in sample
         marks = () if fast else (pytest.mark.full,)
         out.append(pytest.param(name, marks=marks, id=name))
     return out

@@ -26,7 +26,7 @@ BNLJ_ALLOWED = {
     "embedding_cosine_topk": "Inner",       # brute-force baseline: q x cands
     # recall/MRR eval harness: scores the IVF plan against the brute
     # ground truth, so it contains cosine_topk's waived broadcast
-    # theta-join (SCALE_CLASS=fixed_param, scale path multiprobe)
+    # theta-join (SCALE_CLASS=baseline, scale path multiprobe)
     "retrieval_eval_ann": "Inner",
     # (dedup_embedding_cosine lost its waiver in round 11: the pair
     # dots now run in the Arrow matmul stage — no join in the plan)
@@ -201,7 +201,7 @@ def test_weekly_engagement_scan_prune(spark, sf_dir):
 def test_ann_ivf_is_hash_partitioned_by_cell(spark, sf_dir):
     """IVF candidate scoring must be a broadcast/hash join on the cell
     key — never an all-pairs nested loop."""
-    plan = _executed_plan(spark, "ann_ivf", sf_dir)
+    plan = _executed_plan(spark, "ann_ivf_scaled", sf_dir)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

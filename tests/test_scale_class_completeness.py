@@ -5,7 +5,7 @@ as ONE WindowExec task, the silent straggler class that
 corpus_ccnet_buckets shipped as in r7 — is only allowed when either
 
   (a) the query is explicitly classed non-"scale" in SCALE_CLASS
-      (baseline / fixed_param / streaming_binding), i.e. the bench
+      (baseline / streaming_binding), i.e. the bench
       and README already present it as a correctness device with a
       named scale path; or
   (b) the query appears in plans.registry.REPORT_EDGE_WINDOWS with a

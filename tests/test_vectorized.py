@@ -469,8 +469,8 @@ def test_threshold_pairs_matmul_matches_expression_form(spark):
 
 def test_threshold_pairs_closure_guard_fires(spark):
     """The brute baseline refuses corpora past the closure bound and
-    names the banded scale path (the _guard_fixed_param refusal
-    convention)."""
+    names the banded scale path (the same refusal convention as the
+    ER_MAX_BLOCK guard)."""
     import pytest
 
     from firefox_public_data_report_etl_spark.operators import (

@@ -77,6 +77,7 @@ def main() -> None:
         QUERY_MOD,
         TOP_K,
         ann_ivf_scaled,
+        codebook_mod,
     )
     from firefox_public_data_report_etl_spark.sources import load_table
 
@@ -87,7 +88,6 @@ def main() -> None:
         truth = pairs(QUERIES["embedding_cosine_topk"](spark, sf_dir))
         emb = quantized(load_table(spark, sf_dir, "embeddings")).cache()
         variants = {
-            "ann_ivf": QUERIES["ann_ivf"](spark, sf_dir),
             "ann_ivf_multiprobe": QUERIES["ann_ivf_multiprobe"](
                 spark, sf_dir
             ),
@@ -119,7 +119,7 @@ def main() -> None:
     # sqrt-N centroid sizing on the synthetic corpus (n ~ 2080 -> ~45
     # centroids via the % trick on background ids)
     n = emb.count()
-    cmod = max(7, int(n**0.5))
+    cmod = codebook_mod(n, 7)
     variants = {
         "ivf_nprobe1": cosine_topk_ivf(emb, 1, 1000, cmod, nprobe=1),
         "ivf_nprobe2": cosine_topk_ivf(emb, 1, 1000, cmod, nprobe=2),

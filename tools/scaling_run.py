@@ -8,11 +8,9 @@ sf0.001) plus a fixed-size drift-control query per point — the data
 behind SCALING.md's measured-slope tables.
 
 SCALE_CLASS-aware: queries classed "baseline" (deliberate brute
-force) OR "fixed_param" (static parameter stops scaling past test SF)
-are skipped above the --baseline-cap point so the runner itself can't
-accidentally present a non-scaling correctness device as a scale
-measurement; pass a higher cap to measure them anyway (that is how
-SCALING.md's 106 s / 44 s fixed-mod points were taken).
+force) are skipped above the --baseline-cap point so the runner
+itself can't accidentally present a non-scaling correctness device as
+a scale measurement; pass a higher cap to measure them anyway.
 
 Usage:
   python tools/scaling_run.py                          # default set
@@ -53,7 +51,6 @@ DEFAULT_NAMES = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "embedding_cosine_topk",
-    "ann_ivf",
     "text_quality_scores",
     "user_sessions",
     "sequence_packing",
@@ -61,7 +58,6 @@ DEFAULT_NAMES = [
     "corpus_boilerplate",
     "pii_redaction",
     "corpus_curation_pipeline",
-    "kmeans_lloyd_refine",
     "kmeans_refine_scaled",
     "ann_ivf_scaled",
     # round-7 additions
@@ -145,7 +141,7 @@ def main() -> None:
         "--baseline-cap",
         type=float,
         default=1.0,
-        help="max sf at which baseline/fixed_param-classed queries still run",
+        help="max sf at which baseline-classed queries still run",
     )
     ap.add_argument(
         "--sink",
@@ -290,10 +286,7 @@ def main() -> None:
             args.samples,
         )
         for n in names:
-            if (
-                SCALE_CLASS.get(n) in ("baseline", "fixed_param")
-                and sf > args.baseline_cap
-            ):
+            if SCALE_CLASS.get(n) == "baseline" and sf > args.baseline_cap:
                 row[n] = None  # capped: non-scaling correctness device
                 continue
             run_name[0] = n
@@ -302,7 +295,7 @@ def main() -> None:
                 row[n] = best_of(
                     lambda: run(queries[n](spark, sf_dir)), args.samples
                 )
-            except Exception as e:  # noqa: BLE001 — e.g. a fixed-param
+            except Exception as e:  # noqa: BLE001 — e.g. a baseline
                 # guard refusing an oversized stack: record it and keep
                 # measuring the rest of the set instead of losing the run
                 row[n] = f"error: {type(e).__name__}: {e}"[:300]
