@@ -13,10 +13,26 @@ from __future__ import annotations
 import pytest
 
 from firefox_public_data_report_etl_spark.plans.similarity import (
+    CENTROID_MOD,
     KM_INIT_MOD,
+    PQ_CB_MOD,
     ann_ivf_trained,
     codebook_mod,
 )
+from firefox_public_data_report_etl_spark.plans.text import (
+    HASHPROJ_CENTROID_MOD,
+)
+
+
+def test_guard_inequality_is_exact() -> None:
+    """The inequality test_shared_oracle_bounds guards,
+    int(sqrt(n)) <= floor, is exactly the range where codebook_mod
+    returns the registry constant: every n below (floor + 1)^2 keeps
+    the floor, and (floor + 1)^2 is the first n that leaves it."""
+    for floor in (CENTROID_MOD, KM_INIT_MOD, PQ_CB_MOD, HASHPROJ_CENTROID_MOD):
+        edge = (floor + 1) ** 2
+        assert all(codebook_mod(n, floor) == floor for n in range(edge))
+        assert codebook_mod(edge, floor) == floor + 1
 
 
 def _write_oversized(spark, tmp_path, n: int) -> str:
