@@ -69,17 +69,13 @@ def cmd_hardware_report(args: argparse.Namespace) -> int:
     ]
     raw_map = json.loads(Path(args.device_map).read_text())
     input_df = spark.read.parquet(args.input_path)
-    back, wide = run_pipeline(
+    _, records = run_pipeline(
         spark,
         input_df,
         invert_device_map(raw_map),
         args.output_path,
         only_weeks=weeks,
     )
-    records = [
-        {k: (v.isoformat() if isinstance(v, date) else v) for k, v in r.asDict().items()}
-        for r in wide.collect()
-    ]
     wrote = write_json_report(records, args.report_path, dryrun=args.dry_run)
     print(f"hardware_report: {len(records)} weekly rows; wrote={wrote}")
     return 0

@@ -4,8 +4,9 @@ buildhub2 (nested build struct) + a generated weekly date spine.
 
 Lifecycle (SURVEY.md §3.3): weekly spine (S12) ⋈≤ release builds (J4)
 → MAX major version per spine day (A8) → MIN day per version (A9) →
-newest-first rows (O4) → per-country fan-out dict (P4) merged with
-static annotations (P5, sources.export.merge_usage_annotations).
+collect, newest first on the driver (O4) → per-country fan-out dict
+(P4) merged with static annotations (P5,
+sources.export.merge_usage_annotations).
 """
 
 from __future__ import annotations
@@ -47,23 +48,21 @@ def release_first_weeks(
         .agg(F.max("vmax").alias("version"))
         .filter(F.col("version").isNotNull())
     )
-    return (
-        latest.groupBy("version")
-        .agg(F.min("day").alias("day"))
-        .orderBy(F.desc("day"))
-    )
+    return latest.groupBy("version").agg(F.min("day").alias("day"))
 
 
 def fxhealth_annotations(
     first_weeks: DataFrame, countries: list[str]
 ) -> dict[str, list[dict]]:
-    """P4 (annotations.py:77-86): the same release-date rows replicated
-    under every country key, report-sized → driver dict."""
+    """P4 (annotations.py:77-86): the same release-date rows, newest
+    first (O4), replicated under every country key, report-sized →
+    driver dict. Each day is the first week of one version, so the
+    order is total."""
     rows = [
         {
             "annotation": f"Firefox {r['version']} release",
             "date": r["day"].isoformat(),
         }
-        for r in first_weeks.collect()
+        for r in sorted(first_weeks.collect(), key=lambda r: r["day"], reverse=True)
     ]
     return {c: [dict(a) for a in rows] for c in countries}

@@ -17,14 +17,16 @@ Reference lifecycle (SURVEY.md §3.1) → Spark shape:
                                         rules (sentinel '0x0',
                                         exemptions, floor threshold)
   ratios (A16, :318-323)              → count / window total
-  kv rows + $YYYYMMDD write (P1/S5)   → sorted long rows, partitioned
-                                        parquet with dynamic overwrite
-  read-back + flatten (S4/P2,:327-350)→ orderBy + pivot on
-                                        prefix-translated keys
+  kv rows + $YYYYMMDD write (P1/S5)   → long rows, partitioned parquet
+                                        with dynamic overwrite
+  read-back + flatten (S4/P2,:327-350)→ one scan + collect of the
+                                        long rows, pivoted on the
+                                        driver at the JSON edge
 
 Scale: the whole weekly pass is one shuffle for the aggregate plus two
 tiny re-aggregations of (dim,key) count rows (hundreds). The device
-map is broadcast. Nothing driver-side until the report-sized export.
+map is broadcast. The only driver-side step is the report-sized
+pivot: weeks × collapsed keys cells, which the export writes anyway.
 """
 
 from __future__ import annotations
@@ -128,12 +130,13 @@ def aggregate_dimensions_long(df: DataFrame, devices: DataFrame) -> DataFrame:
     def _key(d: str) -> F.Column:
         # Reference keys are Python str(value): booleans must render
         # 'True'/'False' (tests/test_hardware_report.py:183), not
-        # Spark's lowercase cast.
+        # Spark's lowercase cast, and NULL renders 'None' in every
+        # dimension (hardware_report.py:321).
         if dtypes.get(d) == "boolean":
-            return F.when(F.col(d), F.lit("True")).when(
-                ~F.col(d), F.lit("False")
-            )
-        return F.col(d).cast("string")
+            key = F.when(F.col(d), F.lit("True")).when(~F.col(d), F.lit("False"))
+        else:
+            key = F.col(d).cast("string")
+        return F.coalesce(key, F.lit("None"))
 
     pairs = F.array(
         *[
@@ -197,50 +200,27 @@ def collapse_hardware(long_df: DataFrame) -> DataFrame:
 
 
 def hardware_weekly(df: DataFrame, devices: DataFrame) -> DataFrame:
-    """Full weekly aggregate → collapsed ratio rows, sorted kv order
-    (P1, hardware_report.py:448-453)."""
-    return collapse_hardware(aggregate_dimensions_long(df, devices)).orderBy(
-        "date_from", "dimension", "key"
-    )
+    """Full weekly aggregate → collapsed ratio rows (P1,
+    hardware_report.py:448-453). Unordered: parquet row order is not
+    part of the table's contract, and the report orders its own rows."""
+    return collapse_hardware(aggregate_dimensions_long(df, devices))
 
 
-def flatten_wide(weekly: DataFrame) -> DataFrame:
-    """P2 flatten_aggregates (hardware_report.py:327-350): one row per
-    week, columns '<prefix><key>' with the ratio values, newest first.
-
-    The pivot gets an EXPLICIT values list (r7 review fix): without
-    one, ``pivot`` runs a hidden distinct-keys job over the full
-    upstream DAG (with a silent 10k-value ceiling) and orders the
-    output columns by whatever that job returns. The key universe is
-    data-driven (the collapse invents "Other" buckets), so the list
-    can't be a static spec — instead it is collected once here from
-    the (date, dimension, key) grain, which is report-sized by
-    construction (weeks × 11 dims × collapsed keys), and sorted so
-    the wide schema is deterministic run-to-run — the property the
-    JSON export diff actually depends on."""
-    flat = weekly.select(
-        F.date_format("date_from", "yyyy-MM-dd").alias("date"),
-        F.concat(
-            # dimension → camelCase prefix via a literal map lookup
-            F.element_at(
-                F.create_map(
-                    *[F.lit(x) for kv in KEYS_TRANSLATION.items() for x in kv]
-                ),
-                F.col("dimension"),
-            ),
-            F.col("key"),
-        ).alias("flat_key"),
-        "ratio",
-    )
-    keys = sorted(
-        r["flat_key"] for r in flat.select("flat_key").distinct().collect()
-    )
-    return (
-        flat.groupBy("date")
-        .pivot("flat_key", keys)
-        .agg(F.first("ratio"))
-        .orderBy(F.desc("date"))
-    )
+def wide_records(rows) -> list[dict]:
+    """P2 flatten_aggregates (hardware_report.py:327-350) at the JSON
+    edge: (date, dimension, key, ratio) rows → one record per week,
+    newest first, keyed ``date`` then the sorted '<prefix><key>' names;
+    a key absent in a week is ``None``. The rows are report-sized by
+    construction (weeks × 11 dims × collapsed keys), so the pivot runs
+    on the driver and starts no Spark job."""
+    weeks: dict[str, dict] = {}
+    for date, dimension, key, ratio in rows:
+        weeks.setdefault(date, {})[KEYS_TRANSLATION[dimension] + key] = ratio
+    keys = sorted({k for cells in weeks.values() for k in cells})
+    return [
+        {"date": date, **{k: weeks[date].get(k) for k in keys}}
+        for date in sorted(weeks, reverse=True)
+    ]
 
 
 def run_pipeline(
@@ -249,10 +229,11 @@ def run_pipeline(
     inverted_device_map: dict,
     out_path: str,
     only_weeks: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[dict]]:
     """End-to-end weekly job (SURVEY.md §3.1): aggregate + collapse →
     idempotent partitioned write (S5, $YYYYMMDD WRITE_TRUNCATE analog)
-    → ordered read-back (S4) → wide export frame (P2).
+    → read-back of the full history (S4) → wide report records (P2).
+    Returns the read-back table and the records.
 
     Incrementality: the reference loops ``--past_weeks`` submitting one
     BigQuery job per week partition (hardware_report.py:427-437); here
@@ -265,5 +246,8 @@ def run_pipeline(
         input_df = input_df.filter(F.col("date_from").isin(only_weeks))
     weekly = hardware_weekly(input_df, devices)
     write_partitioned(weekly, out_path, ["date_from"])
-    back = spark.read.parquet(out_path).orderBy("date_from")
-    return back, flatten_wide(back)
+    back = spark.read.parquet(out_path)
+    rows = back.select(
+        F.date_format("date_from", "yyyy-MM-dd"), "dimension", "key", "ratio"
+    ).collect()
+    return back, wide_records(rows)

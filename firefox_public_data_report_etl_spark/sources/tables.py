@@ -254,8 +254,9 @@ def write_partitioned(
 ) -> None:
     """Partitioned sink with idempotent per-partition overwrite (S5/S6;
     reference hardware_report.py:458-465 writes ``table$YYYYMMDD`` with
-    WRITE_TRUNCATE). ``partitionOverwriteMode=dynamic`` is set at
-    runtime (harness-proof: works on sessions not built by our
-    factory), so ``mode="overwrite"`` replaces only touched partitions."""
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    WRITE_TRUNCATE). ``partitionOverwriteMode=dynamic`` is scoped to
+    this write (harness-proof: works on sessions not built by our
+    factory, and leaves the session's own mode as it found it), so
+    ``mode="overwrite"`` replaces only touched partitions."""
+    with partition_overwrite_mode(df.sparkSession, "dynamic"):
+        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)

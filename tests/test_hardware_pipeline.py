@@ -166,16 +166,15 @@ def test_collapse_os_two_phase(spark):
 
 
 def test_full_pipeline_roundtrip(spark, tmp_path):
-    """S5/S4/P2: write partitioned, read back ordered, flatten wide
-    with camelCase prefixes; dynamic overwrite is idempotent."""
-    devices = hp.device_map_df(spark, hp.invert_device_map(RAW_DEVICE_MAP))
+    """S5/S4/P2: write partitioned, read back, flatten wide with
+    camelCase prefixes; dynamic overwrite is idempotent."""
     out = str(tmp_path / "hw")
-    back, wide = hp.run_pipeline(
+    back, records = hp.run_pipeline(
         spark, _input_df(spark), hp.invert_device_map(RAW_DEVICE_MAP), out
     )
     n1 = back.count()
     assert n1 > 0
-    row = wide.first().asDict()
+    row = records[0]
     assert row["date"] == "2024-01-01"
     assert abs(row["browserArch_x86-64"] - 1.0) < 1e-12
     assert abs(row["gpuVendor_NVIDIA"] - 1 / 6) < 1e-12
@@ -211,3 +210,52 @@ def test_incremental_week_recompute(spark, tmp_path):
         (F.col("date_from") == w2) & (F.col("dimension") == "browser_arch")
     ).collect()
     assert w2_counts[0]["client_count"] == 12
+
+
+def test_report_records_two_weeks(spark, tmp_path):
+    """P2 at the JSON edge: one record per week, newest first, keyed
+    'date' then the sorted prefixed keys; a key seen in one week only
+    is None in the other. An only_weeks rerun still reports the whole
+    history read back from the table."""
+    out = str(tmp_path / "hw_wide")
+    inv = hp.invert_device_map(RAW_DEVICE_MAP)
+    w2 = date(2024, 1, 8)
+    df1 = _input_df(spark)
+    df2 = df1.withColumn("date_from", F.lit(w2)).withColumn(
+        "cpu_vendor", F.lit("AuthenticAMD")
+    )
+    _, records = hp.run_pipeline(spark, df1.unionByName(df2), inv, out)
+
+    keys = {k for r in records for k in r} - {"date"}
+    assert all(list(r) == ["date"] + sorted(keys) for r in records)
+    assert [r["date"] for r in records] == ["2024-01-08", "2024-01-01"]
+    new, old = records
+    assert new["cpuVendor_AuthenticAMD"] == 1.0
+    assert new["cpuVendor_GenuineIntel"] is None
+    assert old["cpuVendor_AuthenticAMD"] is None
+    assert old["cpuVendor_GenuineIntel"] == 1.0
+
+    _, rerun = hp.run_pipeline(
+        spark, df1.unionByName(df2), inv, out, only_weeks=[w2]
+    )
+    assert rerun == records
+
+
+def test_null_dimension_value_reports_none_key(spark, tmp_path):
+    """A NULL dimension value keys as 'None' (the reference's str(key)),
+    booleans included, instead of a NULL column name in the report."""
+    df = _input_df(spark).withColumn(
+        "cpu_cores",
+        F.when(F.col("client_count") == 5, F.lit(None)).otherwise(F.col("cpu_cores")),
+    ).withColumn(
+        "has_flash",
+        F.when(F.col("client_count") == 5, F.lit(None)).otherwise(F.col("has_flash")),
+    )
+    _, records = hp.run_pipeline(
+        spark, df, hp.invert_device_map(RAW_DEVICE_MAP), str(tmp_path / "hw_null")
+    )
+    row = records[0]
+    assert abs(row["cpuCores_None"] - 5 / 6) < 1e-12
+    assert abs(row["cpuCores_4"] - 1 / 6) < 1e-12
+    assert abs(row["hasFlash_None"] - 5 / 6) < 1e-12
+    assert abs(row["hasFlash_True"] - 1 / 6) < 1e-12

@@ -416,3 +416,32 @@ def test_user_activity_weekly_plan_shape(spark):
         if line.lstrip(" :+-").startswith("ShuffleQueryStage")
     )
     assert stages <= USER_ACTIVITY_MAX_SHUFFLE_STAGES, plan
+
+
+# Spark jobs run_pipeline starts on the hardware fixture, report
+# records included: the aggregate, collapse and partitioned write, then
+# one read-back scan and one collect. The parent design ran 9 jobs in
+# run_pipeline (a range sort before the write, an ordered read-back and
+# a distinct-keys collect) and the wide frame's pivot + sort collect in
+# the CLI added 5 more: 14 in all.
+HARDWARE_MAX_JOBS = 6
+
+
+def test_hardware_run_pipeline_job_count(spark, tmp_path):
+    from firefox_public_data_report_etl_spark.plans import hardware_pipeline as hp
+    from tests.test_hardware_pipeline import RAW_DEVICE_MAP, _input_df
+
+    sc = spark.sparkContext
+    group = "plan-quality-hardware"
+    sc.setJobGroup(group, "hardware run_pipeline job count")
+    try:
+        _, records = hp.run_pipeline(
+            spark, _input_df(spark), hp.invert_device_map(RAW_DEVICE_MAP),
+            str(tmp_path / "hw"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= HARDWARE_MAX_JOBS, len(jobs)
+    assert len(records) == 1

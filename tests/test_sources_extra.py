@@ -1,5 +1,6 @@
 """HTTP JSON source (injectable transport), packaged static resources,
-and session-window cross-validation."""
+the partitioned sink's overwrite scope, and session-window
+cross-validation."""
 
 from __future__ import annotations
 
@@ -44,6 +45,30 @@ def test_read_static_json_and_merge():
     # defaults appended everywhere, absent countries created
     assert len(merged["Worldwide"]) == 2
     assert len(merged["Germany"]) == 1
+
+
+def test_write_partitioned_scopes_dynamic_overwrite(spark, tmp_path):
+    """The sink replaces only the partitions it writes, and leaves the
+    session's own partitionOverwriteMode as it found it."""
+    from firefox_public_data_report_etl_spark.sources import write_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        path = str(tmp_path / "parts")
+        write_partitioned(
+            spark.createDataFrame([(1, "a"), (2, "b")], ["v", "p"]), path, ["p"]
+        )
+        write_partitioned(spark.createDataFrame([(3, "a")], ["v", "p"]), path, ["p"])
+        assert spark.conf.get(key) == "static"
+        got = sorted((r["p"], r["v"]) for r in spark.read.parquet(path).collect())
+        assert got == [("a", 3), ("b", 2)]
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_session_window_matches_lag_formulation(spark, sf_dir):
