@@ -122,7 +122,7 @@ def gpu_vendor_name(col: Column) -> Column:
     lookup (JVM-side), equivalent to a broadcast join against an 11-row
     dim."""
     mapping = F.create_map(*[F.lit(x) for kv in GPU_VENDOR_MAP.items() for x in kv])
-    return F.coalesce(mapping.getItem(col), F.lit("Other"))
+    return F.coalesce(mapping[col], F.lit("Other"))
 
 
 def os_arch(browser_arch: Column, os_col: Column, is_wow64: Column) -> Column:

@@ -3,14 +3,17 @@
 ``connected_components`` labels each node of an undirected edge set
 with the minimum node id reachable from it — the canonical clustering
 step after near-dup pair mining (pairs → dedup clusters → keep one
-representative per component).
+representative per component). It is the one connected-components
+operator; every dedup, multimodal, entity-resolution and
+streaming-gate caller composes it.
 
-Spark-first shape: iterative min-label propagation as a driver loop of
-DataFrame joins with an early-exit convergence check. Each iteration
-``localCheckpoint``s the label table — without lineage truncation the
+Spark-first shape: alternating large-star/small-star contraction as
+a driver loop of DataFrame exchanges with a convergence check. It
+needs O(log n) rounds on any topology, so a long chain of pairwise
+near-dups costs no more rounds than a shallow cluster. Each round
+``localCheckpoint``s the edge set — without lineage truncation the
 plan doubles every round and the job dies long before 100 TB. On a
-cluster, swap localCheckpoint for a reliable checkpoint dir. Rounds
-needed = graph diameter (dedup clusters are shallow; cap defensively).
+cluster, swap localCheckpoint for a reliable checkpoint dir.
 """
 
 from __future__ import annotations
@@ -35,7 +38,10 @@ def _local_contract(e: DataFrame) -> DataFrame:
     orderable type work (component min = min index because
     ``np.unique`` sorts ascending).
 
-    Input/output contract: canonical a > b rows, distinct.
+    Input: canonical a >= b rows, distinct; a self-loop row (x, x)
+    only says that x is a node. Output: canonical a > b rows, plus
+    (x, x) for each self-looped node that is a root in its partition,
+    so a node seen only in self-loops survives the contraction.
     """
 
     def gen(it):
@@ -54,6 +60,8 @@ def _local_contract(e: DataFrame) -> DataFrame:
         nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
         u, v = inv[: len(a)], inv[len(a):]
         p = np.arange(len(nodes))
+        looped = np.zeros(len(nodes), dtype=bool)
+        looped[u[u == v]] = True
         while True:
             old = p
             p = p.copy()
@@ -62,71 +70,12 @@ def _local_contract(e: DataFrame) -> DataFrame:
             p = np.minimum(p, p[p])  # pointer jumping: O(log) passes
             if np.array_equal(p, old):
                 break
-        mask = p != np.arange(len(nodes))
+        mask = (p != np.arange(len(nodes))) | looped
         import pandas as pd
 
         yield pd.DataFrame({"a": nodes[mask], "b": nodes[p[mask]]})
 
     return e.mapInPandas(gen, schema=e.schema)
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "da",
-    dst: str = "db",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(node, component) for every node in ``edges``; component is the
-    min reachable node id. Raises if not converged within max_iter."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # No distinct on the symmetrized edge set (round 13, guide §2.4):
-    # duplicate rows are harmless to every consumer — the per-node
-    # neighborhood aggregate is a MIN (idempotent under multiplicity),
-    # the node set below has its own distinct, and the changed-count
-    # reads the label table, never edge multiplicities — so the former
-    # edge-grain dedup exchange was pure cost on every caller (the
-    # common pair-miner inputs are distinct canonical pairs already,
-    # whose two symmetrized directions can never collide).
-    und = und.localCheckpoint()
-
-    labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iter):
-        neigh = (
-            und.join(labels, und.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        # The changed-flag rides the label row itself (ncomp < comp ⇔
-        # this round improved the label), so convergence needs no
-        # re-join of new vs old. The lazy localCheckpoint materializes
-        # inside the SAME job as the changed-count action below: one
-        # job launch per iteration instead of three (eager checkpoint +
-        # join + count).
-        new_labels = (
-            labels.join(neigh, labels.node == neigh.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                ).alias("comp"),
-                (
-                    F.coalesce(F.col("ncomp"), F.col("comp")) < F.col("comp")
-                ).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
 
 PR_SCALE = 1_000_000_000  # 1e9: rank sums stay < 2^63 up to ~1e8 nodes
@@ -206,21 +155,24 @@ def pagerank_fixed(
     return ranks
 
 
-def connected_components_star(
+#: Double-round cap. Star contraction converges in O(log n) rounds on
+#: any topology, so reaching the cap means a bug, not a deep graph.
+CC_MAX_ROUNDS = 30
+
+
+def connected_components(
     edges: DataFrame,
     src: str = "da",
     dst: str = "db",
-    max_iter: int = 30,
-    emit_roots: bool = True,
 ) -> DataFrame:
-    """(node, comp) via alternating large-star/small-star contraction
+    """(node, comp) for every endpoint in ``edges``; comp is the min
+    reachable node id, and a node whose only edge is a self-loop
+    labels itself. Alternating large-star/small-star contraction
     (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the any-topology scale twin of ``connected_components``:
-    min-label propagation needs graph-DIAMETER rounds (a 1,000-link
-    chain of pairwise near-dups = 1,000 shuffle rounds), star
-    contraction provably converges in O(log n) alternations on any
-    graph. Both produce the identical min-id labeling, so the two
-    forms share one oracle.
+    Beyond"): min-label propagation needs graph-DIAMETER rounds (a
+    1,000-link chain of pairwise near-dups = 1,000 shuffle rounds),
+    star contraction provably converges in O(log n) alternations on
+    any graph.
 
     Round shape (round 13): each star op is ONE exchange. The edge
     set is explicitly repartitioned on the grouping node, and BOTH
@@ -240,26 +192,19 @@ def connected_components_star(
     set IS the star forest, each child pointing at its component's
     minimum id. localCheckpoint truncates lineage per round (swap
     for a reliable checkpoint dir on a cluster).
-
-    ``emit_roots=False`` skips the roots rows (nodes that appear only
-    as parents, which label themselves): callers that left-join the
-    labeling onto the full record set and ``coalesce(comp, id)``
-    (the ER survivorship shape) get the identical result without the
-    roots aggregate + union legs.
     """
-    e = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .select(
-            F.greatest("x", "y").alias("a"), F.least("x", "y").alias("b")
-        )
-        .distinct()
-    )
+    e = edges.select(
+        F.greatest(src, dst).alias("a"), F.least(src, dst).alias("b")
+    ).distinct()
     # Round-12: partition-local contraction rides the same job as the
     # eager checkpoint — a narrow map after the distinct shuffle, so
     # the rounds below start from per-task star forests (≤ 1 row per
     # node) instead of the raw pair relation. See _local_contract.
-    e = _local_contract(e).localCheckpoint()
+    # Self-loops ride along as (x, x) rows so a node seen only in a
+    # self-loop still gets its own label; the rounds never see them.
+    contracted = _local_contract(e).localCheckpoint()
+    loops = contracted.filter(F.col("a") == F.col("b"))
+    e = contracted.filter(F.col("a") != F.col("b"))
 
     # Round-12 note (measured, kept honest): replacing each star's
     # groupBy-min + join-back with a single window-min was TRIED and
@@ -300,26 +245,29 @@ def connected_components_star(
 
     def _node_stats(E: DataFrame) -> DataFrame:
         """(node, nc=child-occurrence count, np=1 iff ever a parent) —
-        one exchange over the edge rows."""
+        one exchange over the edge rows. A self-loop row (x, x) only
+        adds x, with nc = np = 0."""
+        edge = (F.col("a") != F.col("b")).cast("int")
         return (
             E.select(
                 F.explode(
                     F.array(
                         F.struct(
-                            F.col("a").alias("node"), F.lit(1).alias("c")
+                            F.col("a").alias("node"),
+                            edge.alias("c"),
+                            F.lit(0).alias("p"),
                         ),
                         F.struct(
-                            F.col("b").alias("node"), F.lit(0).alias("c")
+                            F.col("b").alias("node"),
+                            F.lit(0).alias("c"),
+                            edge.alias("p"),
                         ),
                     )
                 ).alias("x")
             )
-            .select("x.node", "x.c")
+            .select("x.*")
             .groupBy("node")
-            .agg(
-                F.sum("c").alias("nc"),
-                F.max(1 - F.col("c")).alias("np"),
-            )
+            .agg(F.sum("c").alias("nc"), F.max("p").alias("np"))
         )
 
     # Round-13 convergence test: e is a fixpoint of BOTH stars iff it
@@ -340,24 +288,21 @@ def connected_components_star(
     # set-difference join is gone entirely. Duplicate rows in the
     # un-deduped contract output can only raise nc (a conservative
     # extra round, never a wrong early exit).
-    for _ in range(max_iter + 1):
-        stats = _node_stats(e)
+    for _ in range(CC_MAX_ROUNDS + 1):
+        # The stats ride the convergence count's job (lazy checkpoint),
+        # so the roots below — every node never a child: the forest's
+        # parents and the self-looped nodes — cost no further exchange.
+        stats = _node_stats(e.unionByName(loops)).localCheckpoint(
+            eager=False
+        )
         unconverged = stats.filter(
             (F.col("nc") > 1) | ((F.col("nc") > 0) & (F.col("np") > 0))
         )
         if unconverged.count() == 0:
-            labeled = e.select(
+            roots = stats.filter(F.col("nc") == 0)
+            return e.select(
                 F.col("a").alias("node"), F.col("b").alias("comp")
-            )
-            if not emit_roots:
-                return labeled
-            # Roots (nodes never in child position) from the same
-            # node-grain aggregate shape — one exchange, replacing
-            # the former distinct + left_anti subtract (three).
-            roots = _node_stats(e).filter(F.col("nc") == 0).select("node")
-            return labeled.unionByName(
-                roots.select("node", F.col("node").alias("comp"))
-            )
+            ).unionByName(roots.select("node", F.col("node").alias("comp")))
         # Round-12 second pass (guide §5 — fewer driver actions per
         # iteration): TWO large/small alternations ride each
         # checkpoint + convergence test, halving the per-round
@@ -369,7 +314,7 @@ def connected_components_star(
             .localCheckpoint(eager=False)
         )
     raise RuntimeError(
-        f"connected_components_star: no convergence in {max_iter} rounds"
+        f"connected_components: no convergence in {CC_MAX_ROUNDS} rounds"
     )
 
 

@@ -259,8 +259,9 @@ def incremental_decisions(
     - ``cross_pairs``  (base_id, batch_id, …) already thresholded;
     - ``within_pairs`` (da, db, …) batch-internal, already thresholded;
     - connected components over the union edge set label every
-      edge-touching doc with its min reachable id; batch singletons
-      label themselves;
+      edge-touching doc with its min reachable id — a same-id cross
+      pair (a re-sent base doc) labels that doc itself, so it still
+      counts as matched; batch singletons label themselves;
     - ``matched_base``: the component contains a base doc — every
       such batch doc is a duplicate of already-curated content and
       dropped (the base copy IS the corpus representative);
@@ -268,8 +269,9 @@ def incremental_decisions(
       one representative per new-content duplicate class.
 
     Scale: edges are pair-sized (post-LSH candidates, not corpus
-    pairs); the CC iteration is the shipped lineage-truncated loop
-    (operators/graph.py); everything after is #batch-row joins.
+    pairs); the CC is the O(log n)-round star contraction
+    (operators/graph.py), so a long chain of near-dups in one batch
+    cannot exhaust its rounds; everything after is #batch-row joins.
     """
     from firefox_public_data_report_etl_spark.operators.graph import (
         connected_components,

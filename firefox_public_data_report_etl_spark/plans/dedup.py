@@ -296,12 +296,17 @@ WHERE CAST(inter AS DOUBLE) / x.n >= {PROD_SIM_THRESHOLD}
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs → dedup clusters: iterative min-label connected
-    components over the verified MinHash-LSH pair graph (the step that
-    turns pairwise matches into keep-one-per-cluster decisions).
+    """Near-dup pairs → dedup clusters: connected components over the
+    verified MinHash-LSH pair graph (the step that turns pairwise
+    matches into keep-one-per-cluster decisions), labeled by
+    alternating large-star / small-star contraction — O(log n)
+    rounds on ANY graph, so chained near-dups cost no more rounds
+    than shallow clusters. ``tests/test_graph.py`` pins the operator
+    on adversarial topologies (long chains) the testdata graph
+    doesn't contain.
 
-    The oracle expresses the same fixpoint as a recursive CTE — an
-    independent formulation, so convergence bugs can't hide.
+    The oracle expresses the same min-id fixpoint as a recursive CTE
+    — an independent formulation, so convergence bugs can't hide.
     """
     from firefox_public_data_report_etl_spark.operators.graph import (
         connected_components,
@@ -656,29 +661,6 @@ r AS (
 SELECT component, doc_id, n_members, n_tokens, score_munats
 FROM r WHERE rn = 1
 """
-
-
-def dedup_clusters_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_clusters``' any-topology scale twin: the same verified
-    MinHash-LSH pair graph labeled by alternating large-star /
-    small-star contraction (O(log n) rounds on ANY graph) instead of
-    min-label propagation (graph-diameter rounds — fine for shallow
-    dedup clusters, pathological for chained near-dups). Identical
-    min-id labeling, so the recursive-CTE oracle is shared verbatim;
-    test_operators pins the two forms equal on adversarial
-    topologies (long chains) the testdata graph doesn't contain."""
-    from firefox_public_data_report_etl_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    hs = gram_hash_arrays(load_table(spark, sf_dir, "documents"))
-    pairs = minhash_lsh_pairs_arr(hs).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
-    out = connected_components_star(pairs, "da", "db")
-    return out.select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("component")
-    )
 
 
 EMBED_NEARDUP_THRESHOLD = 0.45
@@ -1278,7 +1260,6 @@ QUERIES = {
     "dedup_containment": dedup_containment,
     "dedup_containment_t90": dedup_containment_t90,
     "dedup_clusters": dedup_clusters,
-    "dedup_clusters_scaled": dedup_clusters_scaled,
     "corpus_group_split": corpus_group_split,
     "dedup_keep_best_lm": dedup_keep_best_lm,
     "preference_pairs": preference_pairs,
@@ -1305,7 +1286,6 @@ ORACLES = {
     "dedup_containment": DEDUP_CONTAINMENT_ORACLE,
     "dedup_containment_t90": DEDUP_CONTAINMENT_T90_ORACLE,
     "dedup_clusters": _clusters_oracle(),
-    "dedup_clusters_scaled": _clusters_oracle(),
     "corpus_group_split": _group_split_oracle(),
     "dedup_keep_best_lm": _keep_best_lm_oracle(),
     "preference_pairs": _preference_pairs_oracle(),

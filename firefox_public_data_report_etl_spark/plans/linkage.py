@@ -201,17 +201,16 @@ def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune because the match rule depends only on (name, type, size):
     it produces the IDENTICAL output at any SF). This form stays
     registered as the general ER shape for match rules that DO vary
-    within a cell (string similarity, address distance). Clustering
-    uses the large-star/small-star form, NOT min-label propagation:
-    ER size-chains (5–7–9–…) give the match graph a diameter that
-    GROWS with catalog size, and min-label needs diameter rounds —
-    it hit its 20-round cap at sf0.1 (measured), while star
-    contraction converges in O(log n) alternations on any topology.
-    Survivorship is one groupBy on the entity id.
+    within a cell (string similarity, address distance). ER
+    size-chains (5–7–9–…) give the match graph a diameter that GROWS
+    with catalog size; the star-contraction connected components
+    converge in O(log n) alternations on any topology (min-label
+    propagation needed diameter rounds and hit its 20-round cap at
+    sf0.1, measured). Survivorship is one groupBy on the entity id.
     """
     from firefox_public_data_report_etl_spark.functions import cents
     from firefox_public_data_report_etl_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     blk = (
@@ -259,11 +258,7 @@ def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("ka", "kb")
     )
-    # emit_roots=False: the left join + coalesce below maps every
-    # un-labeled part (roots included) to itself, so the roots
-    # aggregate + union legs inside the operator are redundant work
-    # for this caller (guide §2.4 — remove shuffles outright).
-    comp = connected_components_star(pairs, "ka", "kb", emit_roots=False)
+    comp = connected_components(pairs, "ka", "kb")
     members = p.join(
         comp, p.p_partkey == comp.node, "left"
     ).select(

@@ -905,7 +905,7 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual pairs → keep/drop DECISIONS, the composition a
     media curation pipeline actually lands (the image-space mirror of
     `dedup_clusters` + the keep rule): dHash near-dup pairs feed the
-    lineage-truncated min-label connected components, every image
+    lineage-truncated connected components, every image
     gets its cluster label (singletons label themselves), and
     ``keep`` marks the one representative (min media_id) per
     cluster. Oracle: the byte-free signature recompute + brute pairs

@@ -202,8 +202,9 @@ def write_training_shards(docs, path: str, n_shards: int = TRAINING_SHARDS):
     prunable partition a dataloader worker reads independently), plus
     the manifest computed from the SAME frame. Returns the manifest
     rows; the caller persists them next to the data. Idempotent:
-    re-running overwrites each shard partition in place (dynamic
-    partition overwrite, the S5 writer contract)."""
+    re-running overwrites each shard partition it writes in place and
+    leaves the others (dynamic partition overwrite, set on this write
+    so the session's mode does not matter — the S5 writer contract)."""
     from pyspark.sql import functions as F
 
     from firefox_public_data_report_etl_spark.functions import (
@@ -215,6 +216,7 @@ def write_training_shards(docs, path: str, n_shards: int = TRAINING_SHARDS):
     (
         out.repartition("shard")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard")
         .parquet(path)
     )

@@ -17,6 +17,7 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 #: every later slot onto a different query.
 RETIRED_QUERIES = (
     "ann_ivf",
+    "dedup_clusters_scaled",
     "dedup_semantic",
     "embedding_diversity_sample",
     "kmeans_lloyd_refine",

@@ -112,3 +112,33 @@ def test_write_jsonl_shards_bounds_file_records(spark, tmp_path):
         assert ids == sorted(ids)  # in-file order respected
         seen.extend(ids)
     assert sorted(seen) == list(range(1000))
+
+
+def test_training_shards_rerun_keeps_unwritten_shards(spark, tmp_path):
+    """A rerun overwrites only the shards it writes, also on a session
+    whose partition overwrite mode is Spark's default ``static``."""
+    from firefox_public_data_report_etl_spark.sources.export import (
+        write_training_shards,
+    )
+
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("t "), F.col("id")).alias("text"),
+    )
+    path = str(tmp_path / "shards")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        write_training_shards(docs, path)
+        first = {
+            r.doc_id: r.shard for r in spark.read.parquet(path).collect()
+        }
+        write_training_shards(docs.filter(F.col("doc_id") == 0), path)
+    finally:
+        spark.conf.set(key, old)
+    after = {r.doc_id: r.shard for r in spark.read.parquet(path).collect()}
+    assert len(set(first.values())) > 1
+    assert after == {
+        d: s for d, s in first.items() if d == 0 or s != first[0]
+    }

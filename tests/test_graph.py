@@ -1,11 +1,9 @@
-"""Connected-components operators: min-label propagation vs the
-large-star/small-star contraction twin.
-
-The sf0.01 oracle (recursive CTE) pins both registry forms on the
-real pair graph; these tests pin them on ADVERSARIAL topologies the
-testdata graph doesn't contain — long chains (diameter ≫ log n,
-where propagation is slow and contraction must still be correct),
-rings, stars, and a seeded random graph.
+"""Graph operators. Connected components (star contraction) is
+checked against a pure-Python union-find: the sf0.01 oracle
+(recursive CTE) pins it on the real pair graph, these tests on
+ADVERSARIAL topologies the testdata graph doesn't contain — long
+chains (diameter ≫ log n), rings, stars, a seeded random graph and
+self-loops.
 """
 
 from __future__ import annotations
@@ -21,17 +19,32 @@ def _labels(df):
     return {r["node"]: r["comp"] for r in df.collect()}
 
 
-def _both(spark, edges, max_iter_prop=60):
+def _union_find(edges):
+    """{node: min reachable node id} for every endpoint — the
+    reference labeling, computed without Spark."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _cc(spark, edges):
     from firefox_public_data_report_etl_spark.operators.graph import (
         connected_components,
-        connected_components_star,
     )
 
     e = spark.createDataFrame([Row(da=a, db=b) for a, b in edges])
-    return (
-        _labels(connected_components(e, max_iter=max_iter_prop)),
-        _labels(connected_components_star(e)),
-    )
+    return _labels(connected_components(e))
 
 
 @pytest.mark.full
@@ -39,16 +52,52 @@ def test_star_cc_long_chain(spark):
     # a 25-link chain: diameter 25, log2(26) ~ 5 — the shape where
     # star contraction's round count matters. Every node must label 0.
     chain = [(i, i + 1) for i in range(25)]
-    prop, star = _both(spark, chain)
-    assert star == {i: 0 for i in range(26)}
-    assert prop == star
+    labels = _cc(spark, chain)
+    assert labels == {i: 0 for i in range(26)}
+    assert labels == _union_find(chain)
+
+
+def test_cc_chain_longer_than_twenty_links(spark):
+    # diameter 21 with default arguments: one link more than the
+    # round budget a diameter-bound propagation would get
+    chain = [(i, i + 1) for i in range(21)]
+    assert _cc(spark, chain) == {i: 0 for i in range(22)}
+
+
+def test_cc_self_loop_node_labels_itself(spark):
+    # a node whose only edge is a self-loop is still an endpoint;
+    # a self-loop beside real edges changes nothing
+    assert _cc(spark, [(5, 5), (1, 2)]) == {5: 5, 1: 1, 2: 1}
+    edges = [(7, 7), (7, 3), (9, 9), (9, 9), (4, 4), (4, 3)]
+    assert _cc(spark, edges) == _union_find(edges) == {
+        3: 3, 4: 3, 7: 3, 9: 9
+    }
+
+
+def test_incremental_decisions_same_id_cross_pair_matches_base(spark):
+    # a re-sent document: base 7 and batch 7 are one near-dup pair,
+    # so batch doc 7 is already-curated content and must be dropped
+    from firefox_public_data_report_etl_spark.operators.incremental import (
+        incremental_decisions,
+    )
+
+    batch_ids = spark.createDataFrame([(7,), (8,)], ["doc_id"])
+    cross = spark.createDataFrame(
+        [(7, 7, 1.0)], "base_id long, batch_id long, jaccard double"
+    )
+    within = spark.createDataFrame([], "da long, db long, jaccard double")
+    out = {
+        r.doc_id: (r.component, r.matched_base, r.keep)
+        for r in incremental_decisions(batch_ids, cross, within).collect()
+    }
+    assert out == {7: (7, True, False), 8: (8, False, True)}
 
 
 def test_star_cc_two_components_and_star_shape(spark):
     edges = [(10, 11), (11, 12), (20, 25), (20, 26), (20, 27)]
-    prop, star = _both(spark, edges)
-    assert star == {10: 10, 11: 10, 12: 10, 20: 20, 25: 20, 26: 20, 27: 20}
-    assert prop == star
+    labels = _cc(spark, edges)
+    assert labels == {10: 10, 11: 10, 12: 10, 20: 20, 25: 20, 26: 20, 27: 20}
+    assert labels == _union_find(edges)
 
 
 def test_star_cc_ring_and_duplicate_reversed_edges(spark):
@@ -56,20 +105,19 @@ def test_star_cc_ring_and_duplicate_reversed_edges(spark):
     # must not double-count or deadlock
     ring = [(i, (i + 1) % 8) for i in range(8)]
     edges = ring + [(b, a) for a, b in ring] + ring[:3]
-    prop, star = _both(spark, edges)
-    assert star == {i: 0 for i in range(8)}
-    assert prop == star
+    labels = _cc(spark, edges)
+    assert labels == {i: 0 for i in range(8)}
+    assert labels == _union_find(edges)
 
 
-def test_star_cc_random_graph_matches_propagation(spark):
+def test_star_cc_random_graph_matches_union_find(spark):
     rng = random.Random(8)
     nodes = list(range(60))
     edges = [
         (rng.choice(nodes), rng.choice(nodes)) for _ in range(70)
     ]
     edges = [(a, b) for a, b in edges if a != b]
-    prop, star = _both(spark, edges)
-    assert prop == star
+    assert _cc(spark, edges) == _union_find(edges)
 
 
 @pytest.mark.full
@@ -83,7 +131,7 @@ def test_star_cc_rounds_exercised_without_partition_coalescing(spark):
     sizes with coalescing on, every graph converges at the first
     check and the rounds are dead code."""
     from firefox_public_data_report_etl_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     old = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
@@ -93,8 +141,9 @@ def test_star_cc_rounds_exercised_without_partition_coalescing(spark):
         e = spark.createDataFrame(
             [Row(da=a, db=b) for a, b in chain]
         ).repartition(8)
-        labels = _labels(connected_components_star(e))
+        labels = _labels(connected_components(e))
         assert labels == {i: 0 for i in range(121)}
+        assert labels == _union_find(chain)
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", old

@@ -32,7 +32,6 @@ _FAST_ALWAYS = {
     # round-13 touched plans
     "part_entity_resolution",
     "dedup_clusters",
-    "dedup_clusters_scaled",
     "preference_pairs",
     "kpi_snapshot",
     "multimodal_caption_curation",

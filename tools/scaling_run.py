@@ -74,7 +74,7 @@ DEFAULT_NAMES = [
     "curriculum_shards",
     "corpus_bm25_topk",
     "retrieval_hybrid_rrf",
-    "dedup_clusters_scaled",
+    "dedup_clusters",
     # round-8 continuation
     "corpus_quality_classifier",
     "quality_classifier_eval",
