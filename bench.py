@@ -70,10 +70,7 @@ def main() -> None:
     # so sf0.1 timings measure steady-state execution, not first-call
     # compilation. Two passes: C2 JIT promotion needs more invocations
     # than one. Caches are cleared so no data is reused.
-    from firefox_public_data_report_etl_spark.plans.dedup import (
-        dedup_minhash_lsh_prod,
-    )
-
+    #
     # Fault isolation: a query that raises must cost one row of the
     # artifact, not the artifact (round 3 lost its entire bench JSON to
     # one AnalysisException in the warm loop).
@@ -86,10 +83,6 @@ def main() -> None:
                     QUERIES[name](spark, "/root/testdata/sf0.001").collect()
                 except Exception as e:  # noqa: BLE001 — record, keep going
                     errors[name] = f"{type(e).__name__}: {e}"[:500]
-        try:
-            dedup_minhash_lsh_prod(spark, "/root/testdata/sf0.001").collect()
-        except Exception as e:  # noqa: BLE001
-            errors["dedup_minhash_xxhash64"] = f"{type(e).__name__}: {e}"[:500]
         spark.catalog.clearCache()
 
     def best_of(fn, n: int = 3) -> float:
@@ -179,64 +172,13 @@ def main() -> None:
         if t is not None:
             times[name] = t
 
-    # Production-path control row: the xxHash64 minhash pipeline (no
-    # oracle, so not a registry query). Reported under "extra" — NOT in
-    # the headline total — so round-over-round totals stay comparable
-    # while the md5-vs-xxhash64 gap is measured, not asserted.
-    extra = {}
-    t = best_of_safe(
-        "dedup_minhash_xxhash64",
-        lambda: dedup_minhash_lsh_prod(spark, sf_dir).collect(),
-    )
-    if t is not None:
-        extra["dedup_minhash_xxhash64"] = t
-
-    # Production-hash boilerplate twin (same pattern as the minhash
-    # row above: no oracle, measured as an extra).
-    from firefox_public_data_report_etl_spark.plans.text import (
-        corpus_boilerplate_hashed,
-    )
-
-    for _ in range(2):
-        try:
-            corpus_boilerplate_hashed(spark, "/root/testdata/sf0.001").collect()
-        except Exception as e:  # noqa: BLE001
-            errors["corpus_boilerplate_xxhash64"] = f"{type(e).__name__}: {e}"[:500]
-            break
-    t = best_of_safe(
-        "corpus_boilerplate_xxhash64",
-        lambda: corpus_boilerplate_hashed(spark, sf_dir).collect(),
-    )
-    if t is not None:
-        extra["corpus_boilerplate_xxhash64"] = t
-
-    # Production-hash winnowing twin (same pattern: no oracle,
-    # measured as an extra next to the parity row).
-    from firefox_public_data_report_etl_spark.plans.text import (
-        dedup_winnowing_pairs_prod,
-    )
-
-    for _ in range(2):
-        try:
-            dedup_winnowing_pairs_prod(
-                spark, "/root/testdata/sf0.001"
-            ).collect()
-        except Exception as e:  # noqa: BLE001
-            errors["dedup_winnowing_xxhash64"] = f"{type(e).__name__}: {e}"[:500]
-            break
-    t = best_of_safe(
-        "dedup_winnowing_xxhash64",
-        lambda: dedup_winnowing_pairs_prod(spark, sf_dir).collect(),
-    )
-    if t is not None:
-        extra["dedup_winnowing_xxhash64"] = t
-
     # Registry-derived extras (round-11 verdict #3): EVERY registry
     # query that is not a headline is measured — no silent coverage
     # cap. Anything dropped must be listed here WITH a reason, and the
     # exclusions are logged in the payload so a missing row reads as a
     # decision, not an oversight.
     EXCLUDED_EXTRAS: dict[str, str] = {}
+    extra: dict[str, float] = {}
     extra_names = sorted(
         set(QUERIES) - set(HEADLINE) - set(EXCLUDED_EXTRAS)
     )

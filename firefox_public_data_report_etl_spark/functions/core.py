@@ -66,6 +66,19 @@ def safe_div(num: Column, den: Column) -> Column:
     return F.try_divide(num, den)
 
 
+def cosine(dot: Column | str, na: Column | str, nb: Column | str) -> Column:
+    """``dot / sqrt(na * nb)`` as a DOUBLE — the cosine of two vectors
+    from their dot product and squared norms. NULL when either vector
+    is all zero (``safe_div``), which is DuckDB's answer for ``x / 0.0``;
+    a NULL sorts last under ``desc`` in both engines and fails every
+    ``>= threshold`` filter."""
+    c = [F.col(x) if isinstance(x, str) else x for x in (dot, na, nb)]
+    return safe_div(
+        c[0].cast("double"),
+        F.sqrt(c[1].cast("double") * c[2].cast("double")),
+    )
+
+
 # --------------------------------------------------------------------------
 # Versions (X7; reference mozfun.norm.truncate_version)
 # --------------------------------------------------------------------------
@@ -157,8 +170,9 @@ def md5_int_sql(expr: str, nibbles: int = 7) -> str:
     so dedup/minhash/simhash queries hash-match the oracle exactly.
     7 nibbles = 28 bits keeps later (a*h + b) % p inside int64.
 
-    At production scale you would swap this for ``xxhash64`` and drop
-    oracle parity; this fragment is the cross-engine-deterministic form.
+    This is the one fingerprint hash of MinHash, SimHash and
+    winnowing: their outputs carry the hash, so a hash DuckDB cannot
+    replay (``xxhash64``) would leave them unchecked.
     """
     terms = []
     for i in range(1, nibbles + 1):

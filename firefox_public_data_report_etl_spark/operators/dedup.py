@@ -13,26 +13,21 @@ A17); these are the operators a 100 TB text-corpus pipeline needs:
     at scale reuses the same banding trick (pigeonhole: hamming ≤ k
     ⇒ some band of k+1 equal).
 
-All hashes default to the md5-prefix integer (functions.md5_int_sql) —
-Spark computes it via the fast single-``conv`` form
-(md5_int_spark_sql), the DuckDB oracle via the portable instr
-fragment; both yield identical values, so results match bit-for-bit.
-``hash_mode="xxhash64"`` is the production path: xxHash64 masked to
-the same 28 bits (JVM-side sip of the raw bytes, no md5 hex-string
-materialization). It cannot be oracle-checked (DuckDB has no
-xxHash64), so an agreement test pins the thresholded near-dup pair
-set against the parity path instead — hashed-shingle Jaccard is
-hash-agnostic up to collisions, only the LSH candidate generation
-differs.
+Every hash is the md5-prefix integer (functions.md5_int_sql) — Spark
+computes it via the fast single-``conv`` form (md5_int_spark_sql), the
+DuckDB oracle via the portable instr fragment; both yield identical
+values, so signatures, LSH candidates and pairs match bit-for-bit.
 
 Spark-first: everything below is built-in column expressions —
 shingling is ``transform``/``sequence``/``element_at`` (codegen'd,
-no Python in the row path), signatures are plain aggregates.
+no Python in the row path), signatures are per-array ``array_min``
+aggregates.
 
-Cache lifecycle: ``lsh_candidate_pairs`` (and query-level callers)
-``cache()`` small intermediate tables for the duration of the job.
-Long-lived sessions running many corpora should
-``spark.catalog.clearCache()`` between runs (bench.py does).
+Cache lifecycle: the exact pair joins persist their candidate set
+(``_decide_broadcast_pairs``) and hand it back on
+``_probe_persisted`` for the caller to release. Long-lived sessions
+running many corpora should ``spark.catalog.clearCache()`` between
+runs (bench.py does).
 """
 
 from __future__ import annotations
@@ -63,35 +58,18 @@ def make_perms(n: int) -> list[tuple[int, int]]:
 
 N_BANDS = 4
 ROWS_PER_BAND = 4
-MINHASH_PERMS: list[tuple[int, int]] = make_perms(N_BANDS * ROWS_PER_BAND)
-
-# Both hash modes emit 28-bit non-negative ints so the minhash
-# universal-hash arithmetic (a*h + b, a < 2^29) stays inside int64.
-HASH28_MASK = (1 << 28) - 1
 
 
-def _hash_int(col: str, hash_mode: str, bits: int = 28):
-    """``bits``-wide integer hash of a string column. ``parity`` =
-    md5-prefix (bit-identical in DuckDB; bits % 4 == 0, ≤ 60 so the
-    nibble sum fits a BIGINT); ``xxhash64`` = production path (JVM
-    xxHash64 on raw bytes, low ``bits`` — no hex-string cost; 64 =
-    the raw signed hash). Single dispatch point for every hashed
-    shingle/gram/token path in this module."""
-    if hash_mode == "parity":
-        if bits % 4 or bits > 60:
-            raise ValueError("parity hash needs bits % 4 == 0, <= 60")
-        return F.expr(md5_int_spark_sql(col, nibbles=bits // 4))
-    if hash_mode == "xxhash64":
-        if bits > 64:
-            raise ValueError("xxhash64 caps at 64 bits")
-        if bits == 64:
-            return F.expr(f"xxhash64({col})")
-        return F.expr(f"xxhash64({col}) & {(1 << bits) - 1}")
-    raise ValueError(f"unknown hash_mode: {hash_mode!r}")
+def _hash_int(col: str, bits: int = 28):
+    """``bits``-wide md5-prefix hash of a string column, bit-identical
+    in DuckDB (bits % 4 == 0, <= 60 so the nibble sum fits a BIGINT).
+    28 bits keep the minhash universal-hash arithmetic (a*h + b,
+    a < 2^31) inside int64. The one hash of every hashed
+    shingle/gram/token row path in this module."""
+    if bits % 4 or bits > 60:
+        raise ValueError("md5-prefix hash needs bits % 4 == 0, <= 60")
+    return F.expr(md5_int_spark_sql(col, nibbles=bits // 4))
 
-
-def _hash28(col: str, hash_mode: str):
-    return _hash_int(col, hash_mode, bits=28)
 
 # Word 3-gram shingles from a token array column `t` — same logic in
 # both dialects (Spark subscripts are 0-based → element_at; DuckDB
@@ -109,7 +87,6 @@ def shingle_rows(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "parity",
 ) -> DataFrame:
     """(id, h): one row per DISTINCT 28-bit hash of a word-3-gram per
     document — the exploded form of ``gram_hash_arrays``.
@@ -119,8 +96,8 @@ def shingle_rows(
     joins move 8-byte keys instead of shingle strings — the difference
     between shuffling the corpus and shuffling fingerprints at 100 TB.
     Jaccard is measured over the DISTINCT hashed shingle space (two
-    grams colliding in 28 bits count once), identically in both the
-    row form, the array form (``array_distinct`` over the hash array),
+    grams colliding in 28 bits count once), identically in this row
+    form, the array form (``array_distinct`` over the hash array),
     and the DuckDB oracle (DISTINCT in the sh CTE) — so a collision
     can never make the engines diverge.
 
@@ -132,9 +109,8 @@ def shingle_rows(
     fingerprint-sized (16-byte rows) exchange, which every consumer
     re-shuffles right after anyway. The array form keeps its hashes
     inside ``transform`` instead: staying narrow matters more there
-    (the arrays feed the band join directly), its callers widen the
-    scan so the lambda cost parallelizes, and its production
-    ``hash_mode="xxhash64"`` avoids the interpreted-md5 cost.
+    (the arrays feed the band join directly), and its callers widen
+    the scan so the lambda cost parallelizes.
     """
     t = docs.select(
         id_col, F.split(F.col(text_col), " ").alias("t")
@@ -143,27 +119,8 @@ def shingle_rows(
         id_col, F.explode(F.array_distinct(F.expr(SPARK_SHINGLES))).alias("g")
     )
     return raw.select(
-        id_col, _hash28("g", hash_mode).alias("h")
+        id_col, _hash_int("g").alias("h")
     ).dropDuplicates([id_col, "h"])
-
-
-def minhash_signatures(
-    sh: DataFrame, id_col: str = "doc_id", with_size: bool = False
-) -> DataFrame:
-    """(id, mh0..mh15[, n]): minimum of each hash permutation over the
-    pre-hashed shingle rows.
-
-    ``with_size=True`` fuses the shingle-set size (``n``) into the SAME
-    aggregation — the Jaccard verify needs |A| and |B|, and computing
-    them here saves a second scan+shuffle of the shingle table (the
-    17th aggregate rides the one map-side combine for free)."""
-    aggs = [
-        F.min(F.expr(minhash_perm_sql("h", a, b))).alias(f"mh{k}")
-        for k, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-    if with_size:
-        aggs.append(F.count("*").alias("n"))
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def _band_expr(band: int, rows_per_band: int = ROWS_PER_BAND):
@@ -178,37 +135,6 @@ def _band_expr(band: int, rows_per_band: int = ROWS_PER_BAND):
     return out
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(da, db) with da < db: pairs sharing at least one LSH band.
-
-    The band table is cached: both sides of the self-join (and any
-    downstream verify) would otherwise recompute the signature
-    aggregation. It is signature-sized (n_docs x N_BANDS rows of
-    ints), so the cache is tiny relative to the corpus.
-    """
-    bands = sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("bi"), _band_expr(i).alias("bv")
-                    )
-                    for i in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.bi", "band.bv").cache()
-    a = bands.select(F.col(id_col).alias("da"), "bi", "bv")
-    b = bands.select(F.col(id_col).alias("db"), "bi", "bv")
-    return (
-        a.join(b, ["bi", "bv"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-        .distinct()
-    )
-
-
 # Auto-broadcast ceiling for the candidate-pair table: 2M (da, db)
 # rows ≈ 32 MB of long-pairs plus row overhead — comfortably inside
 # default driver/broadcast budgets, yet far above any sane post-LSH
@@ -218,80 +144,16 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 MAX_BROADCAST_PAIRS = 2_000_000
 
 
-def _decide_broadcast_pairs(
-    pairs: DataFrame,
-    broadcast_pairs: bool | None,
-    max_broadcast_pairs: int,
-) -> tuple[DataFrame, bool]:
-    """Resolve the auto (None) broadcast mode by measuring the
-    candidate set. The count requires materializing `pairs`, so it is
-    persisted first — the SAME materialization then feeds the verify
-    join (post-LSH candidates are fingerprint-sized; the module
-    docstring covers cache lifecycle)."""
-    if broadcast_pairs is not None:
-        return pairs, broadcast_pairs
-    pairs = pairs.persist()
-    return pairs, pairs.count() <= max_broadcast_pairs
-
-
-def jaccard_for_pairs(
-    pairs: DataFrame,
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    broadcast_pairs: bool | None = None,
-    sizes: DataFrame | None = None,
-    max_broadcast_pairs: int = MAX_BROADCAST_PAIRS,
-) -> DataFrame:
-    """(da, db, jaccard): exact Jaccard over distinct shingles, computed
-    only for the given candidate pairs.
-
-    ``broadcast_pairs=None`` (default) SIZE-GATES the broadcast: the
+def _decide_broadcast_pairs(pairs: DataFrame) -> tuple[DataFrame, bool]:
+    """Size-gate the candidate broadcast of an exact pair verify: the
     candidate set is persisted, counted, and broadcast only when it
-    holds at most ``max_broadcast_pairs`` rows — right after LSH
-    pruning candidates are normally a vanishing fraction of the pair
-    space, but a dup-heavy corpus can exceed what the driver can
-    broadcast, and then the shuffle join is chosen automatically
-    (same results; keys co-partition on da then (db, h)). Pass
-    True/False to force a path and skip the gating count.
-
-    ``sizes`` (id, n): pre-computed shingle-set sizes — pass the fused
-    output of ``minhash_signatures(with_size=True)`` to avoid a second
-    aggregation over the shingle table. The size table is corpus-
-    cardinality (one row per doc), so it is never broadcast; the
-    candidate-pair side is the small one and carries the hint."""
-    pairs, broadcast_pairs = _decide_broadcast_pairs(
-        pairs, broadcast_pairs, max_broadcast_pairs
-    )
-    if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
-    else:
-        sizes = sizes.select(id_col, "n")
-    sa = sh.select(F.col(id_col).alias("da"), "h")
-    sb = sh.select(F.col(id_col).alias("db"), "h")
-    p = F.broadcast(pairs) if broadcast_pairs else pairs
-    inter = (
-        p.join(sa, "da")
-        .join(sb, ["db", "h"])
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("da"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("db"), F.col("n").alias("nb"))
-    # post-LSH the pair-grain `inter` is the small side; the size dim
-    # is corpus-cardinality and must never be broadcast
-    left = F.broadcast(inter) if broadcast_pairs else inter
-    return (
-        left.join(na, "da")
-        .join(nb, "db")
-        .select(
-            "da",
-            "db",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
+    holds at most ``MAX_BROADCAST_PAIRS`` rows; a dup-heavy corpus
+    takes the shuffle join instead (same results). The SAME
+    materialization then feeds the verify join (post-filter
+    candidates are fingerprint-sized; the module docstring covers
+    cache lifecycle)."""
+    pairs = pairs.persist()
+    return pairs, pairs.count() <= MAX_BROADCAST_PAIRS
 
 
 def all_pairs_jaccard(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -470,7 +332,7 @@ def prefix_filter_pairs(
         .select("da", "db")
         .distinct()
     )
-    cand, bc = _decide_broadcast_pairs(cand, None, MAX_BROADCAST_PAIRS)
+    cand, bc = _decide_broadcast_pairs(cand)
     p = F.broadcast(cand) if bc else cand
     ja = hs.select(
         F.col(id_col).alias("da"), F.col("hs").alias("ha"),
@@ -554,7 +416,7 @@ def containment_pairs(
         .select("da", "db")
         .distinct()
     )
-    cand, bc = _decide_broadcast_pairs(cand, None, MAX_BROADCAST_PAIRS)
+    cand, bc = _decide_broadcast_pairs(cand)
     p = F.broadcast(cand) if bc else cand
     ja = hs.select(
         F.col(id_col).alias("da"), F.col("hs").alias("ha"),
@@ -586,7 +448,6 @@ def simhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "parity",
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """(id, simhash): ``bits``-wide SimHash over tokens (with
@@ -596,17 +457,15 @@ def simhash_signatures(
 
     Width is the banding capacity knob: band-bucket count is
     2^(bits/(k+1)), so the default 28 (text_profile's fingerprint
-    column, DuckDB-parity) saturates buckets at corpus scale while 60
-    (`dedup_simhash`, still DuckDB-parity — 15 md5 nibbles fit a
-    BIGINT) and 64 (xxhash64 production mode) keep buckets sparse.
+    column) saturates buckets at corpus scale while 60
+    (`dedup_simhash`, the widest md5-prefix hash that fits a BIGINT)
+    keeps them sparse. Both are DuckDB-parity.
     """
-    h_expr = _hash_int("w", hash_mode, bits=bits)
+    h_expr = _hash_int("w", bits=bits)
     toks = docs.select(
         id_col, F.explode(F.split(F.col(text_col), " ")).alias("w")
     )
     h = toks.withColumn("h", h_expr)
-    # (h >> b) & 1 is sign-safe: arithmetic shiftright makes bit 63
-    # land correctly even for negative xxhash64 values.
     votes = [
         F.sum(
             F.when(F.expr(f"shiftright(h, {b}) & 1") == 1, 1).otherwise(-1)
@@ -616,9 +475,7 @@ def simhash_signatures(
     g = h.groupBy(id_col).agg(*votes)
     sim = None
     for b in range(bits):
-        # bit 63 of a signed long is −2^63 in two's complement
-        bitval = -(1 << 63) if b == 63 else (1 << b)
-        term = F.when(F.col(f"v{b}") > 0, F.lit(bitval)).otherwise(F.lit(0))
+        term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return g.select(id_col, sim.cast("long").alias("simhash"))
 
@@ -628,7 +485,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "parity",
     bits: int = SIMHASH_BITS,
     n_blocks: int | None = None,
 ) -> DataFrame:
@@ -663,7 +519,7 @@ def simhash_pairs(
     distinct on (da, db) collapses multi-table hits before the
     verify expression.
     """
-    sig = simhash_signatures(docs, id_col, text_col, hash_mode, bits=bits)
+    sig = simhash_signatures(docs, id_col, text_col, bits=bits)
     return hamming_band_pairs(
         sig,
         id_col=id_col,
@@ -865,7 +721,6 @@ def gram_hash_arrays(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "parity",
 ) -> DataFrame:
     """(id, hs, n): the per-doc DISTINCT hashed word-3-gram set as an
     int array, plus its size — the array-native base of the dedup
@@ -877,12 +732,7 @@ def gram_hash_arrays(
     distinct grams colliding in the 28-bit space count once, so
     ``n``, ``array_intersect`` verifies, and the row-join oracle all
     measure the same distinct-hash Jaccard."""
-    if hash_mode == "parity":
-        h = md5_int_spark_sql("g")
-    elif hash_mode == "xxhash64":
-        h = f"xxhash64(g) & {HASH28_MASK}"
-    else:
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
+    h = md5_int_spark_sql("g")
     t = docs.select(
         id_col, F.split(F.col(text_col), " ").alias("t")
     ).filter(F.size("t") >= 3)
@@ -943,11 +793,11 @@ def minhash_lsh_pairs_arr(
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
     """(da, db, jaccard): the MinHash-LSH near-dup pipeline over
-    ``gram_hash_arrays`` output, ARRAY-NATIVE end to end. Same math as
-    the row-form pipeline (signatures via per-array ``array_min`` of
-    each permutation; 4×4 banded buckets; exact hashed-shingle Jaccard
-    via ``array_intersect`` on candidates) and byte-identical results,
-    but TWO shuffles total instead of five:
+    ``gram_hash_arrays`` output, ARRAY-NATIVE end to end (signatures
+    via per-array ``array_min`` of each permutation; 4×4 banded
+    buckets; exact hashed-shingle Jaccard via ``array_intersect`` on
+    candidates), byte-identical to the row-join DuckDB oracle, in TWO
+    shuffles total (the retired row-form pipeline took five):
 
       1. the banded self-join (each doc's array rides its 4 band
          rows — no separate signature aggregation shuffle, no shingle

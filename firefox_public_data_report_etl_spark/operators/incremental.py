@@ -176,12 +176,11 @@ def probe_minhash_index(
     touched (bi, pb) buckets, the (bi, bv) equi-join yields distinct
     candidate pairs, and exact hashed-shingle Jaccard verifies them —
     candidates (size-gated broadcast, same policy as
-    ``jaccard_for_pairs``) join the grams side-table for the base
+    ``prefix_filter_pairs``) join the grams side-table for the base
     arrays, then the live batch arrays. ``exclude_label`` masks one
     label on both index reads (the streaming replay guard, see
     streaming/neardup.py)."""
     from firefox_public_data_report_etl_spark.operators.dedup import (
-        MAX_BROADCAST_PAIRS,
         _decide_broadcast_pairs,
     )
 
@@ -205,7 +204,7 @@ def probe_minhash_index(
             .select("base_id", "batch_id")
             .distinct()
         )
-        cand, bcast = _decide_broadcast_pairs(cand, None, MAX_BROADCAST_PAIRS)
+        cand, bcast = _decide_broadcast_pairs(cand)
         # the decide count just materialized cand through its cache, so
         # the band-row relation is no longer on any live path — release
         # it here instead of leaking one cached relation per probe

@@ -5,10 +5,9 @@ sign-bucket LSH variant as the scale path. Both operate on QUANTIZED
 embeddings — ``floor(x * 1000)`` int64 components — so dot products
 and norms are exact integer arithmetic and the final cosine is a
 single deterministic FP expression, bit-identical in Spark and the
-DuckDB oracle. The production path keeps float32 and loses oracle
-exactness, not correctness: operators.vectorized.cosine_topk_matmul_f32
-runs the same broadcast-queries/stream-candidates shape over raw
-embeddings, pinned against this parity path by an agreement test.
+DuckDB oracle. Every Spark-side scorer (here, operators.vectorized,
+the streaming embedding gate, the plans) takes that expression from
+``functions.cosine``: an all-zero vector scores NULL, as in DuckDB.
 
 Scale notes: brute force is |Q| x |C| — fine for |Q| small (the
 queries side is broadcast, candidates never shuffle). The LSH variant
@@ -21,6 +20,8 @@ unioning several bucket functions).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from firefox_public_data_report_etl_spark.functions import cosine
 
 QUANT = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 _DOT = "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (s, v) -> s + v)"
@@ -60,11 +61,7 @@ def cosine_topk(
     scored = (
         c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
         .withColumn("dot", F.expr(_DOT))
-        .withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        )
+        .withColumn("cos", cosine("dot", "na", "nb"))
     )
     if band is not None:
         lo, hi = band
@@ -94,11 +91,7 @@ def _rank_pairs(
         pairs.join(F.broadcast(q), "q_id")
         .join(c, "n_id")
         .withColumn("dot", F.expr(_DOT))
-        .withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        )
+        .withColumn("cos", cosine("dot", "na", "nb"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
     return (
@@ -190,11 +183,7 @@ def cosine_topk_lsh(
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("q_id") != F.col("n_id"))
         .withColumn("dot", F.expr(_DOT))
-        .withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        )
+        .withColumn("cos", cosine("dot", "na", "nb"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
     return (

@@ -146,11 +146,10 @@ def _winnow_keyed(
     text_col: str,
     k: int,
     w: int,
-    hash_mode: str,
 ):
     """Shared packed-key projection of the winnowing family:
     (id, n_grams, keys array<long>) with keys[i] = h_i * CAP +
-    (CAP - 1 - pos_i). One narrow Catalyst projection (md5/xxhash64
+    (CAP - 1 - pos_i). One narrow Catalyst projection (the md5
     stays JVM-side); the repartition only fires when a small-file
     local scan yields fewer partitions than cores — at production
     split counts it is a no-op and the full-text shuffle never
@@ -162,17 +161,7 @@ def _winnow_keyed(
     if d.rdd.getNumPartitions() < sc.defaultParallelism:
         d = d.repartition(sc.defaultParallelism, id_col)
     cap = _WINNOW_POS_CAP
-    if hash_mode == "parity":
-        h_sql = md5_int_spark_sql(f"substr(x, CAST(i AS INT), {k})")
-    elif hash_mode == "xxhash64":
-        # production hash: 28-bit-masked xxHash64 — same key packing,
-        # no md5 hex materialization on the gram-position hot path
-        # (the dedup family's gram_hash_arrays convention); no DuckDB
-        # oracle exists for this mode, so it lives outside the
-        # registry and is pinned by guarantee/density tests instead
-        h_sql = f"(xxhash64(substr(x, CAST(i AS INT), {k})) & {(1 << 28) - 1})"
-    else:
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
+    h_sql = md5_int_spark_sql(f"substr(x, CAST(i AS INT), {k})")
     # Fail LOUDLY on documents whose gram-position count overflows the
     # packed-key layout (pos >= CAP would go negative and let distinct
     # hashes collide): the guard rides the same projection, costs
@@ -203,7 +192,6 @@ def winnow_doc_stats(
     text_col: str = "text",
     k: int = FINGERPRINT_GRAM,
     w: int = WINNOW_W,
-    hash_mode: str = "parity",
 ) -> DataFrame:
     """Per-document rollup of the winnowing signature — (id, n_grams,
     n_selected, n_distinct_h, fp_min) — computed INSIDE the selection
@@ -217,7 +205,7 @@ def winnow_doc_stats(
     oracle is unchanged). Use this for signature audits/reports; use
     `winnow_fingerprints` when downstream joins need the (id, h)
     rows."""
-    keyed, cap = _winnow_keyed(docs, id_col, text_col, k, w, hash_mode)
+    keyed, cap = _winnow_keyed(docs, id_col, text_col, k, w)
     id_field = keyed.schema[id_col]
     out_schema = (
         f"{id_col} {id_field.dataType.simpleString()},"
@@ -266,7 +254,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = FINGERPRINT_GRAM,
     w: int = WINNOW_W,
-    hash_mode: str = "parity",
 ) -> DataFrame:
     """Winnowing document fingerprints — the full Schleimer/Wilkerson/
     Aiken (SIGMOD 2003) selection rule, not the min-only "winnowing
@@ -304,7 +291,7 @@ def winnow_fingerprints(
     full-text shuffle never happens). Task memory is one Arrow batch
     (≤ spark.sql.execution.arrow.maxRecordsPerBatch docs) of key
     arrays, bounded by the _WINNOW_POS_CAP layout guard below."""
-    keyed, cap = _winnow_keyed(docs, id_col, text_col, k, w, hash_mode)
+    keyed, cap = _winnow_keyed(docs, id_col, text_col, k, w)
     id_field = keyed.schema[id_col]
     out_schema = (
         f"{id_col} {id_field.dataType.simpleString()},"
@@ -986,7 +973,6 @@ def boilerplate_scores(
     min_df: int = BOILER_MIN_DF,
     id_col: str = "doc_id",
     text_col: str = "text",
-    gram_key: str = "raw",
 ) -> DataFrame:
     """Gopher/C4-style cross-document boilerplate signal: an n-gram
     appearing in >= ``max(min_df, ceil(n_docs/100))`` DISTINCT
@@ -1020,21 +1006,19 @@ def boilerplate_scores(
     Scale: two equi shuffles — (1) distinct (doc, gram) -> groupBy
     gram for document frequency; (2) grams join df on gram -> groupBy
     doc. The df side is gram-cardinality (never broadcast).
-    ``gram_key="xxhash64"`` (the production mode, round 6) replaces
-    the gram STRING with its 8-byte xxhash64 as both shuffle keys —
-    same plan shape, ~2-3x narrower exchange payload, measured 1.5x
-    wall at the 100x stack on loopback shuffle (SCALING.md round 6;
-    gram materialization and the two aggregations dominate locally —
-    the byte cut matters more once shuffle crosses a network); counts
-    are identical up to 64-bit hash collisions (~N^2/2^65 expected —
-    zero at any real corpus; the raw mode stays the oracle-parity
-    default, the two pinned equal by an agreement test).
+    Both keys are the gram's 8-byte ``xxhash64``, not the gram
+    STRING: same plan shape, ~2-3x narrower exchange payload,
+    measured faster at every point of the SCALING.md round-6 sweep
+    (1.5x wall at the 100x stack on loopback shuffle; the byte cut
+    matters more once shuffle crosses a network). The hash is
+    internal to the two shuffles: counts equal the raw-string keying
+    up to 64-bit collisions (~N^2/2^65 expected — zero at any real
+    corpus), so the DuckDB oracle keys by the gram string and still
+    matches.
     """
-    grams = doc_ngrams(docs, n=n, id_col=id_col, text_col=text_col)
-    if gram_key == "xxhash64":
-        grams = grams.select(id_col, F.xxhash64("gram").alias("gram"))
-    elif gram_key != "raw":
-        raise ValueError(f"gram_key must be 'raw' or 'xxhash64', got {gram_key!r}")
+    grams = doc_ngrams(docs, n=n, id_col=id_col, text_col=text_col).select(
+        id_col, F.xxhash64("gram").alias("gram")
+    )
     ndocs = docs.select(F.count("*").cast("long").alias("_nd"))
     df = (
         grams.dropDuplicates([id_col, "gram"])

@@ -20,6 +20,7 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from firefox_public_data_report_etl_spark.functions import cosine
 from firefox_public_data_report_etl_spark.operators.labeled_index import (
     LabeledIndex,
     bucket_filter,
@@ -129,76 +130,7 @@ def cosine_topk_matmul(
     scored = candidates.mapInPandas(
         _score, "q_id long, n_id long, dot long, na long, nb long"
     )
-    scored = scored.withColumn(
-        "cos",
-        F.col("dot").cast("double")
-        / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
-
-
-def cosine_topk_matmul_f32(
-    queries, candidates, k: int, id_col: str = "vec_id", emb_col: str = "embedding"
-):
-    """Production float32 brute-force cosine top-k: same shape as
-    ``cosine_topk_matmul`` (query matrix in the closure, candidates
-    stream through ``mapInPandas``, never shuffle) but over the RAW
-    float embeddings — no quantization pass, float32 matmul (half the
-    memory bandwidth of the int64 parity path, and BLAS sgemm where
-    numpy is linked against one).
-
-    Float32 accumulation order makes results engine-specific, so this
-    path has no DuckDB oracle; test_production_paths pins its top-k
-    pair set against the quantized parity path instead (quantization
-    error is 1e-3 per component — rank flips only on near-ties).
-    """
-    from pyspark.sql import Window
-
-    qrows = queries.select(id_col, emb_col).collect()
-    q_ids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.asarray([r[1] for r in qrows], dtype=np.float32)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    def _score(batches):
-        for pdf in batches:
-            c_mat = np.stack(
-                pdf[emb_col].map(lambda v: np.asarray(v, dtype=np.float32))
-            )
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            n_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cos = (
-                (c_mat @ q_mat.T) / (c_norm[:, None] * q_norm[None, :])
-            ).astype(np.float64)
-            # same superset pre-selection as the quantized form: the
-            # emitted cos IS the window's sort key, so keeping every
-            # row with cos >= the batch's k-th largest non-self value
-            # per query preserves the final top-k exactly
-            self_mask = n_ids[:, None] == q_ids[None, :]
-            cos_sel = np.where(self_mask, -np.inf, cos)
-            if len(pdf) > k:
-                kth = np.partition(cos_sel, len(pdf) - k, axis=0)[
-                    len(pdf) - k
-                ]
-                keep = (cos_sel >= kth[None, :]) & ~self_mask
-            else:
-                keep = ~self_mask
-            ci, qj = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[qj],
-                    "n_id": n_ids[ci],
-                    "cos": cos[ci, qj],
-                }
-            )
-
-    scored = candidates.mapInPandas(
-        _score, "q_id long, n_id long, cos double"
-    )
+    scored = scored.withColumn("cos", cosine("dot", "na", "nb"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -346,13 +278,7 @@ def cosine_threshold_pairs_matmul(
         _pairs, "da long, db long, dot long, na long, nb long"
     )
     return (
-        scored.withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(
-                F.col("na").cast("double") * F.col("nb").cast("double")
-            ),
-        )
+        scored.withColumn("cos", cosine("dot", "na", "nb"))
         .filter(F.col("cos") >= threshold)
         .select("da", "db", "cos")
     )
@@ -764,11 +690,7 @@ def score_probed_cells(c, q, k: int, exclude_self: bool = True):
             "dot",
             F.expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (s, v) -> s + v)"),
         )
-        .withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        )
+        .withColumn("cos", cosine("dot", "na", "nb"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
     return (

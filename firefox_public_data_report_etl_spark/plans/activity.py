@@ -93,7 +93,7 @@ mau AS (SELECT week_start, cohort, count(DISTINCT user_id) AS mau
 """
 
 
-def _mau_wau(uw: DataFrame, salted: bool = False) -> tuple[DataFrame, DataFrame]:
+def _mau_wau(uw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """``uw`` must be unique on (week_start, cohort, user_id).
 
     Worldwide-skew note (plan-audited + measured, SCALING.md round 5):
@@ -102,10 +102,10 @@ def _mau_wau(uw: DataFrame, salted: bool = False) -> tuple[DataFrame, DataFrame]
     (week, cohort, user_id) (the hot Worldwide cohort spreads across
     every reducer via the user hash) followed by partial_count whose
     (week, cohort) exchange moves one partial-count row per group per
-    partition, never user rows. ``salted=True`` swaps in the explicit
-    ``operators.skew.salted_count_distinct`` two-stage form (identical
-    results, agreement-tested); it exists as the measurement twin that
-    backs the decision to keep the native form."""
+    partition, never user rows. The explicit
+    ``operators.skew.salted_count_distinct`` form was slower at sf0.1
+    and 10x and took 0.83x the time at 100x (SCALING.md round 5); the
+    native form stays, as the one the oracle-checked rows run."""
     wau = uw.groupBy("week_start", "cohort").agg(F.count("*").alias("wau"))
     fan = uw.withColumn(
         "week_start",
@@ -117,18 +117,9 @@ def _mau_wau(uw: DataFrame, salted: bool = False) -> tuple[DataFrame, DataFrame]
             )
         ),
     )
-    if salted:
-        from firefox_public_data_report_etl_spark.operators.skew import (
-            salted_count_distinct,
-        )
-
-        mau = salted_count_distinct(
-            fan, ["week_start", "cohort"], "user_id", "mau"
-        )
-    else:
-        mau = fan.groupBy("week_start", "cohort").agg(
-            F.countDistinct("user_id").alias("mau")
-        )
+    mau = fan.groupBy("week_start", "cohort").agg(
+        F.countDistinct("user_id").alias("mau")
+    )
     return wau, mau
 
 
@@ -156,26 +147,6 @@ WITH {_BASE_SQL.strip().rstrip()}, {_MAU_WAU_SQL.strip()}
 SELECT strftime(week_start, '%Y-%m-%d') AS week_start, cohort, wau, mau
 FROM wau JOIN mau USING (week_start, cohort)
 """
-
-
-def mau_wau_weekly_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measurement twin of ``mau_wau_weekly`` running the MAU distinct
-    through the explicit salted two-stage form (see ``_mau_wau``). Not
-    a registry entry — semantically identical to the native form
-    (agreement-tested in test_user_activity_pipeline), kept to measure
-    the native-vs-manual-salting decision at the scale stacks."""
-    uw = (
-        base_events(spark, sf_dir)
-        .select("week_start", "cohort", "user_id")
-        .distinct()
-    )
-    wau, mau = _mau_wau(uw, salted=True)
-    return wau.join(mau, ["week_start", "cohort"]).select(
-        F.date_format("week_start", "yyyy-MM-dd").alias("week_start"),
-        "cohort",
-        "wau",
-        "mau",
-    )
 
 
 def user_activity_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -81,27 +81,12 @@ GROUP BY latest_version
 """
 
 
-# Expected cohort universe for the contract check; 'telemetry' is a
-# deliberately-absent member so the "missing" branch is non-trivial.
+# Expected cohort universe for the output-contract check (U2,
+# user_activity.py:85-101: allowlist - produced = missing, produced -
+# allowlist = unexpected); 'telemetry' is a deliberately-absent member
+# so the "missing" branch is non-trivial. The Spark side is fused into
+# plans/shapes.py kpi_snapshot, whose oracle embeds the SQL below.
 COHORT_ALLOWLIST = ("click", "error", "purchase", "signup", "view", "Worldwide", "telemetry")
-
-
-def cohort_contract_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U2 (user_activity.py:85-101): output-contract validation via set
-    difference — allowlist − produced = missing, produced − allowlist
-    = unexpected. The reference raises on non-empty; the engine emits
-    the violation rows (callers assert emptiness of the relevant tag)."""
-    from firefox_public_data_report_etl_spark.plans.activity import base_events
-
-    produced = base_events(spark, sf_dir).select("cohort").distinct()
-    allow = spark.createDataFrame(
-        [(c,) for c in COHORT_ALLOWLIST], ["cohort"]
-    )
-    missing = allow.exceptAll(produced).withColumn("status", F.lit("missing"))
-    unexpected = produced.exceptAll(allow).withColumn(
-        "status", F.lit("unexpected")
-    )
-    return missing.unionByName(unexpected)
 
 
 _ALLOW_VALUES = ", ".join(f"('{c}')" for c in COHORT_ALLOWLIST)

@@ -5,7 +5,7 @@ The testdata corpus has planted near-duplicates (top pairs at word-
 shared-vocabulary background (~0.01-0.1).
 
 The DuckDB oracles are code-generated from the SAME constants
-(MINHASH_PERMS, band layout, md5 fragment) as the Spark plans, so both
+(``make_perms``, band layout, md5 fragment) as the Spark plans, so both
 engines compute identical signatures, candidates, and Jaccard values.
 """
 
@@ -152,24 +152,6 @@ SELECT da, db,
 FROM inter JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
 WHERE CAST(inter AS DOUBLE) / (x.n + y.n - inter) >= {JACCARD_THRESHOLD}
 """
-
-
-def dedup_minhash_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of ``dedup_minhash_lsh``: identical
-    pipeline with ``hash_mode="xxhash64"`` (28-bit-masked xxHash64
-    instead of the md5-prefix parity hash). Not in the query registry —
-    DuckDB has no xxHash64, so there is no oracle; the agreement test
-    (test_production_paths) pins its thresholded pair set against the
-    parity query, and bench.py reports its wall time as an extra row
-    (the hash swap removes the md5 hex-string materialization from the
-    shingle scan, the dominant map-side cost)."""
-    hs = gram_hash_arrays(
-        widen_partitions(load_table(spark, sf_dir, "documents")),
-        hash_mode="xxhash64",
-    )
-    return minhash_lsh_pairs_arr(hs).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
 
 
 HIRECALL_BANDS = 8
@@ -763,11 +745,8 @@ SIMHASH_MAX_HAMMING = 3
 # band buckets hold corpus/2^(bits/4) docs, so 28 bits (128-value
 # bands) saturates at corpus scale while 60 bits (32k-value bands)
 # keeps the block join sparse — and 15 md5 nibbles still fit a
-# BIGINT, so the DuckDB oracle reproduces signatures bit-for-bit.
-# The 64-bit xxhash64 production mode drops the md5 hex cost
-# entirely (operators/dedup.py simhash_pairs(bits=64,
-# hash_mode="xxhash64"); banding-losslessness is hash-agnostic —
-# test_simhash_pairs_banding_is_lossless covers both).
+# BIGINT (the widest md5-prefix hash), so the DuckDB oracle
+# reproduces signatures bit-for-bit.
 SIMHASH_PAIR_BITS = 60
 
 
@@ -971,7 +950,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     from firefox_public_data_report_etl_spark.operators.dedup import (
         SPARK_SHINGLES,
-        _hash28,
+        _hash_int,
     )
 
     t = docs.select("source", F.split("text", " ").alias("t")).filter(
@@ -979,7 +958,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = t.select(
         "source", F.explode(F.array_distinct(F.expr(SPARK_SHINGLES))).alias("g")
-    ).select("source", _hash28("g", "parity").alias("h"))
+    ).select("source", _hash_int("g").alias("h"))
     per_h = sh.groupBy("h").agg(
         F.array_sort(F.collect_set("source")).alias("ss")
     )

@@ -773,6 +773,10 @@ def kpi_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
       aggregate emits all five metrics. Guarded `when(in_month, ...)`
       sums reproduce Q14's month-filtered sums exactly (NULL on an
       empty month, 0-contribution rows otherwise).
+      The Q17 leg is therefore computed over lineitem ⋈ part, while
+      the standalone Q17 oracle reads lineitem alone: the two agree
+      only while every ``l_partkey`` exists in ``part`` (TPC-H's
+      foreign key, true of the generated data).
     - The U2 cohort check is counts over ONE distinct-cohort pass
       (the exceptAll formulation evaluated the produced subtree — a
       full events scan — twice): missing = |allow| − |produced ∩

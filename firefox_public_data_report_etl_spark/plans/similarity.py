@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from firefox_public_data_report_etl_spark.functions import cosine
 from firefox_public_data_report_etl_spark.operators.similarity import (
     _NORM,
     SIGN_BITS,
@@ -618,11 +619,7 @@ def _dedup_semantic_over(emb: DataFrame, codebook: DataFrame) -> DataFrame:
                 "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (s, v) -> s + v)"
             ),
         )
-        .withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        )
+        .withColumn("cos", cosine("dot", "na", "nb"))
         .filter(F.col("cos") >= SEM_DEDUP_THRESHOLD)
         .select("da", "db")
     )
@@ -1078,9 +1075,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         dot = F.expr(
             f"aggregate(zip_with({qa}, {qb}, (x, y) -> x * y), 0L, (s, v) -> s + v)"
         )
-        return dot.cast("double") / F.sqrt(
-            F.col(na).cast("double") * F.col(nb).cast("double")
-        )
+        return cosine(dot, na, nb)
 
     cross = (
         side(withc.filter(~is_batch), "base")

@@ -1334,41 +1334,6 @@ def _caption_vectors(
 CAP_EVAL_MOD = 10
 
 
-def dedup_winnowing_pairs_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of ``dedup_winnowing_pairs``: identical
-    selection/pair pipeline with ``hash_mode="xxhash64"`` (28-bit-
-    masked xxHash64). Not in the query registry — DuckDB has no
-    xxHash64, so no oracle; the guarantee and density tests pin its
-    behavior (any >= w+k-1 shared substring still shares a selected
-    fingerprint under ANY hash — the theorem is hash-agnostic), and
-    bench.py reports its wall time as an extra row (the hash swap
-    removes the md5 hex materialization from the gram-position hot
-    path, the dominant map-side cost of the winnowing family)."""
-    from firefox_public_data_report_etl_spark.operators.text import (
-        winnow_fingerprints,
-    )
-
-    sel = winnow_fingerprints(
-        load_table(spark, sf_dir, "documents"), hash_mode="xxhash64"
-    ).select("doc_id", "h").distinct()
-    df_ok = (
-        sel.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") <= WINNOW_MAX_DF)
-        .select("h")
-    )
-    kept = sel.join(df_ok, "h")
-    a = kept.select(F.col("doc_id").alias("da"), "h")
-    b = kept.select(F.col("doc_id").alias("db"), "h")
-    return (
-        a.join(b, "h")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= WINNOW_SHARED_MIN)
-    )
-
-
 def dedup_winnowing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental winnowing overlap probe — this week's batch
     (doc_id % 4 == 0, the established incremental split) mined for
@@ -1623,8 +1588,9 @@ def _caption_ivf_probe(spark: SparkSession, sf_dir: str):
     CAP_RET_K probed ranking (cap_id, img_media, a_rank), and
     ``caps``/``imgs`` are the persisted (id, q, norm) relations the
     recall harness reuses for its brute-truth side. Codebook sizing is
-    codebook_mod(N_images, CAP_CENT_MOD) — floored at the registry
-    constant at oracle SFs so the oracle is a static string."""
+    codebook_mod(N_documents, CAP_CENT_MOD); the oracle
+    (``_caption_ivf_ctes``) computes the same law from the same count,
+    so the two agree past the floor (sf0.1: mod 70)."""
     from firefox_public_data_report_etl_spark.operators.multimodal import (
         CAP_MIS_MOD,
         CAP_MIS_RES,
@@ -1805,7 +1771,14 @@ def multimodal_caption_retrieval_scaled(
 def _caption_ivf_ctes() -> str:
     """WITH-body through ``approx`` (cap_id, img_media, a_rank) — the
     DuckDB replay of `_caption_ivf_probe`, shared by the probe-only
-    oracle and the recall-harness oracle."""
+    oracle and the recall-harness oracle.
+
+    The centroid mod is ``codebook_mod`` over the documents count,
+    taken as a window count over ``img_ids`` (one row per document).
+    A scalar ``(SELECT count(*) FROM documents)`` gives the same value
+    but plans as a cross product that DuckDB joins last, so the
+    centroid filter lands above the image-by-image ``dm`` join: at
+    sf0.1 that spilled past 20 GB."""
     from firefox_public_data_report_etl_spark.operators.multimodal import (
         CAP_MIS_MOD,
         CAP_MIS_RES,
@@ -1825,8 +1798,10 @@ inrm AS (SELECT media_id, CAST(sum(val * val) AS BIGINT) AS na
          FROM ci_e GROUP BY media_id),
 cnrm AS (SELECT media_id, CAST(sum(val * val) AS BIGINT) AS nb
          FROM cc_e GROUP BY media_id),
-cents AS (SELECT media_id AS cid FROM img_ids
-          WHERE media_id % {CAP_CENT_MOD} = 1),
+cents AS (SELECT cid FROM (SELECT media_id AS cid, count(*) OVER () AS n
+                           FROM img_ids)
+          WHERE cid % GREATEST({CAP_CENT_MOD},
+                               CAST(floor(sqrt(n)) AS BIGINT)) = 1),
 ic AS (SELECT a.media_id, c.cid, CAST(sum(a.val * b.val) AS BIGINT) AS dot
        FROM ci_e a JOIN cents c ON TRUE
        JOIN ci_e b ON b.media_id = c.cid AND b.dm = a.dm
@@ -3265,13 +3240,6 @@ def _bpe_artifacts(
     return merges, alphabet
 
 
-def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    return [
-        (r["left_sym"], r["right_sym"])
-        for r in _bpe_merge_frame(spark, sf_dir).orderBy("step").collect()
-    ]
-
-
 def _bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firefox_public_data_report_etl_spark.operators.text import (
         bpe_apply,
@@ -4253,20 +4221,6 @@ def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic — see operators.text.boilerplate_scores.
     """
     return boilerplate_scores(load_table(spark, sf_dir, "documents"))
-
-
-def corpus_boilerplate_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of ``corpus_boilerplate`` (the
-    dedup_minhash_lsh_prod pattern): ``gram_key="xxhash64"`` shuffles
-    8-byte gram hashes instead of ~20-byte gram strings through both
-    exchanges. Not in the registry — DuckDB has no xxHash64, so no
-    oracle; test_production_paths pins its output against the raw-key
-    form and bench.py reports its wall time as an extra row.
-    Boilerplate is the curation pipeline's dominant cost, so this knob
-    is the first thing a 100 TB deployment should flip."""
-    return boilerplate_scores(
-        load_table(spark, sf_dir, "documents"), gram_key="xxhash64"
-    )
 
 
 CORPUS_BOILERPLATE_ORACLE = f"""

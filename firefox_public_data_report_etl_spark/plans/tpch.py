@@ -459,33 +459,10 @@ GROUP BY p_brand
 """
 
 
-def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery (per-part average
-    quantity) → in Spark, a pre-aggregated per-part dim joined back to
-    the fact (the decorrelation Catalyst would apply to the subquery).
-
-    Revenue of line items below half their part's average quantity.
-    Determinism: the avg is compared via exact cross-multiplication
-    (2 * den * qty < num), never a floating avg threshold.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qty"),
-        cents(F.col("l_extendedprice")).alias("price_c"),
-    )
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum("qty").alias("qty_sum"), F.count("*").alias("qty_n")
-    )
-    joined = li.join(per_part, "l_partkey")
-    below = joined.filter(
-        F.col("qty") * F.col("qty_n") * 2 < F.col("qty_sum")
-    )
-    return below.agg(
-        F.count("*").alias("n_items"),
-        (F.sum("price_c").cast("double") / 100).alias("revenue"),
-    )
-
-
+# TPC-H Q17 shape: revenue of line items below half their part's
+# average quantity (exact cross-multiplication, no float average).
+# The Spark side is fused into plans/shapes.py kpi_snapshot, whose
+# oracle embeds this SQL.
 SMALL_QTY_REVENUE_ORACLE = """
 WITH li AS (
   SELECT l_partkey,

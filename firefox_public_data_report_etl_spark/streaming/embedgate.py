@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from firefox_public_data_report_etl_spark.functions import cosine
 from firefox_public_data_report_etl_spark.operators.ivf_lifecycle import (
     append_to_ivf_index,
 )
@@ -86,11 +87,7 @@ def _within_batch_pairs(
                 " 0L, (s, v) -> s + v)"
             ),
         )
-        .withColumn(
-            "cos",
-            F.col("dot").cast("double")
-            / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        )
+        .withColumn("cos", cosine("dot", "na", "nb"))
         .filter(F.col("cos") >= threshold)
         .select("da", "db")
         .distinct()

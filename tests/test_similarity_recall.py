@@ -5,12 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import firefox_public_data_report_etl_spark.operators.dedup as dedup
 from firefox_public_data_report_etl_spark.operators.dedup import (
     _decide_broadcast_pairs,
-    jaccard_for_pairs,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    shingle_rows,
+    gram_hash_arrays,
+    prefix_filter_pairs,
 )
 from firefox_public_data_report_etl_spark.operators.similarity import (
     cosine_topk,
@@ -106,48 +105,37 @@ def test_ivf_multiprobe_recall(spark):
     emb.unpersist()
 
 
-def test_jaccard_pairs_shuffle_fallback_matches_broadcast(spark, sf_dir):
-    sh = shingle_rows(load_table(spark, sf_dir, "documents")).cache()
-    cand = lsh_candidate_pairs(minhash_signatures(sh))
-    via_broadcast = {
-        (r["da"], r["db"], round(r["jaccard"], 12))
-        for r in jaccard_for_pairs(cand, sh, broadcast_pairs=True).collect()
-    }
-    via_shuffle = {
-        (r["da"], r["db"], round(r["jaccard"], 12))
-        for r in jaccard_for_pairs(cand, sh, broadcast_pairs=False).collect()
-    }
-    assert via_broadcast == via_shuffle
+def test_jaccard_pairs_shuffle_fallback_matches_broadcast(
+    spark, sf_dir, monkeypatch
+):
+    """The exact pair verify gives the same pairs and Jaccard values
+    on the shuffle path (gate forced shut) as on the broadcast path
+    the test corpus takes by default."""
+
+    def pairs():
+        hs = gram_hash_arrays(load_table(spark, sf_dir, "documents"))
+        out = prefix_filter_pairs(hs, 0.5)
+        got = {
+            (r["da"], r["db"], round(r["jaccard"], 12)) for r in out.collect()
+        }
+        for df in out._probe_persisted:
+            df.unpersist()
+        return got
+
+    via_broadcast = pairs()
+    monkeypatch.setattr(dedup, "MAX_BROADCAST_PAIRS", 0)
+    via_shuffle = pairs()
+    assert via_shuffle == via_broadcast
     assert len(via_broadcast) > 0
-    sh.unpersist()
 
 
-def test_jaccard_pairs_broadcast_auto_gate(spark, sf_dir):
-    """The default (None) mode size-gates the candidate broadcast: a
-    candidate set over ``max_broadcast_pairs`` takes the shuffle path
-    AUTOMATICALLY (no caller opt-out needed) and still agrees with the
-    forced-broadcast results; a small set keeps the broadcast."""
-    sh = shingle_rows(load_table(spark, sf_dir, "documents")).cache()
-    cand = lsh_candidate_pairs(minhash_signatures(sh))
-
-    # decision level: the same candidate set flips paths on the gate
-    _, decided_small_limit = _decide_broadcast_pairs(cand, None, 0)
-    _, decided_big_limit = _decide_broadcast_pairs(cand, None, 10**9)
-    assert decided_small_limit is False  # "dup-heavy" corpus → shuffle
-    assert decided_big_limit is True
-    # explicit modes bypass the gating count entirely
-    assert _decide_broadcast_pairs(cand, False, 0)[1] is False
-    assert _decide_broadcast_pairs(cand, True, 0)[1] is True
-
-    # end to end: auto-shuffle (gate=0) ≡ forced broadcast
-    via_auto_shuffle = {
-        (r["da"], r["db"], round(r["jaccard"], 12))
-        for r in jaccard_for_pairs(cand, sh, max_broadcast_pairs=0).collect()
-    }
-    via_broadcast = {
-        (r["da"], r["db"], round(r["jaccard"], 12))
-        for r in jaccard_for_pairs(cand, sh, broadcast_pairs=True).collect()
-    }
-    assert via_auto_shuffle == via_broadcast
-    assert len(via_auto_shuffle) > 0
-    sh.unpersist()
+def test_jaccard_pairs_broadcast_auto_gate(spark, monkeypatch):
+    """``_decide_broadcast_pairs`` broadcasts a candidate set of at
+    most ``MAX_BROADCAST_PAIRS`` rows and takes the shuffle path above
+    it — a dup-heavy corpus needs no caller opt-out."""
+    cand = spark.range(5).selectExpr("id AS da", "id + 1 AS db")
+    for limit, broadcast in ((0, False), (4, False), (5, True), (10**9, True)):
+        monkeypatch.setattr(dedup, "MAX_BROADCAST_PAIRS", limit)
+        persisted, decided = _decide_broadcast_pairs(cand)
+        assert decided is broadcast, limit
+        persisted.unpersist()

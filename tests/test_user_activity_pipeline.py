@@ -143,18 +143,3 @@ def test_worldwide_rollup(result):
     assert top[0]["addon_name"] == "Good One" and top[0]["ratio"] == 0.5
     locs = {t["locale"]: t["ratio"] for t in ww["top_locales"]}
     assert locs == {"en-US": 0.5, "de": 0.25, "fr": 0.25}
-
-
-def test_mau_salted_twin_agrees(spark, sf_dir):
-    """The salted measurement twin of mau_wau_weekly (explicit
-    two-stage distinct) must return the exact native rows — the
-    agreement that backs SCALING.md's keep-the-native-form decision."""
-    from firefox_public_data_report_etl_spark.plans.activity import (
-        mau_wau_weekly,
-        mau_wau_weekly_salted,
-    )
-
-    native = {tuple(r) for r in mau_wau_weekly(spark, sf_dir).collect()}
-    salted = {tuple(r) for r in mau_wau_weekly_salted(spark, sf_dir).collect()}
-    assert native == salted
-    assert len(native) > 0

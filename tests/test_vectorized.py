@@ -489,3 +489,38 @@ def test_threshold_pairs_closure_guard_fires(spark):
     finally:
         V._BRUTE_CLOSURE_MAX = old
     assert V.cosine_threshold_pairs_matmul(emb, 0.45).count() > 0
+
+
+def test_zero_vector_scores_null_not_divide_by_zero(spark):
+    """An all-zero embedding has norm 0, so its cosine is 0 / 0. The
+    scorer must give NULL (DuckDB's answer for x / 0.0) instead of
+    raising DIVIDE_BY_ZERO under ANSI; the NULL ranks last and the
+    top-k is taken over the other rows."""
+    from firefox_public_data_report_etl_spark.operators.similarity import (
+        quantized,
+    )
+    from firefox_public_data_report_etl_spark.operators.vectorized import (
+        cosine_topk_ivf,
+    )
+
+    rows = [
+        (1, [1.0, 0.0]),  # the one centroid (id % 100 == 1)
+        (2, [0.9, 0.2]),
+        (3, [0.5, 0.5]),
+        (4, [0.1, 0.9]),
+        (5, [1.0, 0.1]),  # the one query (id % 5 == 0)
+        (7, [0.0, 0.0]),  # all-zero candidate
+    ]
+    emb = quantized(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    )
+    got = [
+        (r.n_id, r.rank, r.cos)
+        for r in cosine_topk_ivf(emb, 10, 5, 100).orderBy("rank").collect()
+    ]
+    assert [n for n, _, _ in got] == [1, 2, 3, 4, 7]
+    assert [rk for _, rk, _ in got] == [1, 2, 3, 4, 5]
+    assert got[-1][2] is None
+    assert all(c is not None for _, _, c in got[:-1])
+    top3 = cosine_topk_ivf(emb, 3, 5, 100).collect()
+    assert sorted(r.n_id for r in top3) == [1, 2, 3]

@@ -94,35 +94,6 @@ def test_density_near_expected(spark, sf_dir):
     assert 0.1 < frac < 0.5  # 2/(w+1) = 0.222 at w=8
 
 
-def test_production_hash_mode_keeps_guarantee_and_density(spark, sf_dir):
-    # the SIGMOD guarantee is hash-agnostic: under xxhash64 a shared
-    # >= w+k-1 substring still yields a shared selected fingerprint,
-    # and selection density stays in the 2/(w+1) band
-    from pyspark.sql import functions as F
-
-    t = WINNOW_W + FINGERPRINT_GRAM - 1
-    shared = "zxcvbnmasdfghjklqwe"[: t + 3]
-    df = spark.createDataFrame(
-        [(1, "AAAA" + shared + "BBBBBBBBBB"),
-         (2, "CCCCCCCCC" + shared + "DDDD")],
-        "doc_id long, text string",
-    )
-    sel = winnow_fingerprints(df, hash_mode="xxhash64").collect()
-    h1 = {r.h for r in sel if r.doc_id == 1}
-    h2 = {r.h for r in sel if r.doc_id == 2}
-    assert h1 & h2
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") < 100
-    )
-    out = winnow_fingerprints(docs, hash_mode="xxhash64")
-    agg = out.groupBy("doc_id").agg(
-        F.count("*").alias("n_sel"), F.first("n_grams").alias("n_grams")
-    ).collect()
-    total_sel = sum(r.n_sel for r in agg)
-    total_win = sum(r.n_grams - (WINNOW_W - 1) for r in agg)
-    assert 0.1 < total_sel / total_win < 0.5
-
-
 def test_pos_cap_overflow_fails_loudly(spark):
     """A document with >= _WINNOW_POS_CAP gram positions must raise at
     execution, not silently pack colliding keys (round-11 ADVICE fix).

@@ -37,11 +37,10 @@ POINTS = {
 }
 
 # the priced-12 (BASELINE.md table) + round-4 curve set + the scale
-# siblings of the capped baselines + the MAU salting measurement twin
+# siblings of the capped baselines
 DEFAULT_NAMES = [
     "user_activity_flagship",
     "mau_wau_weekly",
-    "mau_wau_weekly_salted",
     "pricing_summary",
     "regional_revenue",
     "late_ship_priority",
@@ -168,32 +167,8 @@ def main() -> None:
         QUERIES,
         SCALE_CLASS,
     )
-    from firefox_public_data_report_etl_spark.plans.activity import (
-        mau_wau_weekly_salted,
-    )
-    from firefox_public_data_report_etl_spark.plans.text import (
-        corpus_boilerplate_hashed,
-    )
+
     queries = dict(QUERIES)
-    queries["mau_wau_weekly_salted"] = mau_wau_weekly_salted
-    queries["corpus_boilerplate_hashed"] = corpus_boilerplate_hashed
-
-    # production-mode simhash measurement twin: 64-bit xxhash64
-    # signatures (no md5 hex cost, 65k-value bands) vs the registry's
-    # 60-bit md5-parity form
-    def _simhash_xxhash64(spark, sf_dir):
-        from firefox_public_data_report_etl_spark.operators.dedup import (
-            simhash_pairs,
-        )
-        from firefox_public_data_report_etl_spark.sources import load_table
-
-        return simhash_pairs(
-            load_table(spark, sf_dir, "documents"),
-            hash_mode="xxhash64",
-            bits=64,
-        )
-
-    queries["dedup_simhash_xxhash64"] = _simhash_xxhash64
 
     # Manku-style wide-key layout: C(6,3)=20 tables of 30-bit keys —
     # the knob for corpora that saturate the 4x15-bit band space
