@@ -103,12 +103,15 @@ def cosine_topk_matmul(
             # a tiebreak decision) provably preserves the final window
             # top-k. Self-pairs are masked to -inf BEFORE the kth so
             # they can't evict a real candidate, and dropped here.
+            # A zero norm gives 0/0 = NaN (NULL in Spark, ranked last);
+            # np.partition orders NaN above every number, so NaN counts
+            # as -inf for the cut and is kept only when the cut is -inf.
             cos = dots / np.sqrt(
                 n_norms[:, None].astype(np.float64)
                 * q_norm[None, :].astype(np.float64)
             )
             self_mask = n_ids[:, None] == q_ids[None, :]
-            cos_sel = np.where(self_mask, -np.inf, cos)
+            cos_sel = np.where(self_mask | np.isnan(cos), -np.inf, cos)
             if len(pdf) > k:
                 kth = np.partition(cos_sel, len(pdf) - k, axis=0)[
                     len(pdf) - k

@@ -10,16 +10,33 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
+import tempfile
+import uuid
 
 import pandas as pd
 
 from firefox_public_data_report_etl_spark.sources import TABLES
 
 
+# Oracle connections get a fixed memory cap and spill under the temp
+# dir instead of DuckDB's defaults (80% of host RAM, ``.tmp`` under the
+# current directory), so a runaway oracle fails on its own instead of
+# filling the disk and then the host's memory.  Threads keep DuckDB's
+# default, so bench.py's DuckDB controls stay comparable.
+ORACLE_MEMORY_LIMIT = "6GiB"
+
+
 def duckdb_connection(sf_dir: str):
+    """A DuckDB connection with every source table as a view over
+    ``sf_dir``.  Its spill directory is made only when a query spills
+    and is removed by DuckDB when the connection closes."""
     import duckdb
 
-    con = duckdb.connect()
+    spill = os.path.join(tempfile.gettempdir(), f"duckdb-oracle-{uuid.uuid4().hex}")
+    con = duckdb.connect(
+        config={"memory_limit": ORACLE_MEMORY_LIMIT, "temp_directory": spill}
+    )
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

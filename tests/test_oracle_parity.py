@@ -68,3 +68,87 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert len(df.columns) == 11
+
+
+def test_oracle_connection_caps_memory_and_spills_under_tmp(sf_dir):
+    """Oracle connections run under a fixed memory cap and spill under
+    the temp dir, never to DuckDB's 80%-of-RAM default and ``.tmp`` in
+    the current directory."""
+    import os
+    import tempfile
+
+    from firefox_public_data_report_etl_spark.testing import duckdb_connection
+
+    con = duckdb_connection(sf_dir)
+    try:
+        limit, spill = con.execute(
+            "SELECT current_setting('memory_limit'),"
+            " current_setting('temp_directory')"
+        ).fetchone()
+        assert con.execute("SELECT count(*) FROM region").fetchone()[0] > 0
+    finally:
+        con.close()
+    assert limit == "6.0 GiB"
+    assert os.path.dirname(spill) == tempfile.gettempdir()
+    assert not os.path.exists(spill)
+
+
+def test_kpi_snapshot_q17_leg_rests_on_the_part_foreign_key(spark, tmp_path):
+    """kpi_snapshot computes its Q17 rows over lineitem joined to part,
+    while the standalone Q17 oracle reads lineitem alone: the two agree
+    only while every ``l_partkey`` exists in ``part``. On a copy of the
+    smoke tables they agree; with one referenced part row removed they
+    no longer do."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from conftest import SF_SMOKE
+    from firefox_public_data_report_etl_spark.plans.shapes import kpi_snapshot
+    from firefox_public_data_report_etl_spark.plans.tpch import (
+        SMALL_QTY_REVENUE_ORACLE,
+    )
+    from firefox_public_data_report_etl_spark.testing import duckdb_connection
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMOKE, sf)
+
+    def q17(sf_dir):
+        got = {
+            r.metric: r.value
+            for r in kpi_snapshot(spark, sf_dir).collect()
+            if r.metric.startswith("small_qty_")
+        }
+        con = duckdb_connection(sf_dir)
+        try:
+            n, rev = con.execute(SMALL_QTY_REVENUE_ORACLE).fetchone()
+            # A part key with at least one line item in the Q17 sum.
+            key = con.execute(
+                """
+                WITH li AS (
+                  SELECT l_partkey, round(l_quantity) AS qty FROM lineitem
+                ), pp AS (
+                  SELECT l_partkey, sum(qty) AS s, count(*) AS n
+                  FROM li GROUP BY l_partkey
+                )
+                SELECT min(l_partkey) FROM li JOIN pp USING (l_partkey)
+                WHERE qty * n * 2 < s
+                """
+            ).fetchone()[0]
+        finally:
+            con.close()
+        return got, {"small_qty_n_items": float(n), "small_qty_revenue": rev}, key
+
+    got, want, key = q17(str(sf))
+    assert got == want
+    assert want["small_qty_n_items"] > 0
+
+    (sf / "part.parquet").chmod(0o644)
+    part = pq.read_table(sf / "part.parquet")
+    assert key in part["p_partkey"].to_pylist()
+    pq.write_table(
+        part.filter(pc.not_equal(part["p_partkey"], key)), sf / "part.parquet"
+    )
+    got, want, _ = q17(str(sf))
+    assert got != want

@@ -524,3 +524,49 @@ def test_zero_vector_scores_null_not_divide_by_zero(spark):
     assert all(c is not None for _, _, c in got[:-1])
     top3 = cosine_topk_ivf(emb, 3, 5, 100).collect()
     assert sorted(r.n_id for r in top3) == [1, 2, 3]
+
+
+def test_matmul_topk_keeps_true_neighbours_next_to_a_zero_vector(spark):
+    """An all-zero vector in the candidates' Arrow batch scores NaN in
+    numpy (NULL in Spark). The per-batch cut must not count it above
+    the real cosines, or the batch's k-th true neighbour is dropped;
+    a zero-norm query ranks every candidate by id (all NULL)."""
+    import numpy as np
+
+    from firefox_public_data_report_etl_spark.operators.similarity import (
+        quantized,
+    )
+
+    rows = [
+        (1, [1.0, 0.0]),
+        (2, [0.9, 0.2]),
+        (3, [0.5, 0.5]),
+        (4, [0.1, 0.9]),
+        (5, [1.0, 0.1]),
+        (6, [0.0, 1.0]),
+        (7, [0.0, 0.0]),  # all-zero candidate and query
+        (8, [-1.0, 0.3]),
+    ]
+    emb = quantized(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ).coalesce(1)  # one partition: every candidate in one Arrow batch
+    queries = emb.filter(F.col("vec_id").isin(2, 5, 7))
+    k = 3
+    got = sorted(
+        (r.q_id, r.n_id, r.rank)
+        for r in cosine_topk_matmul(queries, emb, k).collect()
+    )
+
+    q = {r.vec_id: (np.asarray(r.q, dtype=np.int64), r.norm) for r in emb.collect()}
+    want = []
+    for qi in (2, 5, 7):
+        qv, na = q[qi]
+        scored = []
+        for ni, (v, nb) in q.items():
+            if ni == qi:
+                continue
+            cos = float(v @ qv) / math.sqrt(float(na) * float(nb)) if na * nb else None
+            scored.append((cos is None, -(cos or 0.0), ni))
+        want += [(qi, ni, rank) for rank, (_, _, ni) in enumerate(sorted(scored)[:k], 1)]
+    assert got == sorted(want)
+    assert [n for qi, n, _ in got if qi == 7] == [1, 2, 3]

@@ -17,25 +17,20 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from tools.gate_run import TABLES, _value_hash  # noqa: E402
+from tools.gate_run import _value_hash  # noqa: E402
 
 
 def main() -> int:
-    import duckdb
-
     import __spark_entry__ as entrymod
     from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.testing import duckdb_connection
 
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
     names = sys.argv[1:]
     spark = get_spark(
         app_name="check_query", master="local[8]", shuffle_partitions=8
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_connection(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     rc = 0

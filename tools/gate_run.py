@@ -24,11 +24,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def _value_hash(df, cols: list[str]) -> str:
     """Order-independent hash: rows as reprs over name-sorted columns,
@@ -43,19 +38,14 @@ def _value_hash(df, cols: list[str]) -> str:
 
 
 def run_gate(sf_dir: str) -> dict[str, dict]:
-    import duckdb
-
     import __spark_entry__ as entrymod
     from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.testing import duckdb_connection
 
     spark = get_spark(
         app_name="gate_run", master="local[8]", shuffle_partitions=8
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_connection(sf_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

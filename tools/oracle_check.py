@@ -18,17 +18,16 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from tools.gate_run import TABLES, _value_hash  # noqa: E402
+from tools.gate_run import _value_hash  # noqa: E402
 
 
 def main() -> int:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
 
-    import duckdb
-
     import __spark_entry__ as entrymod
     from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.testing import duckdb_connection
 
     spark = get_spark(
         app_name="oracle_check",
@@ -36,11 +35,7 @@ def main() -> int:
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_connection(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     rc = 0
