@@ -5415,6 +5415,11 @@ def corpus_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Index directories ``corpus_bm25_probe`` built in this process, each
+#: removed once at exit.
+_BM25_PROBE_INDEXES: set[str] = set()
+
+
 def corpus_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``corpus_bm25_topk``'s scale path, registry-discoverable
     (round-13 verdict #7): the SERVED-INDEX shape — postings written
@@ -5433,7 +5438,9 @@ def corpus_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     `test_bm25_index`/SCALING.md against the in-query form. Output
     is bit-identical to ``corpus_bm25_topk`` (same fixed-point
     contract; the oracle is shared verbatim)."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
     from firefox_public_data_report_etl_spark.operators.bm25_index import (
@@ -5446,6 +5453,11 @@ def corpus_bm25_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(),
         f"fpdr_bm25_probe_index_{os.getpid()}",
     )
+    # The returned frame reads the index lazily, so it can only be
+    # removed when the process exits.
+    if path not in _BM25_PROBE_INDEXES:
+        _BM25_PROBE_INDEXES.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     build_bm25_index(docs, path)
     queries = docs.filter(F.col("doc_id") % BM25_QUERY_MOD == 0).select(
         "doc_id", "text"

@@ -33,10 +33,10 @@ CTE → Spark mapping (SURVEY.md §2 ids in parens):
 
 Scale notes: nothing is cached; each branch re-reads `sample` from the
 source (column pruning gives each a narrow scan). countries and
-latest_releases broadcast. Every aggregate that feeds the final join
-groups on (week_start, country_name) in that order, so the four sides
-are hash-partitioned alike and a sort-merge join needs no further
-exchange; at report size AQE broadcasts them instead.
+latest_releases broadcast. The final join streams `folded` and
+broadcasts the other three sides: each holds one row per (week,
+country), a few hundred rows per week of report, whatever the number
+of clients.
 """
 
 from __future__ import annotations
@@ -319,10 +319,13 @@ def user_activity_weekly(
         out_col="top_locales",
     )
 
+    # The three small sides are broadcast by hint, not by AQE: AQE
+    # picks each build side from whichever stages have finished, so the
+    # join (and its generated code) changed from run to run.
     out = (
-        folded.join(latest_version_ratio, keys)
-        .join(top_addons, keys)
-        .join(top_locales, keys)
+        folded.join(F.broadcast(latest_version_ratio), keys)
+        .join(F.broadcast(top_addons), keys)
+        .join(F.broadcast(top_locales), keys)
         .filter(~F.col("week_start").isin(list(ARMAGADDON_WEEKS)))
     )
     return out.select(

@@ -30,6 +30,34 @@ The cache holds compiled code only, no data and no result.  The cache
 size is a static SQL conf: it applies only when this function starts
 the session (a session that already exists keeps the size it was
 started with).
+
+The driver JVM compiles with C1 only (``-XX:TieredStopAtLevel=1``).
+Under HotSpot's default tiered policy, C2 was still compiling Catalyst,
+Scala, JDK and generated classes when each pass ended: on the
+``report_jobs`` benchmark (one session, two measured passes),
+``CompilationMXBean`` counted 10.3 s and 7.8 s of JIT compile time
+against 14.9 s and 12.2 s of process CPU, and 1.4 s and 0.8 s with C1
+alone.  This engine's traffic is one CLI job per process or a few
+passes over report-sized inputs, too short to get that work back.  On
+a shared 4-vCPU host, C1 only took ``report_jobs`` CPU per pass from a
+median of 15.2 s to 8.2 s (10 alternating pairs), and a one-shot
+``user_activity`` or ``hardware_report`` process from about 50 s to
+about 30 s of CPU, wall time within the run-to-run spread.  The trade
+is steady-state speed: once C2 would have warmed up, C1 code runs
+tasks slower, and a long-lived session over sf0.1 data pays for it in
+wall time (the warmed ``bench.py`` headline queries took 1.7-2.1x as
+long; SCALING.md has the per-query pair).  The flag
+goes into ``spark.driver.defaultJavaOptions``, which Spark puts before
+a caller's ``spark.driver.extraJavaOptions``, so both reach the JVM.
+It reaches the driver JVM only: on a cluster the executors keep tiered
+C2, and the trade exists only in local mode, where the driver also
+runs the tasks.  Like the cache size, it applies only when this
+function launches the JVM.
+
+Python workers import the package by the path the driver found it on:
+``spark.executorEnv.PYTHONPATH`` is the package's parent directory
+joined with the caller's ``PYTHONPATH``, so a UDF that imports the
+package works when the driver put it on ``sys.path`` itself.
 """
 
 from __future__ import annotations
@@ -37,6 +65,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -92,6 +122,18 @@ def get_spark(
         # the largest measured working set (~170 classes).
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # C1 only in the driver JVM (module docstring): C2 spent more
+        # CPU compiling than a short session gets back.  Default, not
+        # extra, Java options, so a caller's extraJavaOptions still
+        # apply; launch-time only, like the cache size.
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # Python workers find the package where the driver did.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(
+                p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+            ),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
