@@ -57,14 +57,16 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.plans import QUERIES
 
     # No console progress bars: stray \r-frames on stdout would push
     # the compact JSON line out of the driver's 2 KB stdout tail.
+    # Tiered C2: the headline measures warmed, steady-state execution,
+    # comparable round over round.
     spark = get_spark(
         app_name="fpdr-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={**TIERED_C2, "spark.ui.showConsoleProgress": "false"},
     )
     # Warm JVM JIT + whole-stage-codegen compilation on the smallest SF
     # so sf0.1 timings measure steady-state execution, not first-call

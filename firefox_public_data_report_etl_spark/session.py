@@ -31,42 +31,86 @@ size is a static SQL conf: it applies only when this function starts
 the session (a session that already exists keeps the size it was
 started with).
 
-The driver JVM compiles with C1 only (``-XX:TieredStopAtLevel=1``).
-Under HotSpot's default tiered policy, C2 was still compiling Catalyst,
-Scala, JDK and generated classes when each pass ended: on the
-``report_jobs`` benchmark (one session, two measured passes),
-``CompilationMXBean`` counted 10.3 s and 7.8 s of JIT compile time
-against 14.9 s and 12.2 s of process CPU, and 1.4 s and 0.8 s with C1
-alone.  This engine's traffic is one CLI job per process or a few
-passes over report-sized inputs, too short to get that work back.  On
-a shared 4-vCPU host, C1 only took ``report_jobs`` CPU per pass from a
-median of 15.2 s to 8.2 s (10 alternating pairs), and a one-shot
-``user_activity`` or ``hardware_report`` process from about 50 s to
-about 30 s of CPU, wall time within the run-to-run spread.  The trade
-is steady-state speed: once C2 would have warmed up, C1 code runs
-tasks slower, and a long-lived session over sf0.1 data pays for it in
-wall time (the warmed ``bench.py`` headline queries took 1.7-2.1x as
-long; SCALING.md has the per-query pair).  The flag
-goes into ``spark.driver.defaultJavaOptions``, which Spark puts before
-a caller's ``spark.driver.extraJavaOptions``, so both reach the JVM.
-It reaches the driver JVM only: on a cluster the executors keep tiered
-C2, and the trade exists only in local mode, where the driver also
-runs the tasks.  Like the cache size, it applies only when this
-function launches the JVM.
+The driver JVM compiles with C1 only (``-XX:TieredStopAtLevel=1``)
+unless the caller passes ``extra_conf=TIERED_C2``.  Under HotSpot's
+default tiered policy, C2 was still compiling Catalyst, Scala, JDK and
+generated classes when each pass ended: on the ``report_jobs``
+benchmark (one session, two measured passes), ``CompilationMXBean``
+counted 13.6 s and 9.7 s of JIT compile time against 20.4 s and 15.2 s
+of process CPU, and 1.5 s and 1.0 s with C1 alone.  C1 code runs tasks
+about 1.7x slower than warmed C2 code, so the flag pays where
+compiling outweighs executing.  Measured on a shared 4-vCPU host:
+  - the benchmark's ``report_jobs`` and ``curation`` passes (2 task
+    threads): CPU per pass 18.2 -> 11.0 s and 17.8 -> 11.9 s, medians
+    of 10 alternating pairs;
+  - one CLI job per process at the default ``local[32]``, on the
+    benchmark's inputs (123k client-days, 32k hardware rows) and on
+    10x and 40x those: 15-45% less CPU in every case; wall time 0-6%
+    lower except ``user_activity`` at 10x, 17% higher (31% with 2 task
+    threads), medians of 3;
+  - a long-lived session of warmed queries over sf0.1 data: every
+    headline query of ``bench.py`` 1.2-3.4x as long.
+So ``bench.py`` and the scaling, index and recall tools, whose
+sessions run warmed queries over sf0.1 data or larger, start with
+``TIERED_C2``; a deployment that runs large jobs in local mode can do
+the same with ``-XX:TieredStopAtLevel=4`` in ``spark-defaults.conf``.
+The flag reaches the driver JVM only: on a cluster the executors keep
+tiered C2 and run the tasks.  Like the cache size, it applies only
+when this function launches the JVM.
 
-Python workers import the package by the path the driver found it on:
-``spark.executorEnv.PYTHONPATH`` is the package's parent directory
-joined with the caller's ``PYTHONPATH``, so a UDF that imports the
-package works when the driver put it on ``sys.path`` itself.
+Both launch-time settings below are extended, not replaced, by what
+``spark-defaults.conf`` and then the caller's ``extra_conf`` set (a
+builder setting alone would replace the defaults file's value):
+  - ``spark.driver.defaultJavaOptions`` starts with the C1 flag, so a
+    flag repeated after it wins.  Spark puts the default options
+    before a caller's ``spark.driver.extraJavaOptions``; both reach
+    the JVM.
+  - ``spark.executorEnv.PYTHONPATH`` starts with the package's parent
+    directory and the caller's ``PYTHONPATH``, so Python workers
+    import the package when the driver put it on ``sys.path`` itself.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: ``extra_conf`` for a session that runs warmed queries over sf0.1 data
+#: or larger (``bench.py``, the scaling, index and recall tools): HotSpot's
+#: default tiered policy, C2 included (module docstring).
+TIERED_C2 = {"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"}
+
+
+def _spark_defaults() -> dict[str, str]:
+    """The properties ``spark-submit`` reads from ``spark-defaults.conf``
+    (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``)."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if not conf_dir:
+        from pyspark.find_spark_home import _find_spark_home
+
+        conf_dir = os.path.join(_find_spark_home(), "conf")
+    props = {}
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            for line in f:
+                m = re.match(r"\s*([^\s=:#!][^\s=:]*)\s*[\s=:]\s*(.*)", line)
+                if m:
+                    props[m.group(1)] = m.group(2).strip()
+    except OSError:
+        pass
+    return props
+
+
+def _prepend(conf: dict[str, str], key: str, value: str, sep: str) -> None:
+    """Sets ``conf[key]`` to ``value``, then the key's value in
+    ``spark-defaults.conf``, then the caller's value in ``conf``
+    (module docstring)."""
+    parts = (value, _spark_defaults().get(key), conf.get(key))
+    conf[key] = sep.join(v for v in parts if v)
 
 
 def get_spark(
@@ -122,20 +166,24 @@ def get_spark(
         # the largest measured working set (~170 classes).
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # C1 only in the driver JVM (module docstring): C2 spent more
-        # CPU compiling than a short session gets back.  Default, not
-        # extra, Java options, so a caller's extraJavaOptions still
-        # apply; launch-time only, like the cache size.
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
-        # Python workers find the package where the driver did.
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.pathsep.join(
-                p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
-            ),
-        )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # C1 only in the driver JVM unless a later value sets another level
+    # (TIERED_C2; module docstring): C2 spent more CPU compiling than a
+    # short session gets back.  Default, not extra, Java options, so a
+    # caller's extraJavaOptions still apply; launch-time only, like the
+    # cache size.
+    _prepend(conf, "spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1", " ")
+    # Python workers find the package where the driver did.
+    _prepend(
+        conf,
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+        ),
+        os.pathsep,
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     try:

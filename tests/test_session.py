@@ -5,8 +5,9 @@ The suite's ``spark`` fixture is a bare session that owns the JVM, and
 take effect only at launch, so these checks share one child process
 that starts ``get_spark`` itself.  The child runs from a directory
 outside the repository with ``PYTHONPATH`` unset and puts the repository
-on ``sys.path`` itself, and its temp dir is a directory of the test's
-own."""
+on ``sys.path`` itself, its temp dir is a directory of the test's own,
+and its ``SPARK_CONF_DIR`` holds a ``spark-defaults.conf`` that sets
+the two launch settings ``get_spark`` extends."""
 
 from __future__ import annotations
 
@@ -18,16 +19,21 @@ import textwrap
 
 import pytest
 from conftest import SF_SMOKE
+from pyspark.sql import SparkSession
+
+from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROBE_OPT = "-Dfpdr.session.probe=1"
+ADMIN_OPT = "-Dfpdr.session.admin=1"
 
 # Prints one JSON line per check: the driver JVM's JIT tier cap and
-# whether a caller's extraJavaOptions reached it; whether a Python UDF
-# that imports the package runs; then, after building the
-# tests/test_cli.py inputs and running the three CLI jobs twice, the
-# Janino compile count of each round.  Last, it runs the served BM25
-# probe at sf0.001 and exits.
+# whether a caller's extraJavaOptions and the defaults file's
+# defaultJavaOptions reached it; whether a Python UDF imports the
+# package, and a module on the defaults file's executor PYTHONPATH;
+# then, after building the tests/test_cli.py inputs and running the
+# three CLI jobs twice, the Janino compile count of each round.  Last,
+# it runs the served BM25 probe at sf0.001 and exits.
 _CHILD = textwrap.dedent(
     """
     import json
@@ -57,18 +63,23 @@ _CHILD = textwrap.dedent(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     report("tiered_stop_at_level", hotspot.getVMOption("TieredStopAtLevel").getValue())
-    report("caller_option", probe_opt in list(mf.getRuntimeMXBean().getInputArguments()))
+    jvm_args = list(mf.getRuntimeMXBean().getInputArguments())
+    report("caller_option", probe_opt in jvm_args)
+    report("defaults_option", sys.argv[5] in jvm_args)
 
-    def package_name(_):
-        import firefox_public_data_report_etl_spark as pkg
+    def udf_import(name):
+        def load(_):
+            import importlib
 
-        return pkg.__name__
+            return importlib.import_module(name).__name__
 
-    try:
-        rows = spark.range(1).rdd.map(package_name).collect()
-        report("udf_import", rows[0])
-    except Exception as e:
-        report("udf_import", f"{type(e).__name__}: {e}"[-2000:])
+        try:
+            return spark.range(1).rdd.map(load).collect()[0]
+        except Exception as e:
+            return f"{type(e).__name__}: {e}"[-2000:]
+
+    report("udf_import", udf_import("firefox_public_data_report_etl_spark"))
+    report("defaults_udf_import", udf_import("fpdr_defaults_probe"))
 
     _clients(spark).write.parquet(str(root / "clients"))
     _countries(spark).write.parquet(str(root / "countries"))
@@ -112,13 +123,27 @@ def child(tmp_path_factory):
     root = tmp_path_factory.mktemp("session_child")
     tmpdir = root / "tmp"
     tmpdir.mkdir()
+    lib = root / "defaults_lib"
+    lib.mkdir()
+    (lib / "fpdr_defaults_probe.py").write_text("")
+    conf_dir = root / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text(
+        f"spark.driver.defaultJavaOptions  {ADMIN_OPT}\n"
+        f"spark.executorEnv.PYTHONPATH  {lib}\n"
+    )
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)
-    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmpdir))
+    env.update(
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        TMPDIR=str(tmpdir),
+        SPARK_CONF_DIR=str(conf_dir),
+    )
     for k in ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         env.pop(k, None)
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(root), REPO, PROBE_OPT, SF_SMOKE],
+        [sys.executable, "-c", _CHILD, str(root), REPO, PROBE_OPT, SF_SMOKE, ADMIN_OPT],
         cwd=root,
         env=env,
         capture_output=True,
@@ -147,6 +172,13 @@ def test_driver_jvm_compiles_with_c1_only_next_to_caller_options(child):
     assert _check(child, "caller_option") is True
 
 
+def test_defaults_file_launch_settings_are_extended_not_replaced(child):
+    """``spark-defaults.conf``'s ``defaultJavaOptions`` and executor
+    ``PYTHONPATH`` still apply next to the values ``get_spark`` adds."""
+    assert _check(child, "defaults_option") is True
+    assert _check(child, "defaults_udf_import") == "fpdr_defaults_probe"
+
+
 def test_udf_imports_package_from_driver_sys_path(child):
     """A Python worker imports the package when only the driver's
     ``sys.path`` holds it: no ``PYTHONPATH``, a foreign working dir."""
@@ -169,3 +201,16 @@ def test_bm25_probe_index_is_removed_at_exit(child):
     assert _check(child, "bm25_rows") > 1
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert not list(tmpdir.glob("fpdr_bm25_probe_index_*"))
+
+
+def test_tiered_c2_conf_overrides_the_c1_flag(monkeypatch, tmp_path):
+    """A session started with ``extra_conf=TIERED_C2`` gets HotSpot's
+    default tiers back: its level follows the C1 flag in the driver's
+    Java options, and the JVM takes the last of a repeated flag."""
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: dict(b._options))
+    opts = get_spark(extra_conf=TIERED_C2)
+    assert opts["spark.driver.defaultJavaOptions"].split() == [
+        "-XX:TieredStopAtLevel=1",
+        "-XX:TieredStopAtLevel=4",
+    ]

@@ -63,7 +63,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.operators.similarity import (
         cosine_topk_lsh,
         cosine_topk_lsh_multi,
@@ -81,7 +81,7 @@ def main() -> None:
     )
     from firefox_public_data_report_etl_spark.sources import load_table
 
-    spark = get_spark(app_name="ann-recall")
+    spark = get_spark(app_name="ann-recall", extra_conf=TIERED_C2)
 
     # --- regime 1: uniform-random testdata embeddings ----------------
     for sf_dir in dirs:

@@ -35,10 +35,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.sources import load_table
 
-    spark = get_spark(app_name="gen-scale")
+    spark = get_spark(app_name="gen-scale", extra_conf=TIERED_C2)
     os.makedirs(out, exist_ok=True)
 
     ev = load_table(spark, SRC, "events")

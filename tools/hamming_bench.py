@@ -58,7 +58,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.operators.hamming_index import (
         append_to_hamming_index,
         build_hamming_index,
@@ -72,7 +72,7 @@ def main() -> None:
     )
     from firefox_public_data_report_etl_spark.sources import load_table
 
-    spark = get_spark(app_name="hamming_bench")
+    spark = get_spark(app_name="hamming_bench", extra_conf=TIERED_C2)
     geom = {"bits": DHASH_BITS, "max_hamming": NDIMG_MAX_HAMMING}
     if args.bucket_parts:
         geom["bucket_parts"] = args.bucket_parts

@@ -63,7 +63,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.operators.dedup import (
         gram_hash_arrays,
         minhash_lsh_pairs_arr,
@@ -89,7 +89,7 @@ def main() -> None:
     )
     from firefox_public_data_report_etl_spark.sources import load_table
 
-    spark = get_spark(app_name="incremental-bench")
+    spark = get_spark(app_name="incremental-bench", extra_conf=TIERED_C2)
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed(fn):

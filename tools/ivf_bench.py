@@ -48,7 +48,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.operators.ivf_lifecycle import (
         append_to_ivf_index,
     )
@@ -61,7 +61,7 @@ def main() -> None:
     )
     from firefox_public_data_report_etl_spark.sources import load_table
 
-    spark = get_spark(app_name="ivf_bench")
+    spark = get_spark(app_name="ivf_bench", extra_conf=TIERED_C2)
 
     def control() -> float:
         t = time.monotonic()

@@ -57,7 +57,7 @@ def build_corpus() -> list[tuple[int, str]]:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.operators.dedup import (
         all_pairs_jaccard,
         gram_hash_arrays,
@@ -65,7 +65,7 @@ def main() -> None:
         shingle_rows,
     )
 
-    spark = get_spark(app_name="minhash-recall")
+    spark = get_spark(app_name="minhash-recall", extra_conf=TIERED_C2)
     docs = spark.createDataFrame(
         build_corpus(), "doc_id long, text string"
     ).cache()

@@ -23,13 +23,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.operators.similarity import (
         quantized,
     )
     from firefox_public_data_report_etl_spark.sources import load_table
 
-    spark = get_spark(app_name="pq-recall")
+    spark = get_spark(app_name="pq-recall", extra_conf=TIERED_C2)
 
     for regime, emb in (
         ("uniform", quantized(load_table(spark, sf_dir, "embeddings"))),

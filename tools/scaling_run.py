@@ -162,7 +162,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.plans import (
         QUERIES,
         SCALE_CLASS,
@@ -190,7 +190,7 @@ def main() -> None:
         raise SystemExit(f"unknown queries: {unknown}")
     points = [POINTS[p] for p in args.points.split(",") if p]
 
-    spark = get_spark(app_name="scaling-run")
+    spark = get_spark(app_name="scaling-run", extra_conf=TIERED_C2)
 
     # partition columns for the write sink: only genuinely low-
     # cardinality output columns qualify (a partitioned write on a

@@ -28,13 +28,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n = int(os.environ.get("SOLO_N", "3"))
 
-    from firefox_public_data_report_etl_spark import get_spark
+    from firefox_public_data_report_etl_spark.session import TIERED_C2, get_spark
     from firefox_public_data_report_etl_spark.plans import ORACLES, QUERIES
     from firefox_public_data_report_etl_spark.testing import duckdb_connection
 
     spark = get_spark(
         app_name="solo-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={**TIERED_C2, "spark.ui.showConsoleProgress": "false"},
     )
     con = duckdb_connection(sf_dir)
 
